@@ -946,16 +946,18 @@ object Analytics2 {
         |SELECT node, CAST(min(hops) AS BIGINT) AS hops
         |FROM walk GROUP BY node
         |ORDER BY node""".stripMargin) { (s, d) =>
-      // checkpoint the edge derivation ONCE: the seed aggregate and the
-      // BFS's own edge materialization otherwise each re-run the full
-      // lineitem → pair-explode → support pipeline (the e12 lesson)
-      val edges = Analytics.copurchaseEdges(s, d, minSupport = 2)
-        .localCheckpoint()
-      val seed = edges.agg(least(min(col("src")), min(col("dst"))).as("s"))
-        .head.getLong(0)
-      Graph.bfsHops(edges, seed, maxHops = 10)
-        .select(col("node"), col("hops").cast("long").as("hops"))
-        .orderBy("node")
+      Iterate.scope { sc =>
+        // checkpoint the edge derivation ONCE: the seed aggregate and the
+        // BFS's own edge materialization otherwise each re-run the full
+        // lineitem → pair-explode → support pipeline (the e12 lesson)
+        val edges = sc.checkpoint(
+          Analytics.copurchaseEdges(s, d, minSupport = 2))
+        val seed = edges.agg(least(min(col("src")), min(col("dst"))).as("s"))
+          .head.getLong(0)
+        Graph.bfsHops(edges, seed, maxHops = 10)
+          .select(col("node"), col("hops").cast("long").as("hops"))
+          .orderBy("node")
+      }
     },
 
     // ---- hop-bounded weighted shortest paths ----
@@ -991,24 +993,25 @@ object Analytics2 {
         |SELECT node, CAST(dist AS BIGINT) AS dist FROM d6
         |ORDER BY node""".stripMargin
     }) { (s, d) =>
-      val ew = Tables.lineitem(s, d)
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(flatten(transform(col("ps"), (x, i) =>
-          transform(slice(col("ps"), i + 2, size(col("ps"))), y =>
-            struct(x.as("src"), y.as("dst")))))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("supp"))
-        .filter(col("supp") >= 2)
-        .select(col("src"), col("dst"),
-          (lit(11L) - least(col("supp"), lit(10L))).as("w"))
+      Iterate.scope { sc =>
         // one materialization of the weighted-edge derivation: the seed
         // aggregate and ssspRounds' own checkpoint both read it (e12)
-        .localCheckpoint()
-      val seed = ew.agg(least(min(col("src")), min(col("dst")))).head.getLong(0)
-      Graph.ssspRounds(ew, seed, rounds = 6)
-        .select(col("node"), col("dist").cast("long").as("dist"))
-        .orderBy("node")
+        val ew = sc.checkpoint(Tables.lineitem(s, d)
+          .groupBy("l_orderkey")
+          .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+          .select(explode(flatten(transform(col("ps"), (x, i) =>
+            transform(slice(col("ps"), i + 2, size(col("ps"))), y =>
+              struct(x.as("src"), y.as("dst")))))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+          .groupBy("src", "dst").agg(count(lit(1)).as("supp"))
+          .filter(col("supp") >= 2)
+          .select(col("src"), col("dst"),
+            (lit(11L) - least(col("supp"), lit(10L))).as("w")))
+        val seed = ew.agg(least(min(col("src")), min(col("dst")))).head.getLong(0)
+        Graph.ssspRounds(ew, seed, rounds = 6)
+          .select(col("node"), col("dist").cast("long").as("dist"))
+          .orderBy("node")
+      }
     },
 
     // ---- exact-integer EWMA (decayed activity feature) ----

@@ -610,20 +610,21 @@ object Corpus {
     * application stays a scan-local in-row fold (greedy left-to-right:
     * an already-merged symbol never re-merges with the next occurrence,
     * the standard BPE application rule); (3) `localCheckpoint` per round
-    * with the previous round's blocks released (the d7/g1 iterative
-    * discipline — the vocabulary table is referenced twice per round).
+    * with the previous round's blocks released ([[Iterate]], the d7/g1
+    * iterative discipline — the vocabulary table is referenced twice per
+    * round).
     *
     * Works on the DEDUPED (word, count) vocabulary, so per-round cost is
     * vocabulary-sized regardless of corpus size; the vocabulary itself
     * is one exact-dedup agg over the corpus — the 100 TB path.
     */
   def bpeMerges(docs: DataFrame, rounds: Int = 3,
-      textCol: String = "text", batchK: Int = 1): DataFrame = {
+      textCol: String = "text", batchK: Int = 1): DataFrame =
+      Iterate.scope { sc =>
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, vocab) = bpeCore(docs, rounds, textCol, batchK)
-    Dedup.release(vocab)
-    merges.toDF("merge_round", "left_sym", "right_sym", "pair_cnt")
+    bpeCore(sc, docs, rounds, textCol, batchK)._1
+      .toDF("merge_round", "left_sym", "right_sym", "pair_cnt")
   }
 
   /** The ENCODE side of BPE: apply the `rounds` learned merges to the
@@ -635,11 +636,12 @@ object Corpus {
     * map-combinable hash agg + TakeOrdered.
     */
   def bpeEncode(docs: DataFrame, rounds: Int = 3, k: Int = 20,
-      textCol: String = "text", batchK: Int = 1): DataFrame = {
-    val (_, vocab) = bpeCore(docs, rounds, textCol, batchK)
-    // NOTE: vocab's checkpoint blocks stay live until process exit — the
-    // returned plan reads them lazily and a released localCheckpoint
-    // cannot recompute (truncated lineage). Bounded: deduped vocabulary.
+      textCol: String = "text", batchK: Int = 1): DataFrame =
+      Iterate.scope { sc =>
+    val (_, vocab) = bpeCore(sc, docs, rounds, textCol, batchK)
+    // vocab's checkpoint backs the returned plan, so the scope keeps it
+    // (a released localCheckpoint cannot recompute); the caller frees it
+    // with Iterate.release. Bounded: deduped vocabulary.
     vocab.select(explode(col("syms")).as("sym"), col("cnt"))
       .groupBy(col("sym")).agg(sum(col("cnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("sym"))
@@ -666,11 +668,11 @@ object Corpus {
     * catch — that is the k-vs-exactness dial, and `batchK = 1` IS exact
     * greedy, byte-identical to the unbatched trainer).
     */
-  private def bpeCore(docs: DataFrame, rounds: Int, textCol: String,
-      batchK: Int = 1): (Seq[(Int, String, String, Long)], DataFrame) = {
+  private def bpeCore(sc: Iterate.Scope, docs: DataFrame, rounds: Int,
+      textCol: String, batchK: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(rounds >= 1, "rounds must be at least 1")
     require(batchK >= 1, "batchK must be at least 1")
-    var cur = Scale.fanOutSmallScan(docs)
+    val vocab0 = sc.checkpoint(Scale.fanOutSmallScan(docs)
       .select(explode(split(
         regexp_replace(lower(col(textCol)), "^\\s+|\\s+$", ""),
         "\\s+")).as("w"))
@@ -678,10 +680,12 @@ object Corpus {
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(expr(
         "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        .as("syms"), col("cnt"))
-      .localCheckpoint()
+        .as("syms"), col("cnt")))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    while (merges.length < rounds) {
+    // every scan round selects at least one merge, so `rounds` bounds the
+    // scan rounds and the loop stops once the merge table is full
+    val (vocab, _) = sc.rounds("bpe", vocab0, rounds,
+        until = _ => merges.length >= rounds) { (cur, _) =>
       val want = math.min(batchK, rounds - merges.length)
       val pairs = cur.filter(size(col("syms")) > 1)
         .select(col("cnt"), explode(expr(
@@ -707,8 +711,7 @@ object Corpus {
         }
       }
       sel.foreach { case (a, b, c) => merges += ((merges.length + 1, a, b, c)) }
-      val prev = cur
-      cur = cur.select(aggregate(col("syms"),
+      cur.select(aggregate(col("syms"),
           array().cast("array<string>"),
           (acc, x) => sel.foldRight(concat(acc, array(x)): Column) {
             case ((a, b, _), els) =>
@@ -718,10 +721,8 @@ object Corpus {
                 .otherwise(els)
           }).as("syms"),
           col("cnt"))
-        .localCheckpoint()
-      Dedup.release(prev)
     }
-    (merges.toSeq, cur)
+    (merges.toSeq, vocab)
   }
 
   /** Per-document bigram language-model score — [[unigramLogProb]]'s

@@ -1120,60 +1120,42 @@ object Dedup {
     * components); `maxRounds` bounds pathological chains. This is the
     * join-based formulation of Kiveris et al.'s "Connected Components in
     * MapReduce" — no GraphX dependency, plain shuffles that AQE can size.
-    * Each round is localCheckpoint'ed: the plan re-roots at materialized
-    * partitions, so neither the recompute chain nor the logical plan tree
-    * grows with the iteration count.
+    * Each round is localCheckpoint'ed through [[Iterate]] (jobs described
+    * "cc: round r"): the plan re-roots at materialized partitions, so
+    * neither the recompute chain nor the logical plan tree grows with the
+    * iteration count. The result reads the last round's checkpoint; free
+    * it with [[Iterate.release]].
     */
   def clusters(pairs: DataFrame, maxRounds: Int = 20,
-      idA: String = "id_a", idB: String = "id_b"): DataFrame = {
-    val spark = pairs.sparkSession
+      idA: String = "id_a", idB: String = "id_b"): DataFrame =
+      Iterate.scope { sc =>
     // symmetric edge list (both directions) — neighborhoods see all peers.
     // The input pair pipeline (often a full MinHash run) is cached BEFORE
     // the union so the reversed branch reuses it instead of recomputing.
-    val fwd = pairs.select(col(idA).as("src"), col(idB).as("dst")).cache()
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    // localCheckpoint (not cache!) each round: cache only short-circuits
-    // recomputation — the LOGICAL plan still grows ~3× per round and an
-    // O(3^rounds) plan tree OOMs the driver on long chains. Checkpointing
-    // truly re-roots the plan at the materialized partitions.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var converged = false
-    var round = 0
-    // (AQE stays ON for the loop: it was measured OFF this round — the
-    // checkpointed labels side then carries no size estimate, the
-    // static planner falls back to SortMergeJoin, and the round's job
-    // goes 96 sorted tasks at ~0.5 s vs AQE's broadcast form at
-    // ~0.05 s. AQE's per-exchange job split is the cheaper evil.)
-    while (!converged && round < maxRounds) {
-      // label the round's jobs (guide §1.5) — round counts are the CC
-      // family's cost driver and this makes Profile attribution direct
-      spark.sparkContext.setJobDescription(s"cc: round $round")
-      // ONE materialization per round (r15: was three jobs — neighborMin
-      // checkpoint, a convergence-probe join, the next-labels checkpoint;
-      // at probe scale the per-job fixed cost dominates, so the round is
-      // fused into a single checkpointed plan carrying a change flag):
-      // each node adopts min(own label, neighbors' labels), and `__chg`
-      // records whether anything improved. (Pointer-jumping hops — one
-      // against the previous map, one squaring the fresh map in-plan —
-      // were BOTH measured this round on s12's 16-round chainy graph:
-      // rounds fell only to 13/11 while the extra node-sized join legs
-      // raised per-round cost ~50%, netting 3.0 s → 3.7-4.0 s. Per-round
-      // broadcast gates on the node-sized sides were also measured and
-      // REVERTED: three driver-blocking broadcast builds per round cost
-      // more than the small shuffles they replace at this node count.
-      // The plain one-hop round stands; maxRounds guards true chains.)
-      // union + one groupBy instead of [edges⋈labels → agg → left join
-      // labels]: each id's new label is min over {own label} ∪ {neighbor
-      // labels}, and the old label rides along tagged (every id appears
-      // exactly once in `labels`, so min(tagged) recovers it). This
-      // drops the per-round node-sided join entirely — with it the 1–2
-      // driver-blocking broadcast-build jobs AQE planned for it each
-      // round (r16; measured on s12's 16-round graph: 117 → ~50 jobs
-      // with the agg probe below, wall 6.1 → 3.9 s in-session).
-      val next = labels.select(col("id"), col("label").as("l"),
-          lit(true).as("__s"))
+    val fwd = sc.cache(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    val edges = sc.cache(
+      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
+    val labels0 = sc.checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    // AQE stays ON for the loop: measured OFF, the checkpointed labels
+    // side carries no size estimate, the static planner falls back to
+    // SortMergeJoin and a round costs ~0.5 s against ~0.05 s.
+    // convergence probe: one scan-and-count aggregate over the round's
+    // checkpoint (r16); under AQE its exchange runs as a second job
+    def unchanged(next: DataFrame): Boolean =
+      next.agg(count(when(col("__chg"), lit(1)))).head.getLong(0) == 0L
+    val (labels, converged) = sc.rounds("cc", labels0, maxRounds,
+        until = unchanged) { (labels, _) =>
+      // ONE checkpointed plan per round: each id's new label is the min
+      // over {own label} ∪ {neighbor labels}, the old label rides along
+      // tagged (every id appears once in `labels`, so min(tagged)
+      // recovers it) and `__chg` flags an improvement. The union + one
+      // groupBy has no node-sided join, so AQE plans no driver-blocking
+      // broadcast builds per round (s12's 16-round graph: 117 → ~50
+      // jobs). Pointer-jumping hops and per-round broadcast gates were
+      // both measured slower on that graph: fewer rounds, dearer rounds.
+      labels.select(col("id"), col("label").as("l"), lit(true).as("__s"))
         .unionAll(edges
           .join(labels.select(col("id").as("dst"), col("label").as("l")),
             Seq("dst"))
@@ -1183,19 +1165,7 @@ object Dedup {
           min(when(col("__s"), col("l"))).as("__old"))
         .select(col("id"), col("label"),
           (col("label") < col("__old")).as("__chg"))
-        .localCheckpoint()
-      // convergence probe over the just-materialized partitions: ONE
-      // scan-only agg job — the previous filter().limit(1).isEmpty paid
-      // Spark's executeTake ramp (1, 4, 16, … partitions = up to 4 jobs)
-      // on every CONVERGING round, and per-job fixed cost dominates at
-      // probe scale (r16)
-      converged = next.agg(count(when(col("__chg"), lit(1))))
-        .head.getLong(0) == 0L
-      release(labels)
-      labels = next.drop("__chg")
-      round += 1
     }
-    spark.sparkContext.setJobDescription(null)
     // Plain min-propagation needs O(diameter) rounds — O(log n) holds for
     // star-like near-dup graphs but NOT for long chains. Splitting one
     // component into several silently corrupts dedup, so non-convergence
@@ -1204,27 +1174,8 @@ object Dedup {
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds " +
           "(component diameter exceeds the budget); raise maxRounds")
-    // The final labels checkpoint is the single storage copy backing the
-    // result (a plain projection over it). It stays materialized until
-    // [[release]] — re-caching it separately would just pin a second copy.
-    edges.unpersist()
-    fwd.unpersist()
     labels.select(col("id"), col("label").as("cluster_id"))
   }
-
-  /** Free the checkpointed partitions backing a [[clusters]] /
-    * [[nearDupClusters]] result. `Dataset.unpersist()` cannot do this —
-    * checkpointed data lives at the RDD level, below the CacheManager —
-    * so this walks the plan and unpersists the LogicalRDD handles. Call
-    * it when done with the result; using the DataFrame afterwards
-    * recomputes from scratch.
-    */
-  def release(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** End-to-end near-dup clustering: verified MinHash pairs → connected
     * components → every document labeled with its cluster representative

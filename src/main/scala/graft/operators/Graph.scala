@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over relational edge lists — join-based power
@@ -13,12 +13,16 @@ import org.apache.spark.sql.functions._
   *  - every iteration is one equi join (ranks ⋈ edges on src) + one hash
   *    agg on dst — both shuffle on node keys, so Catalyst reuses the
   *    partitioning across iterations;
-  *  - each round is `localCheckpoint`ed and the previous round's blocks
-  *    are released ([[Dedup.release]]) — a cached chain keeps an
-  *    O(3^rounds) logical plan that OOMs the driver (CLAUDE.md lesson);
-  *  - a FIXED iteration count, not a convergence test: determinism
-  *    across engines and no per-round driver action beyond the
-  *    checkpoint itself.
+  *  - the round loops run on [[Iterate]]: each round is
+  *    `localCheckpoint`ed and the previous round released — a cached
+  *    chain keeps an O(3^rounds) logical plan that OOMs the driver
+  *    (CLAUDE.md lesson) — and every checkpoint not backing the result
+  *    is released on exit, normal or thrown;
+  *  - pageRank, personalizedPageRank, hits, ssspRounds and
+  *    labelPropagation run a FIXED round count — determinism across
+  *    engines and no per-round driver action beyond the checkpoint.
+  *    bfsHops stops when the frontier drains and kCore when the edge set
+  *    stops shrinking, each paying a driver probe per round for it.
   */
 object Graph {
 
@@ -31,9 +35,13 @@ object Graph {
     * size, not the local core count (guide §3.1). */
   private val BroadcastEntryBudget: Long = 48L << 20
 
-  /** `bcIf(small)(df)`: broadcast-hint `df` only under a size gate. */
-  private def bcIf(small: Boolean)(df: DataFrame): DataFrame =
-    if (small) broadcast(df) else df
+  /** Broadcast-hint gate for a round's n-sized inputs: hint when `rows`
+    * × `bytesPerRow` fits [[BroadcastEntryBudget]]. The checkpointed
+    * round sides carry no size stats, so the planner alone always picks
+    * SMJ and AQE only downgrades after both exchanges ran; `rows` is
+    * the count of a checkpointed relation bounding those inputs. */
+  private def bcUnder(rows: Long, bytesPerRow: Int): DataFrame => DataFrame =
+    if (rows * bytesPerRow < BroadcastEntryBudget) broadcast(_) else identity
 
   /** Weighted PageRank by `iterations` rounds of power iteration over
     * `(src, dst, weight)` edges (PageRank: Page et al. 1999; weighted
@@ -53,96 +61,69 @@ object Graph {
     * is collected to the driver.
     */
   def pageRank(edges: DataFrame, iterations: Int = 5, damping: Double = 0.85,
-      syncDecimals: Int = 12): DataFrame = {
-    require(iterations >= 1, "iterations must be at least 1")
-    require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    // materialize the (often expensive) edge derivation ONCE — the
-    // iteration lineage must re-root at data, not at the upstream query
-    val e = edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w"))
-      .localCheckpoint()
-    // nodes/outW are ROUND-INVARIANT: checkpoint them once so each
-    // iteration's plan reads materialized partitions instead of
-    // re-running the distinct/agg shuffles every round (r15)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      .localCheckpoint()
-    // n-sized round inputs (ranks, outW, contrib) broadcast when the
-    // node count bounds them under the broadcast budget: the per-round
-    // joins then run map-side over e's materialized partitions instead
-    // of re-shuffling the m-row edge table every round (guide §3.1 —
-    // the checkpointed sides have no stats, so the planner alone always
-    // picks SMJ and AQE only downgrades after both exchanges ran).
-    // Past the bound the shuffle join shape is kept (scale-correct).
-    val bcN = bcIf(nodes.count() * 32 < BroadcastEntryBudget) _
-    val nDf = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
-    var ranks = nodes.join(nDf)
-      .select(col("node"), (lit(1.0) / col("n")).as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = e.join(bcN(ranks.withColumnRenamed("node", "src")),
-          Seq("src"))
-        .join(bcN(outW), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("r") * col("w") / col("ow")).as("contrib"))
-      val dangling = broadcast(
-        ranks.join(bcN(outW.withColumnRenamed("src", "node")), Seq("node"),
-            "left_anti")
-          .agg(coalesce(sum(col("r")), lit(0.0)).as("mass")))
-      val next = nodes.join(bcN(contrib), Seq("node"), "left")
-        .join(dangling).join(nDf)
-        .select(col("node"), round(
-            lit(1.0 - damping) / col("n") + lit(damping) *
-              (coalesce(col("contrib"), lit(0.0)) + col("mass") / col("n")),
-            syncDecimals).as("r"))
-        .localCheckpoint()
-      Dedup.release(ranks)
-      ranks = next
+      syncDecimals: Int = 12): DataFrame =
+    randomWalk("pageRank", edges, iterations, damping, syncDecimals) { nodes =>
+      val nDf = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
+      Teleport(_.join(nDf), lit(1.0) / col("n"), _ / col("n"))
     }
-    // ranks is materialized — the round-invariant checkpoints are no
-    // longer referenced by the returned plan; release them so a long
-    // multi-query session doesn't accumulate their blocks (ADVICE r15)
-    Seq(e, nodes, outW).foreach(Dedup.release)
-    ranks
-  }
 
   /** Personalized PageRank (Jeh & Widom, WWW 2003): random walk with
     * restart to a SEED set — "importance relative to these nodes", the
     * similar-items / recommendation form of PageRank. Identical
-    * join-based power iteration, checkpoint-and-release discipline, and
-    * 12-d.p. per-round cross-engine sync as [[pageRank]]; the only
-    * change is the teleport vector p (uniform over seeds, 0 elsewhere),
-    * which replaces 1/n in BOTH the restart term and the dangling-mass
-    * redistribution, and seeds ranks as r₀ = p (the standard PPR init —
-    * mass starts at, and forever restarts to, the seed set).
+    * join-based power iteration, round loop, and 12-d.p. per-round
+    * cross-engine sync as [[pageRank]]; the only change is the teleport
+    * vector p (uniform over seeds, 0 elsewhere), which replaces 1/n in
+    * BOTH the restart term and the dangling-mass redistribution, and
+    * seeds ranks as r₀ = p (the standard PPR init — mass starts at, and
+    * forever restarts to, the seed set).
     */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[String],
       iterations: Int = 5, damping: Double = 0.85,
       syncDecimals: Int = 12): DataFrame = {
     require(seeds.nonEmpty, "seeds must be non-empty")
-    require(iterations >= 1, "iterations must be at least 1")
-    require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    val e = edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w"))
-      .localCheckpoint()
-    // round-invariant relations checkpointed once (the pageRank r15 note)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      .localCheckpoint()
-    // per-round broadcast gate: see pageRank (same shape, same bound)
-    val bcN = bcIf(nodes.count() * 32 < BroadcastEntryBudget) _
     // teleport weight: one literal division of exact operands —
     // bit-identical to the oracle's 1.0::DOUBLE / |seeds|
-    def p(node: org.apache.spark.sql.Column) =
-      when(node.isin(seeds.map(x => x: Any): _*),
-        lit(1.0 / seeds.size)).otherwise(lit(0.0))
-    var ranks = nodes.select(col("node"), p(col("node")).as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    val p = when(col("node").isin(seeds.map(x => x: Any): _*),
+      lit(1.0 / seeds.size)).otherwise(lit(0.0))
+    randomWalk("personalizedPageRank", edges, iterations, damping,
+      syncDecimals)(_ => Teleport(identity, p, _ * p))
+  }
+
+  /** How a [[randomWalk]] restarts: `attach` joins in what `r0` and
+    * `spread` read, `r0` is the initial rank and `spread(x)` hands the
+    * mass x to a node by the teleport vector. */
+  private case class Teleport(attach: DataFrame => DataFrame, r0: Column,
+      spread: Column => Column)
+
+  /** The power iteration [[pageRank]] and [[personalizedPageRank]] share.
+    * Per round, contrib(v) = Σ_{u→v} r(u)·w(u,v)/out(u) and the dangling
+    * mass parked on nodes without out-edges combine into
+    * r'(v) = spread(1−d) + d·(contrib(v) + spread(mass)), rounded to
+    * `syncDecimals`; `teleport` derives the restart from the node set.
+    */
+  private def randomWalk(op: String, edges: DataFrame, iterations: Int,
+      damping: Double, syncDecimals: Int)(
+      teleport: DataFrame => Teleport): DataFrame = Iterate.scope { sc =>
+    require(iterations >= 1, "iterations must be at least 1")
+    require(damping > 0 && damping < 1, "damping must be in (0, 1)")
+    // materialize the (often expensive) edge derivation ONCE — the
+    // iteration lineage must re-root at data, not at the upstream query
+    val e = sc.checkpoint(edges.select(col("src"), col("dst"),
+      col("weight").cast("double").as("w")))
+    // nodes/outW are ROUND-INVARIANT: checkpoint them once so each
+    // iteration's plan reads materialized partitions instead of
+    // re-running the distinct/agg shuffles every round (r15)
+    val nodes = sc.checkpoint(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    val outW = sc.checkpoint(e.groupBy(col("src")).agg(sum(col("w")).as("ow")))
+    // n-sized round inputs (ranks, outW, contrib) broadcast when the
+    // node count bounds them under the budget: the per-round joins then
+    // run map-side over e's materialized partitions instead of
+    // re-shuffling the m-row edge table every round
+    val bcN = bcUnder(nodes.count(), 32)
+    val t = teleport(nodes)
+    val r0 = sc.checkpoint(t.attach(nodes).select(col("node"), t.r0.as("r")))
+    sc.rounds(op, r0, iterations) { (ranks, _) =>
       val contrib = e.join(bcN(ranks.withColumnRenamed("node", "src")),
           Seq("src"))
         .join(bcN(outW), Seq("src"))
@@ -152,20 +133,12 @@ object Graph {
         ranks.join(bcN(outW.withColumnRenamed("src", "node")), Seq("node"),
             "left_anti")
           .agg(coalesce(sum(col("r")), lit(0.0)).as("mass")))
-      val next = nodes.join(bcN(contrib), Seq("node"), "left")
-        .join(dangling)
+      t.attach(nodes.join(bcN(contrib), Seq("node"), "left").join(dangling))
         .select(col("node"), round(
-            lit(1.0 - damping) * p(col("node")) + lit(damping) *
-              (coalesce(col("contrib"), lit(0.0)) +
-                col("mass") * p(col("node"))),
+            t.spread(lit(1.0 - damping)) + lit(damping) *
+              (coalesce(col("contrib"), lit(0.0)) + t.spread(col("mass"))),
             syncDecimals).as("r"))
-        .localCheckpoint()
-      Dedup.release(ranks)
-      ranks = next
-    }
-    // see pageRank: invariant checkpoints released once ranks is solid
-    Seq(e, nodes, outW).foreach(Dedup.release)
-    ranks
+    }._1
   }
 
   /** HITS hubs and authorities (Kleinberg, JACM 1999) by `iterations`
@@ -194,23 +167,21 @@ object Graph {
     * checkpoint-per-round discipline bounds lineage growth.
     */
   def hits(edges: DataFrame, iterations: Int = 3,
-      syncDecimals: Int = 12): DataFrame = {
+      syncDecimals: Int = 12): DataFrame = Iterate.scope { sc =>
     require(iterations >= 1, "iterations must be at least 1")
-    val e = edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w"))
-      .localCheckpoint()
-    // round-invariant node set checkpointed once (the pageRank r15 note)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    // per-round broadcast gate: see pageRank (same shape, same bound)
-    val bcN = bcIf(nodes.count() * 32 < BroadcastEntryBudget) _
+    val e = sc.checkpoint(edges.select(col("src"), col("dst"),
+      col("weight").cast("double").as("w")))
+    // round-invariant node set checkpointed once (see randomWalk)
+    val nodes = sc.checkpoint(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    val bcN = bcUnder(nodes.count(), 32)
     val nDf = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
-    var hubs = nodes.join(nDf)
-      .select(col("node"), (lit(1.0) / col("n")).as("h"))
-      .localCheckpoint()
+    val h0 = sc.checkpoint(nodes.join(nDf)
+      .select(col("node"), (lit(1.0) / col("n")).as("h")))
+    // the authority half-step checkpoints inside the round, so the
+    // round loop releases each round's authorities with its hubs
     var auths: DataFrame = null
-    for (_ <- 1 to iterations) {
+    val (hubs, _) = sc.rounds("hits", h0, iterations) { (hubs, _) =>
       // authority half-step: pull hub mass along in-edges
       val aRaw = nodes.join(
           bcN(e.join(bcN(hubs.withColumnRenamed("node", "src")), Seq("src"))
@@ -220,12 +191,9 @@ object Graph {
         .select(col("node"), coalesce(col("ar"), lit(0.0)).as("ar"))
       val aTot = broadcast(
         aRaw.agg(round(sum(col("ar")), syncDecimals).as("at")))
-      val nextA = aRaw.join(aTot)
+      auths = sc.checkpoint(aRaw.join(aTot)
         .select(col("node"),
-          round(col("ar") / col("at"), syncDecimals).as("a"))
-        .localCheckpoint()
-      if (auths != null) Dedup.release(auths)
-      auths = nextA
+          round(col("ar") / col("at"), syncDecimals).as("a")))
       // hub half-step: pull the fresh authority mass along out-edges
       val hRaw = nodes.join(
           bcN(e.join(bcN(auths.withColumnRenamed("node", "dst")), Seq("dst"))
@@ -235,21 +203,14 @@ object Graph {
         .select(col("node"), coalesce(col("hr"), lit(0.0)).as("hr"))
       val hTot = broadcast(
         hRaw.agg(round(sum(col("hr")), syncDecimals).as("ht")))
-      val nextH = hRaw.join(hTot)
+      hRaw.join(hTot)
         .select(col("node"),
           round(col("hr") / col("ht"), syncDecimals).as("h"))
-        .localCheckpoint()
-      Dedup.release(hubs)
-      hubs = nextH
     }
-    // materialize the (n-row) result so EVERY per-round checkpoint can
-    // be released here instead of living as long as the returned lazy
-    // join (ADVICE r15 — callers cannot release them)
-    val out = auths.join(bcN(hubs), Seq("node"))
-      .select(col("node"), col("a").as("auth"), col("h").as("hub"))
-      .localCheckpoint()
-    Seq(e, nodes, auths, hubs).foreach(Dedup.release)
-    out
+    // materialized (n rows) so the scope can release every per-round
+    // checkpoint instead of pinning them under a lazy join
+    sc.checkpoint(auths.join(bcN(hubs), Seq("node"))
+      .select(col("node"), col("a").as("auth"), col("h").as("hub")))
   }
 
   /** Newman modularity per community: for a label assignment over the
@@ -298,57 +259,40 @@ object Graph {
     * nodes, and stops when the frontier drains or `maxHops` is reached.
     * Per-round cost is |frontier-adjacent edges|; total work is O(m)
     * across all rounds, rounds are bounded by the graph's diameter.
-    * The d7/g1 iterative discipline: localCheckpoint per round, previous
-    * blocks released; the per-round emptiness check is a bounded
-    * frontier count (the convergence-test collect every iterative
-    * operator in this repo performs).
+    * Each round checkpoints its frontier, and the drain check is
+    * `isEmpty` on that checkpoint: one job a round, where a count
+    * aggregate runs two under AQE (its exchange is a job of its own).
     */
   def bfsHops(edges: DataFrame, source: Long, maxHops: Int = 10)
-      : DataFrame = {
+      : DataFrame = Iterate.scope { sc =>
     require(maxHops >= 1, "maxHops must be at least 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"))
+    val e = sc.checkpoint(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // `visited` accumulates as a LAZY union of the checkpointed
     // frontiers (r15): each round checkpoints only its new frontier —
     // one job — instead of also re-materializing the whole visited set;
     // the anti-join target is then ≤ maxHops cheap materialized scans,
-    // and the plan stays O(rounds), not O(rounds²)
-    var visited = Seq((source, 0L)).toDF("node", "hops").localCheckpoint()
+    // and the plan stays O(rounds), not O(rounds²). The union reads
+    // every frontier, so the rounds retain them until the final
+    // checkpoint below.
+    val start = sc.checkpoint(Seq((source, 0L)).toDF("node", "hops"))
     // frontier/visited are bounded by the node count ≤ |e| (every node
     // appears as a src of the symmetrized edge list) — gate on the edge
     // count, which the checkpointed scan yields without a shuffle
-    val bcN = bcIf(e.count() * 32 < BroadcastEntryBudget) _
-    var frontier = visited
-    var r = 1L
-    var done = false
-    while (r <= maxHops && !done) {
-      val next = e.join(bcN(frontier.select(col("node").as("src"))),
-          Seq("src"))
+    val bcN = bcUnder(e.count(), 32)
+    var visited = start
+    val (last, drained) = sc.rounds("bfsHops", start, maxHops,
+        until = _.isEmpty, retain = true) { (frontier, r) =>
+      if (r > 0) visited = visited.unionByName(frontier)
+      e.join(bcN(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
         .join(bcN(visited), Seq("node"), "left_anti")
-        .withColumn("hops", lit(r))
-        .localCheckpoint()
-      if (next.isEmpty) {
-        Dedup.release(next)
-        done = true
-      } else {
-        visited = visited.unionByName(next)
-        frontier = next
-        r += 1
-      }
+        .withColumn("hops", lit(r + 1L))
     }
-    Dedup.release(e)
-    // materialize the final visited union and release the per-round
-    // frontier checkpoints it was built from (ADVICE r15 — the lazy
-    // union otherwise pins every frontier block for the caller's
-    // lifetime); release() walks the union and unpersists all of them
-    val out = visited.localCheckpoint()
-    Dedup.release(visited)
-    out
+    sc.checkpoint(if (drained) visited else visited.unionByName(last))
   }
 
   /** Hop-bounded weighted shortest paths (synchronous Bellman-Ford):
@@ -365,36 +309,30 @@ object Graph {
     * nodes) drops per-round work to the changed set; the full relax
     * here keeps the probe byte-identical to the unrolled oracle.
     */
-  def ssspRounds(edges: DataFrame, source: Long, rounds: Int): DataFrame = {
+  def ssspRounds(edges: DataFrame, source: Long, rounds: Int): DataFrame =
+      Iterate.scope { sc =>
     require(rounds >= 1, "rounds must be at least 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("w").cast("long").as("w")))
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .localCheckpoint()
+    val e = sc.checkpoint(
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
+          col("w").cast("long").as("w")))
+        .groupBy("src", "dst").agg(min("w").as("w")))
     require(e.filter(col("w") < 0).isEmpty, "negative edge weights")
-    var dist = Seq((source, 0L)).toDF("node", "dist").localCheckpoint()
+    val d0 = sc.checkpoint(Seq((source, 0L)).toDF("node", "dist"))
     // dist is bounded by the node count ≤ |e| (symmetrized edges): gate
     // on the shuffle-free edge count so each relaxation round is a
     // map-side broadcast join over e's materialized partitions
-    val bcN = bcIf(e.count() * 32 < BroadcastEntryBudget) _
-    var r = 0
-    while (r < rounds) {
+    val bcN = bcUnder(e.count(), 32)
+    sc.rounds("ssspRounds", d0, rounds) { (dist, _) =>
       val relaxed = e
         .join(bcN(dist.select(col("node").as("src"), col("dist"))),
           Seq("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      val prev = dist
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      Dedup.release(prev)
-      r += 1
-    }
-    Dedup.release(e)
-    dist
+    }._1
   }
 
   /** Materialize an edge list as a BUCKETED parquet table (external
@@ -435,47 +373,43 @@ object Graph {
     * Returns `(node, core_degree)` — each surviving node with its degree
     * INSIDE the core (≥ k by construction; empty result = empty core).
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 16): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 16): DataFrame =
+      Iterate.scope { sc =>
     require(k >= 1, "k must be at least 1")
     require(maxRounds >= 1, "maxRounds must be at least 1")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node"))
         .union(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("core_degree"))
-    var cur = edges.select(
+    val e0 = sc.checkpoint(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    var nEdges = cur.count()
-    var stable = false
-    var rounds = 0
-    while (!stable) {
-      if (rounds >= maxRounds)
-        sys.error(s"kCore: no fixpoint after $maxRounds rounds " +
-          s"($nEdges edges live) — raise maxRounds for this graph")
+      .distinct())
+    var nEdges = e0.count()
+    def unchanged(next: DataFrame): Boolean = {
+      val n = next.count()
+      val same = n == nEdges
+      nEdges = n
+      same
+    }
+    val (core, stable) = sc.rounds("kCore", e0, maxRounds,
+        until = unchanged) { (cur, _) =>
       // keep is bounded by 2·|edges| nodes: under the budget both semi
       // joins broadcast it, so the surviving edge set is filtered
       // map-side instead of being re-shuffled twice per peeling round
-      val bcK = bcIf(nEdges * 64 < BroadcastEntryBudget) _
+      val bcK = bcUnder(nEdges, 64)
       val keep = degrees(cur).filter(col("core_degree") >= k).select("node")
-      val next = cur
+      cur
         .join(bcK(keep.withColumnRenamed("node", "a")), Seq("a"), "left_semi")
         .join(bcK(keep.withColumnRenamed("node", "b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val n = next.count()
-      Dedup.release(cur)
-      cur = next
-      stable = n == nEdges
-      nEdges = n
-      rounds += 1
     }
-    // materialize the (node-sized) result so the surviving edge set's
-    // checkpoint can be released here (ADVICE r15)
-    val out = degrees(cur).localCheckpoint()
-    Dedup.release(cur)
-    out
+    if (!stable)
+      sys.error(s"kCore: no fixpoint after $maxRounds rounds " +
+        s"($nEdges edges live) — raise maxRounds for this graph")
+    // materialized (node-sized) so the scope can release the surviving
+    // edge set's checkpoint
+    sc.checkpoint(degrees(core))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007, the
@@ -487,23 +421,23 @@ object Graph {
     * structures, so fixed-round synchronous is also the defensible
     * semantics. Per round: one equi join (neighbor labels) + two
     * map-combinable aggs (count, then the min-(−cnt,label) argmax —
-    * the a28 mode shape); localCheckpoint + release per round (d7).
+    * the a28 mode shape), checkpointed by [[Iterate]] (d7).
     */
   def labelPropagation(edges: DataFrame, labels: DataFrame,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Iterate.scope { sc =>
     require(rounds >= 1, "rounds must be at least 1")
-    val ed = edges.select(col("src").as("node"), col("dst").as("nbr"))
-      .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
-      .filter(col("node").isNotNull && col("nbr").isNotNull &&
-        col("node") =!= col("nbr"))
-      .distinct()
-      .localCheckpoint()
-    var lab = labels.select(col("node"),
-      col("label").cast("long").as("label")).localCheckpoint()
+    val ed = sc.checkpoint(
+      edges.select(col("src").as("node"), col("dst").as("nbr"))
+        .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
+        .filter(col("node").isNotNull && col("nbr").isNotNull &&
+          col("node") =!= col("nbr"))
+        .distinct())
+    val lab0 = sc.checkpoint(labels.select(col("node"),
+      col("label").cast("long").as("label")))
     // lab is node-bounded ≤ |ed|: broadcast it per round under the
     // budget so ed's materialized partitions are never re-shuffled
-    val bcN = bcIf(ed.count() * 32 < BroadcastEntryBudget) _
-    for (_ <- 1 to rounds) {
+    val bcN = bcUnder(ed.count(), 32)
+    sc.rounds("labelPropagation", lab0, rounds) { (lab, _) =>
       val vote = ed
         .join(bcN(lab.select(col("node").as("nbr"), col("label").as("nl"))),
           Seq("nbr"))
@@ -511,14 +445,9 @@ object Graph {
         .groupBy("node")
         .agg(min(struct((-col("c")).as("nc"), col("nl").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("vote"))
-      val next = lab.join(bcN(vote), Seq("node"), "left")
+      lab.join(bcN(vote), Seq("node"), "left")
         .select(col("node"), coalesce(col("vote"), col("label")).as("label"))
-        .localCheckpoint()
-      Dedup.release(lab)
-      lab = next
-    }
-    Dedup.release(ed) // lab is materialized; the edge table can go
-    lab
+    }._1
   }
 
   /** Common-neighbor link prediction over an undirected edge list
@@ -538,23 +467,20 @@ object Graph {
     * CAPPED graph, so the score is internally consistent.
     */
   def linkPrediction(edges: DataFrame, maxDegree: Int = 64,
-      topK: Int = 100): DataFrame = {
+      topK: Int = 100): DataFrame = Iterate.scope { sc =>
     require(maxDegree >= 2, "maxDegree must be at least 2")
-    val und = edges.select(
+    val und = sc.checkpoint(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg0 = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
     val keep = deg0.filter(col("d") <= maxDegree).select("node")
-    val e = und
+    val e = sc.checkpoint(und
       .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-      .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-      .localCheckpoint()
-    Dedup.release(und)
+      .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"))
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -606,7 +532,7 @@ object Graph {
     * Returns a single row `(n_nodes, n_edges, n_triangles)`. Self-loops
     * and duplicate/reverse edges are normalized away first.
     */
-  def triangleCount(edges: DataFrame): DataFrame = {
+  def triangleCount(edges: DataFrame): DataFrame = Iterate.scope { sc =>
     // ids are narrowed to long for the fused merge below — a non-numeric
     // id type would cast to null and be silently swallowed by the
     // isNotNull filter (0 edges, 0 triangles). Fail loudly instead
@@ -622,30 +548,27 @@ object Graph {
     }
     // node ids normalized to long up front: the adjacency arrays below go
     // through the fused sorted-merge intersection, which reads long slots
-    val und = edges.select(
+    // the wedge join re-reads this THREE times — cut the (possibly
+    // expensive) edge-derivation lineage once, like pageRank's edges
+    val und = sc.checkpoint(edges.select(
         least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      // the wedge join re-reads this THREE times — cut the (possibly
-      // expensive) edge-derivation lineage once, like pageRank's edges
-      .localCheckpoint()
+      .distinct())
     // deg is re-read lazily by the final n_nodes aggregate — checkpoint
-    // it (one row per node) so releasing `und` below can't strand it
-    val deg = und.select(col("a").as("node"))
+    // it (one row per node) so releasing `und` at scope exit can't
+    // strand it
+    val deg = sc.checkpoint(und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+      .groupBy("node").agg(count(lit(1)).as("d")))
     val lower = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = und
+    val oriented = sc.checkpoint(und
       .join(deg.select(col("node").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("d").as("db")), Seq("b"))
       .select(
         when(lower, col("a")).otherwise(col("b")).as("u"),
-        when(lower, col("b")).otherwise(col("a")).as("v"))
-      .localCheckpoint()
-    Dedup.release(und)
+        when(lower, col("b")).otherwise(col("a")).as("v")))
     // m is needed for the output anyway; it also drives the adjacency
     // join strategy below (count over a checkpointed RDD — no recompute)
     val m = oriented.count()

@@ -248,18 +248,18 @@ object Relational3 {
         |  max(CASE WHEN rn = CAST(floor(0.9 * (n - 1)) AS BIGINT) + 1
         |      THEN v END) AS p90
         |FROM s ORDER BY p50""".stripMargin) { (s, d) =>
-      // one-column checkpoint: the two selections make ~6 refinement
-      // passes over their input — uncheckpointed each re-reads the
-      // parquet scan (the e12 multi-pass-consumer lesson)
-      val li = Tables.lineitem(s, d).select("l_extendedprice")
-        .localCheckpoint()
-      val p50 = Scale.exactOrderStatistic(li, "l_extendedprice", 0.5,
-        tailLimit = 1024)
-      val p90 = Scale.exactOrderStatistic(li, "l_extendedprice", 0.9,
-        tailLimit = 1024)
-      graft.operators.Dedup.release(li)
-      s.range(1).select(lit(p50).as("p50"), lit(p90).as("p90"))
-        .orderBy("p50")
+      Iterate.scope { sc =>
+        // one-column checkpoint: the two selections make ~6 refinement
+        // passes over their input — uncheckpointed each re-reads the
+        // parquet scan (the e12 multi-pass-consumer lesson)
+        val li = sc.checkpoint(Tables.lineitem(s, d).select("l_extendedprice"))
+        val p50 = Scale.exactOrderStatistic(li, "l_extendedprice", 0.5,
+          tailLimit = 1024)
+        val p90 = Scale.exactOrderStatistic(li, "l_extendedprice", 0.9,
+          tailLimit = 1024)
+        s.range(1).select(lit(p50).as("p50"), lit(p90).as("p90"))
+          .orderBy("p50")
+      }
     },
 
     // ---- weighted exact quantile (token-weighted doc length) ------------
@@ -280,19 +280,19 @@ object Relational3 {
         |  (SELECT min(v) FROM s WHERE cw >= greatest(0.5 * W, 1)) AS wp50,
         |  (SELECT min(v) FROM s WHERE cw >= greatest(0.9 * W, 1)) AS wp90
         |ORDER BY wp50""".stripMargin) { (s, d) =>
-      // checkpoint the (n_chars, w) projection: every refinement pass of
-      // BOTH selections otherwise re-runs the tokenCount text kernel
-      // over the corpus (the e12 multi-pass-consumer lesson)
-      val docs = Tables.documents(s, d).select(col("n_chars"),
-        graft.functions.TextFunctions.tokenCount(col("text")).as("w"))
-        .localCheckpoint()
-      val wp50 = Scale.weightedOrderStatistic(docs, "n_chars", "w", 0.5,
-        tailLimit = 64)
-      val wp90 = Scale.weightedOrderStatistic(docs, "n_chars", "w", 0.9,
-        tailLimit = 64)
-      graft.operators.Dedup.release(docs)
-      s.range(1).select(lit(wp50).as("wp50"), lit(wp90).as("wp90"))
-        .orderBy("wp50")
+      Iterate.scope { sc =>
+        // checkpoint the (n_chars, w) projection: every refinement pass of
+        // BOTH selections otherwise re-runs the tokenCount text kernel
+        // over the corpus (the e12 multi-pass-consumer lesson)
+        val docs = sc.checkpoint(Tables.documents(s, d).select(col("n_chars"),
+          graft.functions.TextFunctions.tokenCount(col("text")).as("w")))
+        val wp50 = Scale.weightedOrderStatistic(docs, "n_chars", "w", 0.5,
+          tailLimit = 64)
+        val wp90 = Scale.weightedOrderStatistic(docs, "n_chars", "w", 0.9,
+          tailLimit = 64)
+        s.range(1).select(lit(wp50).as("wp50"), lit(wp90).as("wp90"))
+          .orderBy("wp50")
+      }
     },
 
     // ---- robust outlier detection: median absolute deviation ------------

@@ -376,18 +376,18 @@ object StreamingQueries {
       val onTimeDir = cachedDrop(s"st3on:$d", dir =>
         revisionFeed(Tables.events(s, d)).repartition(4).write
           .mode("overwrite").parquet(dir))
-      val lateDir = cachedDrop(s"st3late:$d", dir => {
-        val feed = revisionFeed(Tables.events(s, d)).localCheckpoint()
-        feed
-          .withColumn("issued_at",
-            col("issued_at") + expr("INTERVAL 1 MINUTE"))
-          .join(feed.select(col("latitude"), col("longitude"),
-              col("ts_valid"), col("issued_at")),
-            Seq("latitude", "longitude", "ts_valid", "issued_at"),
-            "left_anti")
-          .repartition(4).write.mode("overwrite").parquet(dir)
-        graft.operators.Dedup.release(feed)
-      })
+      val lateDir = cachedDrop(s"st3late:$d", dir =>
+        graft.operators.Iterate.scope { sc =>
+          val feed = sc.checkpoint(revisionFeed(Tables.events(s, d)))
+          feed
+            .withColumn("issued_at",
+              col("issued_at") + expr("INTERVAL 1 MINUTE"))
+            .join(feed.select(col("latitude"), col("longitude"),
+                col("ts_valid"), col("issued_at")),
+              Seq("latitude", "longitude", "ts_valid", "issued_at"),
+              "left_anti")
+            .repartition(4).write.mode("overwrite").parquet(dir)
+        })
       // hardlink the cached part files in (same tmpfs/scratch volume;
       // part-file UUIDs are write-unique so the two feeds never collide)
       def linkInto(src: String, dst: String): Unit =

@@ -49,6 +49,42 @@ class GraphSpec extends AnyFunSuite {
     assert(out("b") === out.values.min)
   }
 
+  test("personalizedPageRank matches the reference recurrence, conserves mass, gives non-seeds no restart mass") {
+    // a → hub, b → hub, hub → a, sink has only inbound (dangling node)
+    val es = Seq(("a", "hub", 1.0), ("b", "hub", 3.0), ("hub", "a", 1.0),
+      ("a", "sink", 1.0))
+    val out = Graph.personalizedPageRank(es.toDF("src", "dst", "weight"),
+        Seq("a"), iterations = 8).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // the recurrence by hand: teleport p = 1 on the seed, 0 elsewhere,
+    // for both the restart term and the dangling mass; r₀ = p
+    val d = 0.85
+    val nodes = Seq("a", "b", "hub", "sink")
+    val outW = es.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._3).sum }
+    def p(v: String) = if (v == "a") 1.0 else 0.0
+    var ref = nodes.map(v => v -> p(v)).toMap
+    for (_ <- 1 to 8) {
+      val contrib = es.groupBy(_._2).map { case (dst, xs) =>
+        dst -> xs.map { case (s, _, w) => ref(s) * w / outW(s) }.sum
+      }
+      val mass = ref("sink")
+      ref = nodes.map { v =>
+        v -> BigDecimal((1.0 - d) * p(v) + d *
+            (contrib.getOrElse(v, 0.0) + mass * p(v)))
+          .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }.toMap
+    }
+    assert(out.keySet === ref.keySet)
+    out.foreach { case (node, r) =>
+      assert(math.abs(r - ref(node)) < 1e-9, s"$node: $r vs ${ref(node)}")
+    }
+    assert(math.abs(out.values.sum - 1.0) < 1e-6)
+    // b is no seed and nothing links to it: restart and dangling mass
+    // both return to the seed only, so b holds exactly nothing
+    assert(out("b") === 0.0)
+    assert(out("hub") > 0.0 && out("sink") > 0.0)
+  }
+
   test("pageRank is deterministic across input repartitioning") {
     val edges = (1L to 200L).map(i =>
         (s"n${i % 23}", s"n${(i * 7) % 23}", (i % 5 + 1).toDouble))
