@@ -59,10 +59,10 @@ object DailyRollupPushdown extends Rule[LogicalPlan] {
   // A7: `mode() WITHIN GROUP (ORDER BY weather_code)` — the ASC
   // within-group form resolves to Mode(child, _, _, Some(true)) and
   // returns the SMALLEST value among the most frequent, which is exactly
-  // the deterministic dominant-code rule the native rollup implements
-  // (WeatherOps.dailyRollup's count-then-rank). Plain `mode(col)`
-  // (reverseOpt = None) breaks ties nondeterministically and must NOT
-  // ride the rewrite: pushed ≡ native only holds for the ASC form.
+  // the deterministic dominant-code rule of the native rollup (which
+  // WeatherOps.dailyRollup computes with this same expression). Plain
+  // `mode(col)` (reverseOpt = None) breaks ties nondeterministically and
+  // must NOT ride the rewrite: pushed ≡ native only holds for the ASC form.
   private val modeVars = Map("weather_code" -> "weather_code")
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {

@@ -3,6 +3,7 @@ package graft.weather
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import WeatherSchemas._
@@ -64,7 +65,7 @@ class WeatherEngine(
     blocks
       .withColumn("__dist",
         Geo.haversineKm(lit(lat), lit(lon), col("latitude"), col("longitude")))
-      .orderBy(col("__dist").asc)
+      .orderBy(col("__dist").asc, col("latitude").asc, col("longitude").asc)
       .limit(1)
       .drop("__dist")
 
@@ -126,27 +127,27 @@ class WeatherEngine(
     }
 
   /** P2/J2: dual projection — hourly series enriched with that day's
-    * rollup values, one join on (location, date). The rollup needs its
-    * full input variable set regardless of the caller's projection, so
-    * the hourly request is widened for the rollup and the caller's
+    * rollup values (A1 max/min temperature, A3 precipitation sum), taken
+    * as aggregates over a (location, date) window on the hourly rows
+    * themselves: one scan, no join. They equal `dailyRollup` of the same
+    * series. The rollup inputs are read regardless of the caller's
+    * projection, so the hourly request is widened and the caller's
     * columns are restored afterwards.
     */
   def hourlyWithDaily(req: ForecastRequest): Either[String, DataFrame] = {
     val fullReq = req.copy(granularity = 60, variables = None)
     forecast(fullReq).map { hourlyAll =>
-      val daily = WeatherOps.dailyRollup(hourlyAll)
       val requested = req.variables
         .map(_.filter(WeatherSchemas.hourlyByName.contains))
         .getOrElse(WeatherSchemas.defaultHourlyNames)
-      val base = Seq("latitude", "longitude", "ts_local", "ts_utc")
+      val day = Window.partitionBy("latitude", "longitude", "date")
+      val daily = Seq(
+        max("temperature_2m").over(day).as("temperature_2m_max"),
+        min("temperature_2m").over(day).as("temperature_2m_min"),
+        round(sum("precipitation").over(day), 2).as("precipitation_sum"))
       hourlyAll.withColumn("date", to_date(col("ts_local")))
-        .join(daily.select(col("latitude"), col("longitude"), col("date"),
-          col("temperature_2m_max"), col("temperature_2m_min"),
-          col("precipitation_sum")),
-          Seq("latitude", "longitude", "date"), "left")
-        .select((base ++ Seq("date") ++ requested ++
-          Seq("temperature_2m_max", "temperature_2m_min", "precipitation_sum"))
-          .map(col): _*)
+        .select((Seq("latitude", "longitude", "ts_local", "ts_utc", "date") ++
+          requested).map(col) ++ daily: _*)
     }
   }
 }

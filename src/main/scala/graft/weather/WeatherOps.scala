@@ -97,17 +97,20 @@ object WeatherOps {
     *  - precipitation_hours: slot-hours with precipitation > 0 (A4)
     *  - sunshine_duration: seconds of slots with shortwave_radiation >
     *    120 W/m² (WMO-style threshold) (A6)
-    *  - weather_code: mode, ties to the smallest code (A7) — computed via
-    *    a count-then-rank sub-aggregation (`mode()` breaks ties
-    *    nondeterministically)
+    *  - weather_code: the most frequent non-null code, ties to the
+    *    smallest, null on a day with no codes (A7) — the ordered
+    *    `mode() WITHIN GROUP (ORDER BY weather_code)`; plain `mode()`
+    *    breaks ties nondeterministically
     * `slotSeconds` is the series cadence (3600 for hourly — the default —
     * 900 for 15-minute data); precipitation_hours and sunshine_duration
     * scale by it, so callers rolling up 15-minute data must pass 900.
     */
   def dailyRollup(wide: DataFrame, slotSeconds: Int = 3600): DataFrame = {
+    // A projected `date`, not a to_date grouping expression: the latter
+    // lets DailyRollupPushdown take over an `openmeteo` hourly scan (wx11).
     val keyed = wide.withColumn("date", to_date(col("ts_local")))
     val slotHours = lit(slotSeconds / 3600.0)
-    val agg = keyed.groupBy("latitude", "longitude", "date").agg(
+    keyed.groupBy("latitude", "longitude", "date").agg(
       max("temperature_2m").as("temperature_2m_max"),
       min("temperature_2m").as("temperature_2m_min"),
       max("apparent_temperature").as("apparent_temperature_max"),
@@ -119,16 +122,8 @@ object WeatherOps {
         .cast("double").as("precipitation_hours"),
       round(sum(when(col("shortwave_radiation") > 120, lit(slotSeconds.toDouble))
         .otherwise(0.0)), 1).as("sunshine_duration"),
-      max("uv_index").as("uv_index_max"))
-    // A7: dominant weather code of the day, smallest code on ties.
-    val codeCounts = keyed.filter(col("weather_code").isNotNull)
-      .groupBy("latitude", "longitude", "date", "weather_code").count()
-    val w = Window.partitionBy("latitude", "longitude", "date")
-      .orderBy(col("count").desc, col("weather_code").asc)
-    val dominant = codeCounts.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("latitude"), col("longitude"), col("date"), col("weather_code"))
-    agg.join(dominant, Seq("latitude", "longitude", "date"), "left")
+      max("uv_index").as("uv_index_max"),
+      expr("mode() within group (order by weather_code)").as("weather_code"))
   }
 
   /** Gap filling for ML feature prep (`README.md:18`): linearly

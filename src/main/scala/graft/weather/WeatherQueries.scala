@@ -343,9 +343,9 @@ object WeatherQueries {
 
     // §4 A7 mode-pushdown leg: the dominant daily weather_code asked as
     // `mode() WITHIN GROUP (ORDER BY weather_code)` (ASC ⇒ smallest on
-    // ties — the native count-then-rank rule) over the HOURLY connector
-    // scan; DailyRollupPushdown rewrites it onto the source's daily
-    // weather_code block, so the hourly rows are never fetched. The
+    // ties — the native dailyRollup's A7 expression) over the HOURLY
+    // connector scan; DailyRollupPushdown rewrites it onto the source's
+    // daily weather_code block, so the hourly rows are never fetched. The
     // oracle recomputes the dominant code natively from the hourly
     // arrays — this row IS the pushed ≡ native equivalence for A7,
     // driver-checked (DailyRollupPushdownSpec carries the plan gate).
