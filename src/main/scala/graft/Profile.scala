@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): runs ONE query with
   * the exact Bench session config and prints a per-Spark-job breakdown
@@ -18,16 +17,7 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
 
     final case class JobRec(id: Int, start: Long, var end: Long = -1L,
         var stages: Int = 0, var tasks: Int = 0, desc: String)

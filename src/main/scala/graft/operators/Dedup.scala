@@ -122,24 +122,44 @@ object Dedup {
     aggregate(zip_with(sigA, sigB, (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / size(sigA)
 
+  /** (id, `sig`) for every document with at least one word. A wordless
+    * (empty or punctuation-only) document has no shingle evidence: its
+    * seeded MinHash is all `Long.MaxValue` sentinels and its SimHash 0,
+    * so it would pair with every other wordless document at estimate
+    * 1.0 / hamming 0. Dropping them up front is also what the oracle
+    * twins' `len(w) > 0` filter mirrors.
+    */
+  private def sketched(docs: DataFrame, idCol: String, textCol: String,
+      sketch: Column): DataFrame =
+    Scale.fanOutSmallScan(docs)
+      .filter(size(TextFunctions.words(col(textCol))) > 0)
+      .select(col(idCol).as("id"), sketch.as("sig"))
+
   /** MinHash+LSH near-duplicate candidate pairs with estimated Jaccard ≥
     * `threshold`. `bands` must divide `numHashes`. Returns
     * (id_a, id_b, est_jaccard), id_a < id_b, deduplicated across bands.
+    * `family` picks the hash family; the banded pipeline is the same for
+    * both (with [[HashFamily.Portable]] every stage is re-derivable by a
+    * SQL oracle: the estimate is an exact multiple of 1/numHashes, so the
+    * 6-d.p. round is the identity and the cut never sits on a boundary).
     */
   def minhashNearDups(docs: DataFrame, threshold: Double = 0.5,
       numHashes: Int = 64, bands: Int = 16,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text",
+      family: HashFamily = HashFamily.Seeded): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val sigs = signatures(docs, numHashes, idCol = idCol, textCol = textCol)
-    // Generate sits between the signature projection and the band-hash
-    // projection: sig evaluates once per doc, band hashing touches only
+    val sigs = sketched(docs, idCol, textCol,
+      family.minhash(TextFunctions.words(col(textCol)), numHashes, 3))
+    // Generate sits between the signature projection and the band-key
+    // projection: sig evaluates once per doc, band keying touches only
     // the r-long slice.
     val banded = sigs
       .select(col("id"), col("sig"),
         explode(sequence(lit(0), lit(bands - 1))).as("b"))
-      .select(col("id"), col("sig"), col("b"),
-        xxhash64(col("b"), slice(col("sig"), col("b") * r + 1, lit(r))).as("h"))
+      .select(col("id"), col("b"),
+        family.bandKey(col("b"), slice(col("sig"), col("b") * r + 1, lit(r)))
+          .as("h"))
     // Candidate dedup carries ONLY the id pair: a doc pair can collide in
     // up to `bands` buckets, and shuffling the two 64-long signatures
     // through the distinct (~1 kB/pair) dominates the dedup exchange at
@@ -164,13 +184,17 @@ object Dedup {
     * Candidate generation by pigeonhole blocking: the 64-bit signature is
     * split into `maxHamming + 1` slices; any pair within the distance
     * shares at least one identical slice → equi join on (slice, value).
+    * `family` picks the hash family (the portable one's two 32-bit halves
+    * pack into the same 64-bit signature, so blocking and the
+    * `bit_count(xor)` distance serve both).
     */
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text",
+      family: HashFamily = HashFamily.Seeded): DataFrame = {
     val blocks = maxHamming + 1
     val width = 64 / blocks
-    val sigs = Scale.fanOutSmallScan(docs).select(col(idCol).as("id"),
-      Sketches.simhash64Text(col(textCol)).as("sig"))
+    val sigs = sketched(docs, idCol, textCol, family.simhash(col(textCol)))
+      .select(col("id"), family.simhash64(col("sig")).as("sig"))
     val blocked = sigs
       .select(col("id"), col("sig"),
         explode(sequence(lit(0), lit(blocks - 1))).as("i"))
@@ -203,139 +227,22 @@ object Dedup {
     jaccard(array_distinct(TextFunctions.wordShingles(textA, n)),
       array_distinct(TextFunctions.wordShingles(textB, n)))
 
-  /** Verified near-dup pairs: MinHash/LSH candidates re-checked with exact
-    * n-gram Jaccard (the standard two-phase dedup: cheap candidate gen,
-    * exact verify on the tiny candidate set). Word arrays are computed
-    * once per document and joined to the candidate pairs; the Jaccard
-    * itself is the imperative [[graft.functions.NgramJaccardExpr]].
+  /** Verified near-dup pairs: MinHash/LSH candidates at the relaxed
+    * threshold `0.6 · threshold` re-checked with exact n-gram Jaccard
+    * (the standard two-phase dedup: cheap candidate gen, exact verify on
+    * the tiny candidate set). Word arrays are computed once per document
+    * and joined to the candidate pairs; the Jaccard itself is the
+    * imperative [[graft.functions.NgramJaccardExpr]]. The cut is on the
+    * UNROUNDED quotient (a 6-d.p. round would admit pairs up to 5e-7
+    * below the threshold); only the emitted column rounds. With
+    * [[HashFamily.Portable]] both phases are SQL-reproducible, so the
+    * oracle equality is also the recall proof for the banding.
     */
   def verifiedNearDups(docs: DataFrame, threshold: Double = 0.5, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val cands = minhashNearDups(docs, threshold * 0.6, idCol = idCol, textCol = textCol)
-      .select("id_a", "id_b")
-    val words = Scale.fanOutSmallScan(docs).select(col(idCol).as("gid"),
-      TextFunctions.words(col(textCol)).as("w"))
-    cands
-      .join(words.select(col("gid").as("id_a"), col("w").as("w_a")), "id_a")
-      .join(words.select(col("gid").as("id_b"), col("w").as("w_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(Sketches.ngramJaccard(col("w_a"), col("w_b"), n), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** [[minhashNearDups]] with the ENGINE-PORTABLE md5 affine hash
-    * family ([[graft.functions.MinHashPortableExpr]]) — identical
-    * banded-LSH shape (explode bands → equi join on (band, band-key) →
-    * id-pair distinct → signature re-attach → agreement estimate), but
-    * every stage is re-derivable by a SQL oracle from the same table:
-    * shingles are relational, the hash family's parameters come from
-    * md5 of the hash index, signatures are per-(doc, k) MIN aggregates,
-    * the band key is the comma-joined signature slice, and the
-    * estimate is an EXACT multiple of 1/numHashes (agree / 64 — a
-    * power-of-two divide, bit-identical IEEE everywhere, so the 6-d.p.
-    * round is the identity and the ≥ threshold cut can never sit on a
-    * boundary). Documents with NO words are excluded up front (no
-    * shingle evidence — the seeded path's MaxValue sentinels express
-    * the same; the SQL twin's `len(w) > 0` filter mirrors it). The
-    * xxhash-SEEDED family ([[minhashNearDups]]) keeps its golden
-    * recall gates in spec — same operator, hash family dialed from
-    * fastest-available to engine-portable.
-    */
-  def minhashNearDupsPortable(docs: DataFrame, threshold: Double = 0.5,
-      numHashes: Int = 64, bands: Int = 16,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = Scale.fanOutSmallScan(docs)
-      .filter(size(TextFunctions.words(col(textCol))) > 0)
-      .select(col(idCol).as("id"),
-        Sketches.minhashPortable(TextFunctions.words(col(textCol)),
-          numHashes, 3).as("sig"))
-    val banded = sigs
-      .select(col("id"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("b"))
-      .select(col("id"), col("b"),
-        concat_ws(",",
-          transform(slice(col("sig"), col("b") * r + 1, lit(r)),
-            x => x.cast("string"))).as("h"))
-    val a = banded.select(col("b"), col("h"), col("id").as("id_a"))
-    val b = banded.select(col("b"), col("h"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("b", "h"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(estJaccard(col("sig_a"), col("sig_b")), 6).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
-
-  /** [[simhashNearDups]] with the ENGINE-PORTABLE md5 bit votes
-    * ([[graft.functions.SimHashPortableExpr]]): the 64-bit signature
-    * lives as two 32-bit halves (s1, s2), hamming distance is
-    * bit_count(s1⊕s1') + bit_count(s2⊕s2'), and the pigeonhole
-    * blocking splits the 64 bits into `maxHamming + 1` slices drawn
-    * from the halves — all integer ops a DuckDB twin evaluates
-    * exactly. `maxHamming + 1` must be even and divide 64 (the d4
-    * configuration, 7 → 8 blocks of 8 bits). Documents with NO words
-    * are excluded (an all-zero vote vector would otherwise pair every
-    * empty doc with every other at hamming 0). The xxhash-seeded
-    * [[simhashNearDups]] keeps its golden gates in spec.
-    */
-  def simhashNearDupsPortable(docs: DataFrame, maxHamming: Int = 7,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val blocks = maxHamming + 1
-    require(blocks % 2 == 0 && 32 % (blocks / 2) == 0,
-      s"maxHamming + 1 = $blocks must be even and split 32-bit halves evenly")
-    val half = blocks / 2
-    val width = 32 / half
-    val mask = (1L << width) - 1
-    val sigs = Scale.fanOutSmallScan(docs)
-      .filter(size(TextFunctions.words(col(textCol))) > 0)
-      .select(col(idCol).as("id"),
-        Sketches.simhashPortable(TextFunctions.words(col(textCol))).as("sp"))
-      .select(col("id"), element_at(col("sp"), 1).as("s1"),
-        element_at(col("sp"), 2).as("s2"))
-    val blocked = sigs
-      .select(col("id"), col("s1"), col("s2"),
-        explode(sequence(lit(0), lit(blocks - 1))).as("i"))
-      .select(col("id"), col("s1"), col("s2"), col("i"),
-        when(col("i") < half,
-          call_function("shiftright", col("s1"), col("i") * width)
-            .bitwiseAND(mask))
-          .otherwise(
-            call_function("shiftright", col("s2"), (col("i") - half) * width)
-              .bitwiseAND(mask)).as("v"))
-    val a = blocked.select(col("i"), col("v"), col("id").as("id_a"),
-      col("s1").as("s1_a"), col("s2").as("s2_a"))
-    val b = blocked.select(col("i"), col("v"), col("id").as("id_b"),
-      col("s1").as("s1_b"), col("s2").as("s2_b"))
-    a.join(b, Seq("i", "v"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("s1_a").bitwiseXOR(col("s1_b"))) +
-          bit_count(col("s2_a").bitwiseXOR(col("s2_b"))))
-          .cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** [[verifiedNearDups]] with the portable candidate generator —
-    * two-phase near-dup (cheap banded candidates at a relaxed
-    * threshold, exact n-gram Jaccard verify at the real one) where
-    * BOTH phases are SQL-reproducible, so the oracle equality is also
-    * the end-to-end FP/recall proof for the banding at this operating
-    * point. The verify kernel is the fused hash-set Jaccard — d9's
-    * oracle already proves it equal to string-set Jaccard on this
-    * corpus.
-    */
-  def verifiedNearDupsPortable(docs: DataFrame, threshold: Double = 0.5,
-      n: Int = 3, idCol: String = "doc_id", textCol: String = "text")
-      : DataFrame = {
-    val cands = minhashNearDupsPortable(docs, threshold * 0.6,
-        idCol = idCol, textCol = textCol)
+      idCol: String = "doc_id", textCol: String = "text",
+      family: HashFamily = HashFamily.Seeded): DataFrame = {
+    val cands = minhashNearDups(docs, threshold * 0.6, idCol = idCol,
+        textCol = textCol, family = family)
       .select("id_a", "id_b")
     val words = Scale.fanOutSmallScan(docs).select(col(idCol).as("gid"),
       TextFunctions.words(col(textCol)).as("w"))
@@ -344,9 +251,6 @@ object Dedup {
       .join(words.select(col("gid").as("id_b"), col("w").as("w_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         Sketches.ngramJaccard(col("w_a"), col("w_b"), n).as("j0"))
-      // cut on the UNROUNDED value (the d9 oracle discipline: both
-      // engines compare the identical exact quotient), round only the
-      // emitted column
       .filter(col("j0") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("j0"), 6).as("jaccard"))
   }
@@ -1177,33 +1081,18 @@ object Dedup {
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
-  /** End-to-end near-dup clustering: verified MinHash pairs → connected
-    * components → every document labeled with its cluster representative
-    * (singletons keep their own id).
+  /** End-to-end near-dup clustering: verified MinHash pairs
+    * ([[verifiedNearDups]] under `family`) → connected components → every
+    * document labeled with its cluster representative (singletons keep
+    * their own id). With [[HashFamily.Portable]] the WHOLE pipeline
+    * (portable MinHash banding → exact verify → connected components) is
+    * oracle-checkable end to end (the d7 recursive-CTE recipe).
     */
   def nearDupClusters(docs: DataFrame, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val comp = clusters(
-      verifiedNearDups(docs, threshold, idCol = idCol, textCol = textCol))
-    docs.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-  }
-
-  /** [[nearDupClusters]] over the ENGINE-PORTABLE two-phase pairs
-    * ([[verifiedNearDupsPortable]]): the banded-LSH candidate shape the
-    * 100 TB path needs, with a hash family a SQL oracle re-derives — so
-    * the WHOLE pipeline (portable MinHash banding → exact verify →
-    * connected components) is oracle-checkable end to end (the d7
-    * recursive-CTE recipe), where the xxhash-seeded [[nearDupClusters]]
-    * could only golden-gate refinement/recall against the exact path.
-    */
-  def nearDupClustersPortable(docs: DataFrame, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val comp = clusters(
-      verifiedNearDupsPortable(docs, threshold, idCol = idCol, textCol = textCol))
-    docs.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-  }
+      idCol: String = "doc_id", textCol: String = "text",
+      family: HashFamily = HashFamily.Seeded): DataFrame =
+    labelClusters(docs, verifiedNearDups(docs, threshold, idCol = idCol,
+      textCol = textCol, family = family), idCol)
 
   /** [[nearDupClusters]] over the EXACT pair list ([[exactJaccardPairs]])
     * instead of LSH candidates: deterministic across engines, so the full
@@ -1211,10 +1100,61 @@ object Dedup {
     * oracle-checkable end-to-end (DuckDB recursive CTE — the d7 probe).
     */
   def nearDupClustersExact(docs: DataFrame, threshold: Double = 0.5, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val comp = clusters(
-      exactJaccardPairs(docs, threshold, n, idCol = idCol, textCol = textCol))
-    docs.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    labelClusters(docs, exactJaccardPairs(docs, threshold, n, idCol = idCol,
+      textCol = textCol), idCol)
+
+  /** Every document with the [[clusters]] representative of `pairs`
+    * (singletons keep their own id). */
+  private def labelClusters(docs: DataFrame, pairs: DataFrame,
+      idCol: String): DataFrame =
+    docs.join(clusters(pairs).withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
+}
+
+/** The hash family behind the MinHash and SimHash near-dup pipelines of
+  * [[Dedup]] — the one decision that differs between the fastest form and
+  * the form a SQL oracle re-derives. Every stage after the signature
+  * (banding, blocking, candidate distinct, estimate, verify) is shared.
+  */
+sealed abstract class HashFamily {
+  /** MinHash signature (array<bigint>) of a word array. */
+  def minhash(words: Column, numHashes: Int, shingleSize: Int): Column
+  /** LSH bucket key of band `b`'s signature slice. */
+  def bandKey(b: Column, slice: Column): Column
+  /** Raw SimHash of the text column; [[simhash64]] turns it into the
+    * 64-bit signature (two steps, so a multi-part raw value is computed
+    * once per document rather than once per part). */
+  def simhash(text: Column): Column
+  def simhash64(raw: Column): Column
+}
+
+object HashFamily {
+  /** xxhash64-seeded ([[graft.functions.MinHashSignatureExpr]],
+    * [[graft.functions.SimHashTextExpr]]): the fastest kernels. Not
+    * re-derivable in SQL, so its recall is golden-gated in DedupSpec. */
+  case object Seeded extends HashFamily {
+    def minhash(words: Column, numHashes: Int, shingleSize: Int): Column =
+      Sketches.minhashSignature(words, numHashes, shingleSize)
+    def bandKey(b: Column, slice: Column): Column = xxhash64(b, slice)
+    def simhash(text: Column): Column = Sketches.simhash64Text(text)
+    def simhash64(raw: Column): Column = raw
+  }
+
+  /** Engine-portable md5 family ([[graft.functions.MinHashPortableExpr]],
+    * [[graft.functions.SimHashPortableExpr]]): hash parameters come from
+    * md5 of the hash index, signatures are per-(doc, k) minima, the band
+    * key is the comma-joined slice, and the SimHash is two 32-bit halves
+    * `s1 | s2 << 32` — every op a DuckDB twin evaluates exactly. The
+    * oracle-checked probes (d3, d4, d5, t55) run this family. */
+  case object Portable extends HashFamily {
+    def minhash(words: Column, numHashes: Int, shingleSize: Int): Column =
+      Sketches.minhashPortable(words, numHashes, shingleSize)
+    def bandKey(b: Column, slice: Column): Column =
+      concat_ws(",", transform(slice, x => x.cast("string")))
+    def simhash(text: Column): Column =
+      Sketches.simhashPortable(TextFunctions.words(text))
+    def simhash64(raw: Column): Column =
+      element_at(raw, 1).bitwiseOR(shiftleft(element_at(raw, 2), 32))
   }
 }

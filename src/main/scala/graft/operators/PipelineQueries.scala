@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Scratch, Tables}
 import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
 
@@ -11,63 +11,6 @@ import org.apache.spark.sql.functions._
   * get rows-only checks here and exact golden tests in ScalaTest.
   */
 object PipelineQueries {
-
-  /** Scratch index directory for the lifecycle probes (s24/s27),
-    * removed recursively at JVM shutdown — a full Bench run invokes
-    * each probe several times and would otherwise strand dozens of
-    * written indexes in /tmp (the StreamingQueries deleteOnExit
-    * convention).
-    */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  // ONE hook draining the shared list — a per-call hook would
-  // accumulate a live Thread (holding its closure) for every probe
-  // invocation across a full Bench run
-  private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      scratchDirs.forEach(d => rm(new java.io.File(d)))
-    }))
-
-  /** Index scratch goes to tmpfs when available (r15, the
-    * StreamingQueries scratchRoot rationale): the lifecycle probes
-    * write/append/compact a 16-partition parquet index PER RUN — many
-    * small fsync-ed files whose disk latency is probe overhead, not the
-    * lifecycle work under test. Production indexes live on durable
-    * storage; nothing here survives the JVM. SPARK_GRAFT_SCRATCH
-    * overrides.
-    */
-  private val scratchRoot: java.nio.file.Path = {
-    val pick = sys.env.get("SPARK_GRAFT_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .orElse {
-        // require real usable space on /dev/shm (ADVICE r15): container
-        // defaults cap it at 64 MB and the index writes would ENOSPC
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val usable = try {
-          if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm))
-            java.nio.file.Files.getFileStore(shm).getUsableSpace
-          else 0L
-        } catch { case _: Exception => 0L }
-        if (usable >= (512L << 20)) Some(shm) else None
-      }
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir")))
-    java.nio.file.Files.createDirectories(pick)
-    pick
-  }
-
-  private def tempIndexDir(prefix: String): String = {
-    scratchHook
-    val dir =
-      java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
-    scratchDirs.add(dir)
-    dir
-  }
 
   def defs: Map[String, QueryDef] = Map(
     // ---- text analysis ----------------------------------------------------
@@ -788,11 +731,12 @@ object PipelineQueries {
     // 100 TB, at the standard LSH recall cost (a missed edge can split
     // a true cluster across splits — the documented dial).
     // ORACLE-CHECKED since r15 via the d3/d5 engine-portable md5
-    // MinHash family: the DuckDB twin re-derives banding → exact
-    // verify → connected components (WITH RECURSIVE, the d7 recipe) →
-    // the md5 split gate end to end. The xxhash-seeded clustering
-    // (Dedup.nearDupClusters) keeps its DedupSpec refinement +
-    // co-cluster-recall gates against the exact path.
+    // MinHash family (HashFamily.Portable): the DuckDB twin re-derives
+    // banding → exact verify → connected components (WITH RECURSIVE,
+    // the d7 recipe) → the md5 split gate end to end. The same
+    // Dedup.nearDupClusters under the default seeded family keeps its
+    // DedupSpec refinement + co-cluster-recall gates against the exact
+    // path.
     "t55_cluster_safe_split_lsh" -> QueryDef.sql(
       """WITH ws AS (
         |  SELECT doc_id,
@@ -862,8 +806,8 @@ object PipelineQueries {
         |        CAST('0x' || substring(md5(CAST(cluster_id AS VARCHAR) || '#42'), 1, 8) AS UBIGINT) % 1000 AS g
         |      FROM lab)
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val clustered = Dedup.nearDupClustersPortable(
-          Tables.documents(s, d), threshold = 0.3)
+      val clustered = Dedup.nearDupClusters(Tables.documents(s, d),
+          threshold = 0.3, family = HashFamily.Portable)
         .withColumn("cluster_id", col("cluster_id").cast("long"))
       Scale.assignSplit(clustered, idCol = "cluster_id")
         .select(col("doc_id"), col("cluster_id"), col("split"))
@@ -1045,14 +989,14 @@ object PipelineQueries {
     },
 
     // MinHash+LSH near-dup pairs. ORACLE-CHECKED since r15 via the
-    // ENGINE-PORTABLE md5 affine hash family (MinHashPortableExpr):
+    // ENGINE-PORTABLE md5 affine hash family (HashFamily.Portable):
     // the DuckDB twin re-derives shingles, the 64 (a_j, b_j) parameters
     // (md5 of the hash index — no seed table), per-(doc, j) MIN
     // signatures, comma-joined band keys, the banded self-join and the
     // agreement estimate (an exact multiple of 1/64) from the same
     // table — the full banding pipeline hash-gated end to end. The
-    // xxhash-SEEDED family (Dedup.minhashNearDups) keeps its golden
-    // recall-vs-exact S-curve gates in DedupSpec untouched.
+    // same operator under the xxhash-SEEDED family keeps its golden
+    // recall-vs-exact S-curve gates in DedupSpec.
     "d3_minhash_neardup" -> QueryDef.sql(
       """WITH ws AS (
         |  SELECT doc_id,
@@ -1096,18 +1040,22 @@ object PipelineQueries {
         |WHERE CAST(len(list_filter(range(64),
         |    i -> sa.sig[i+1] = sb.sig[i+1])) AS DOUBLE) / 64 >= 0.3::DOUBLE
         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.minhashNearDupsPortable(Tables.documents(s, d), threshold = 0.3)
+      Dedup.minhashNearDups(Tables.documents(s, d), threshold = 0.3,
+          family = HashFamily.Portable)
         .orderBy("id_a", "id_b")
     },
 
     // SimHash near-dup pairs within hamming ≤ 7. ORACLE-CHECKED since
-    // r15 via the ENGINE-PORTABLE md5 bit votes (SimHashPortableExpr,
+    // r15 via the ENGINE-PORTABLE md5 bit votes (HashFamily.Portable,
     // two 32-bit halves so every op stays in exact BIGINT range on
     // both engines): the twin re-derives token hashes (md5 hex chars
     // 1–8 / 9–16), integer bit votes, the two signature halves, the
     // 8-block pigeonhole keys, and the xor-popcount hamming — the
     // pigeonhole-blocking recall guarantee checked as hash equality.
-    // The xxhash-seeded Dedup.simhashNearDups keeps its spec gates.
+    // The engine packs the halves into one s1 | s2 << 32 signature; its
+    // 8 blocks of 8 bits cover the twin's per-half bytes, so both
+    // engines form the same candidate pairs. The seeded family keeps
+    // its spec gates.
     "d4_simhash_neardup" -> QueryDef.sql(
       """WITH ws AS (
         |  SELECT doc_id,
@@ -1144,7 +1092,8 @@ object PipelineQueries {
         |                    AND a.doc_id < c.doc_id
         |WHERE bit_count(xor(a.s1, c.s1)) + bit_count(xor(a.s2, c.s2)) <= 7
         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.simhashNearDupsPortable(Tables.documents(s, d), maxHamming = 7)
+      Dedup.simhashNearDups(Tables.documents(s, d), maxHamming = 7,
+          family = HashFamily.Portable)
         .orderBy("id_a", "id_b")
     },
 
@@ -1155,8 +1104,8 @@ object PipelineQueries {
     // pipeline at the relaxed cut, then the d9 string-set Jaccard on
     // the survivors — equality is simultaneously the FP-rejection
     // proof for the hashed verify kernel and the recall proof for the
-    // banding at this operating point. The seeded variant
-    // (Dedup.verifiedNearDups) keeps its spec gates.
+    // banding at this operating point. The seeded family keeps its
+    // spec gates.
     "d5_verified_neardup" -> QueryDef.sql(
       """WITH ws AS (
         |  SELECT doc_id,
@@ -1209,7 +1158,8 @@ object PipelineQueries {
         |      / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g)))
         |    >= 0.4::DOUBLE
         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.verifiedNearDupsPortable(Tables.documents(s, d), threshold = 0.4)
+      Dedup.verifiedNearDups(Tables.documents(s, d), threshold = 0.4,
+          family = HashFamily.Portable)
         .orderBy("id_a", "id_b")
     },
 
@@ -1460,8 +1410,8 @@ object PipelineQueries {
     // hyperplanes (plane p = exact difference of vectors 2p and 2p+1)
     // and the 6-d.p. rounded sign rule: the DuckDB twin re-derives the
     // 8 planes, every bucket, the xor-probe set and the exact cosine
-    // ranking from the same table. The seeded-Gaussian geometry
-    // (Similarity.topKCosineApprox) keeps its golden gates in spec.
+    // ranking from the same table. The same operator under its
+    // seeded-Gaussian default keeps its golden gates in spec.
     "s3_ann_topk" -> QueryDef.sql(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
@@ -1488,8 +1438,9 @@ object PipelineQueries {
         |WHERE e.vec_id <> 0
         |  AND xor(bk.bkt, q.qb) IN (0, 1, 2, 4, 8, 16, 32, 64, 128)
         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin) { (s, d) =>
-      Similarity.topKCosineApproxDataDefined(Tables.embeddings(s, d),
-        queryId = 0L, k = 20, nBits = 8)
+      val emb = Tables.embeddings(s, d)
+      Similarity.topKCosineApprox(emb, queryId = 0L, k = 20, nBits = 8,
+        planes = Some(Similarity.dataDefinedHyperplanes(emb, 8)), roundTo = 6)
     },
 
     // the named scale path for s2: multi-table sign-LSH candidates +
@@ -1501,9 +1452,9 @@ object PipelineQueries {
     // → exact verify end to end — the full pipeline hash-gated, where
     // the seeded probe could only golden-gate recall. nTables = 6 is
     // recommendedTables(0.25, 0.9, nBits = 2), frozen as a literal so
-    // the twin's plane count is explicit. The seeded-Gaussian family
-    // (Similarity.nearDupPairsBucketed) keeps its S-curve recall gates
-    // in SimilarityAsOfSpec.
+    // the twin's plane count is explicit. The same operator under its
+    // seeded-Gaussian default keeps its S-curve recall gates in
+    // SimilarityAsOfSpec.
     "s6_embed_neardup_bucketed" -> QueryDef.sql(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings WHERE vec_id < 200),
@@ -1535,8 +1486,11 @@ object PipelineQueries {
         |WHERE round(list_cosine_similarity(ea.v, eb.v), 6) + 0.0::DOUBLE
         |      >= 0.25::DOUBLE
         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Similarity.nearDupPairsBucketedDataDefined(Tables.embeddings(s, d),
-        threshold = 0.25, nBits = 2, nTables = 6, idCap = Some(200L))
+      val emb = Tables.embeddings(s, d)
+      val planes = Similarity.dataDefinedHyperplanes(
+        emb.filter(col("vec_id") < 200L), 2 * 6)
+      Similarity.nearDupPairsBucketed(emb, threshold = 0.25, nBits = 2,
+        nTables = 6, idCap = Some(200L), planes = Some(planes), roundTo = 6)
     },
 
     // s6's incremental-ingest round (the embedding leg of the d18/d20
@@ -1585,11 +1539,13 @@ object PipelineQueries {
         |      >= 0.25::DOUBLE
         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      Similarity.nearDupPairsBucketedDeltaDataDefined(
-        emb.filter(col("vec_id") < 150),
+      val corpus = emb.filter(col("vec_id") < 150)
+      Similarity.nearDupPairsBucketedDelta(corpus,
         emb.filter(col("vec_id") >= 150 && col("vec_id") < 200)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
-        threshold = 0.25, nBits = 2, nTables = 6)
+        threshold = 0.25, nBits = 2, nTables = 6,
+        planes = Some(Similarity.dataDefinedHyperplanes(corpus, 2 * 6)),
+        roundTo = 6)
     },
 
     // IVF-Flat top-k. ORACLE-CHECKED since r14 with DATA-DEFINED
@@ -1682,8 +1638,10 @@ object PipelineQueries {
         |    + 0.0::DOUBLE AS sim
         |FROM cand JOIN e USING (vec_id)
         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin) { (s, d) =>
-      Similarity.pqTopKDataDefined(Tables.embeddings(s, d), queryId = 0L,
-          k = 20, nCents = 16, m = 8, rerank = 4)
+      val emb = Tables.embeddings(s, d)
+      val (_, books) = Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
+      Similarity.pqTopK(emb, queryId = 0L, k = 20, books, rerank = 4,
+          roundTo = 6)
         .select(col("vec_id"), (col("sim") + lit(0.0)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
     },
@@ -1752,8 +1710,11 @@ object PipelineQueries {
         |    + 0.0::DOUBLE AS sim
         |FROM cand JOIN e USING (vec_id)
         |ORDER BY sim DESC, vec_id LIMIT 15""".stripMargin) { (s, d) =>
-      Similarity.ivfAdcTopKDataDefined(Tables.embeddings(s, d),
-          queryId = 2L, k = 15, nCents = 16, m = 8, nProbe = 6, rerank = 6)
+      val emb = Tables.embeddings(s, d)
+      val (cents, books) =
+        Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
+      Similarity.ivfAdcTopK(emb, queryId = 2L, k = 15, cents, books,
+          nProbe = 6, rerank = 6, roundTo = 6)
         .select(col("vec_id"), (col("sim") + lit(0.0)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
     },
@@ -1968,8 +1929,11 @@ object PipelineQueries {
         |    + 0.0::DOUBLE AS sim
         |FROM cand JOIN e USING (vec_id)
         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin) { (s, d) =>
-      Similarity.ivfAdcTopKDataDefined(Tables.embeddings(s, d),
-          queryId = 0L, k = 20, nCents = 16, m = 8, nProbe = 4, rerank = 4)
+      val emb = Tables.embeddings(s, d)
+      val (cents, books) =
+        Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
+      Similarity.ivfAdcTopK(emb, queryId = 0L, k = 20, cents, books,
+          nProbe = 4, rerank = 4, roundTo = 6)
         .select(col("vec_id"), (col("sim") + lit(0.0)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
     },
@@ -2107,8 +2071,11 @@ object PipelineQueries {
         |    + 0.0::DOUBLE AS sim
         |FROM cand JOIN e USING (vec_id)
         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin) { (s, d) =>
-      Similarity.ivfAdcResidualTopKDataDefined(Tables.embeddings(s, d),
-          queryId = 0L, k = 20, nCents = 16, m = 8, nProbe = 4, rerank = 4)
+      val emb = Tables.embeddings(s, d)
+      val (cents, books) =
+        Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
+      Similarity.ivfAdcResidualTopK(emb, queryId = 0L, k = 20, cents, books,
+          nProbe = 4, rerank = 4, roundTo = 6)
         .select(col("vec_id"), (col("sim") + lit(0.0)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
     },
@@ -2443,8 +2410,8 @@ object PipelineQueries {
       val books = IndexCache.pqCodebooksRaw(s, d)
       val build = emb.filter(col("vec_id") % 2 === 0)
       val delta = emb.filter(col("vec_id") % 2 === 1)
-      val dirA = tempIndexDir("graft_s24_app")
-      val dirB = tempIndexDir("graft_s24_full")
+      val dirA = Scratch.exitScopedDir("graft_s24_app")
+      val dirB = Scratch.exitScopedDir("graft_s24_full")
       Similarity.pqEncode(Similarity.ivfAssign(build, cents), books)
         .select("vec_id", "centroid_id", "pq_code")
         .repartition(col("centroid_id"))
@@ -2529,8 +2496,10 @@ object PipelineQueries {
         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val perm = Similarity.rangePermutation(emb, m = 8)
-      Similarity.pqTopKDataDefined(Similarity.permuted(emb, perm),
-          queryId = 4L, k = 20, nCents = 16, m = 8, rerank = 4)
+      val pe = Similarity.permuted(emb, perm)
+      val (_, books) = Similarity.dataDefinedQuantizers(pe, nCents = 16, m = 8)
+      Similarity.pqTopK(pe, queryId = 4L, k = 20, books, rerank = 4,
+          roundTo = 6)
         .select(col("vec_id"), (col("sim") + lit(0.0)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
     },
@@ -2618,9 +2587,11 @@ object PipelineQueries {
         |ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val perm = Similarity.rangePermutation(emb, m = 8)
-      Similarity.ivfAdcResidualTopKDataDefined(
-          Similarity.permuted(emb, perm), queryId = 6L, k = 20,
-          nCents = 16, m = 8, nProbe = 4, rerank = 4)
+      val pe = Similarity.permuted(emb, perm)
+      val (cents, books) =
+        Similarity.dataDefinedQuantizers(pe, nCents = 16, m = 8)
+      Similarity.ivfAdcResidualTopK(pe, queryId = 6L, k = 20, cents, books,
+          nProbe = 4, rerank = 4, roundTo = 6)
         .select(col("vec_id"), (col("sim") + lit(0.0)).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
     },
@@ -2661,7 +2632,7 @@ object PipelineQueries {
       // fit memoized (IndexCache): the op under test is the tombstone
       // COMPACTION + rebuild-equivalence, not the seeded codebook fit
       val books = IndexCache.pqCodebooksRaw(s, d)
-      val dir = tempIndexDir("graft_s27")
+      val dir = Scratch.exitScopedDir("graft_s27")
       Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books)
         .select("vec_id", "centroid_id", "pq_code")
         .repartition(col("centroid_id"))
@@ -2669,7 +2640,7 @@ object PipelineQueries {
       val tombstones = emb.filter(col("vec_id") % 10 === 3).select("vec_id")
       Similarity.ivfIndexCompact(s, dir, tombstones)
       val remaining = emb.filter(col("vec_id") % 10 =!= 3)
-      val rebuilt = tempIndexDir("graft_s27_rb")
+      val rebuilt = Scratch.exitScopedDir("graft_s27_rb")
       Similarity.pqEncode(Similarity.ivfAssign(remaining, cents), books)
         .select("vec_id", "centroid_id", "pq_code")
         .repartition(col("centroid_id"))

@@ -263,12 +263,18 @@ object Similarity {
 
   /** Sign-LSH bucket id: bit i = sign(v · hyperplane_i). Vectors with high
     * cosine land in the same bucket with high probability (Charikar's
-    * SimHash for angular distance).
+    * SimHash for angular distance). `roundTo >= 0` is the ORACLE-SAFE sign
+    * rule: bit i = 1 iff the `roundTo`-d.p. ROUND of v · plane_i is
+    * strictly positive — the rounding absorbs summation-order ulps so a
+    * SQL twin's per-dim sum takes the identical branch (the s22
+    * rounded-argmin discipline applied to a sign test).
     */
-  def lshBucket(v: Column, planes: Array[Array[Double]]): Column =
+  def lshBucket(v: Column, planes: Array[Array[Double]],
+      roundTo: Int = -1): Column =
     planes.zipWithIndex.foldLeft(lit(0L)) { case (acc, (p, i)) =>
       val plane = array(p.toIndexedSeq.map(lit(_)): _*)
-      acc.bitwiseOR(shiftleft(when(dot(v, plane) > 0, 1L).otherwise(0L), i))
+      val d = if (roundTo >= 0) round(dot(v, plane), roundTo) else dot(v, plane)
+      acc.bitwiseOR(shiftleft(when(d > 0, 1L).otherwise(0L), i))
     }
 
   /** Embeddings with an LSH `bucket` column. Downstream ANN = shuffle on
@@ -313,26 +319,31 @@ object Similarity {
     * Per-table candidate volume is Σ_buckets |bucket|²/2: more bits →
     * smaller buckets → fewer candidates but lower per-table recall, which
     * more tables buy back. Never an n² cross join.
+    *
+    * The geometry is seeded Gaussian planes ([[hyperplanes]] with seed
+    * `seed + t` for table t) unless the caller passes `planes`: a flat
+    * array of `nBits · nTables` planes, table t using
+    * [planes(t·nBits), planes((t+1)·nBits)). With
+    * [[dataDefinedHyperplanes]] and `roundTo = 6` every stage is
+    * relational, so a DuckDB twin re-derives planes → buckets →
+    * candidates → verified pairs from the same table (the s6 probe).
     */
   def nearDupPairsBucketed(embeddings: DataFrame, threshold: Double,
       nBits: Int = 8, nTables: Int = 8, dim: Int = 64, seed: Long = 42L,
-      idCap: Option[Long] = None): DataFrame = {
+      idCap: Option[Long] = None,
+      planes: Option[Array[Array[Double]]] = None,
+      roundTo: Int = -1): DataFrame = {
     val base = idCap.fold(embeddings)(c => embeddings.filter(col("vec_id") < c))
     val e = base.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val posted = lshPostings(e, nBits, nTables, dim, seed)
+    val posted = lshPostings(e,
+      tablePlanes(nBits, nTables, dim, seed, planes), roundTo)
     val a = posted.select(col("t"), col("bkt"), col("vec_id").as("id_a"))
     val b = posted.select(col("t"), col("bkt"), col("vec_id").as("id_b"))
     val cands = a.join(b, Seq("t", "bkt"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-    fanCands(cands)
-      .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("va"), col("vb")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy("id_a", "id_b")
+    verifyCosine(cands, e, threshold)
   }
 
   /** Width-restoring exchange for verify stages whose input is narrow id
@@ -347,18 +358,42 @@ object Similarity {
     cands.repartition(
       cands.sparkSession.sessionState.conf.numShufflePartitions)
 
+  /** The per-table plane sets: the caller's flat `planes` array sliced
+    * into `nTables` runs of `nBits`, or seeded Gaussian planes. */
+  private def tablePlanes(nBits: Int, nTables: Int, dim: Int, seed: Long,
+      planes: Option[Array[Array[Double]]]): Seq[Array[Array[Double]]] =
+    planes match {
+      case Some(p) =>
+        require(p.length == nBits * nTables,
+          s"need ${nBits * nTables} planes, got ${p.length}")
+        (0 until nTables).map(t => p.slice(t * nBits, (t + 1) * nBits))
+      case None => (0 until nTables).map(t => hyperplanes(nBits, dim, seed + t))
+    }
+
   /** The ONE multi-table (table, bucket) posting layout both the full
     * bucketed pair join and its delta round hash under — sharing it is
     * what makes the delta-vs-full identity structural rather than a
     * comment (a table-seed or bucket tweak cannot diverge the persisted
     * corpus postings from a later delta's). `e` must carry
     * (vec_id, v: array<double>). */
-  private def lshPostings(e: DataFrame, nBits: Int, nTables: Int,
-      dim: Int, seed: Long): DataFrame = {
-    val buckets = array((0 until nTables).map(t =>
-      lshBucket(col("v"), hyperplanes(nBits, dim, seed + t))): _*)
+  private def lshPostings(e: DataFrame, tables: Seq[Array[Array[Double]]],
+      roundTo: Int): DataFrame = {
+    val buckets = array(tables.map(p => lshBucket(col("v"), p, roundTo)): _*)
     e.select(col("vec_id"), posexplode(buckets)).toDF("vec_id", "t", "bkt")
   }
+
+  /** Exact verify of candidate id pairs: vectors re-attach from `e`
+    * (vec_id, v) and the 6-d.p. cosine (−0.0 normalized to 0.0, the t24
+    * lesson) cuts at `threshold`. */
+  private def verifyCosine(cands: DataFrame, e: DataFrame,
+      threshold: Double): DataFrame =
+    fanCands(cands)
+      .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
+      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        (round(cosine(col("va"), col("vb")), 6) + lit(0.0)).as("sim"))
+      .filter(col("sim") >= threshold)
+      .orderBy("id_a", "id_b")
 
   /** Incremental embedding near-dup ingest — [[nearDupPairsBucketed]]'s
     * delta round, completing the three-modality incremental family
@@ -369,7 +404,9 @@ object Similarity {
     * unique across both inputs; output contract is
     * [[nearDupPairsBucketed]]'s (id_a < id_b, exact `sim`).
     *
-    * The hyperplanes are seed-deterministic — the index geometry is
+    * The hyperplanes are seed-deterministic (or the caller's frozen
+    * `planes` — data-defined planes come from the CORPUS, so a later
+    * delta can never reshape the index) — the index geometry is
     * frozen by construction, so the corpus participates only as its
     * persisted (t, bkt, vec_id) postings (bucketed-written once at index
     * build: the probe join is then exchange-free on the corpus side) and
@@ -384,15 +421,17 @@ object Similarity {
     */
   def nearDupPairsBucketedDelta(corpus: DataFrame, delta: DataFrame,
       threshold: Double, nBits: Int = 8, nTables: Int = 8, dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L, planes: Option[Array[Array[Double]]] = None,
+      roundTo: Int = -1): DataFrame = {
     def prep(df: DataFrame): DataFrame =
       df.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val eC = prep(corpus)
     val eD = prep(delta)
     // the SHARED lshPostings layout — bit-identical to what the full
     // run (and so the persisted corpus postings) was built with
-    val pC = lshPostings(eC, nBits, nTables, dim, seed) // persisted in deployment
-    val pD = lshPostings(eD, nBits, nTables, dim, seed)
+    val tables = tablePlanes(nBits, nTables, dim, seed, planes)
+    val pC = lshPostings(eC, tables, roundTo) // persisted in deployment
+    val pD = lshPostings(eD, tables, roundTo)
     // corpus×delta probe (ids disjoint — normalized below) ∪ the
     // delta-internal triangle; id pairs only through the distinct
     val cross = pC.select(col("t"), col("bkt"), col("vec_id").as("id_a"))
@@ -405,174 +444,24 @@ object Similarity {
         Seq("t", "bkt"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-    val cands = cross.unionAll(tri).distinct()
-    val eAll = eC.unionAll(eD)
-    fanCands(cands)
-      .join(eAll.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(eAll.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("va"), col("vb")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy("id_a", "id_b")
+    verifyCosine(cross.unionAll(tri).distinct(), eC.unionAll(eD), threshold)
   }
 
   /** Approximate top-k: exact search restricted to the query vector's LSH
-    * bucket and its Hamming-1 neighbor buckets (multi-probe).
+    * bucket and its Hamming-1 neighbor buckets (multi-probe) — the probe
+    * set is `xor(bkt, qb) ∈ {0, 1, 2, 4, …}`, the scan ranks by 6-d.p.
+    * cosine with id ties. `planes` (nBits of them) replaces the seeded
+    * Gaussian geometry; with [[dataDefinedHyperplanes]] and
+    * `roundTo = 6` the whole search is SQL-reproducible (the s3 probe).
     */
   def topKCosineApprox(embeddings: DataFrame, queryId: Long, k: Int,
-      nBits: Int = 8, dim: Int = 64): DataFrame = {
-    val bucketed = annBuckets(embeddings, nBits, dim)
-    val qRow = bucketed.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv"), col("bucket").as("qb"))
-    val q = broadcast(qRow)
-    val probes = (0 until nBits).map(i => col("qb").bitwiseXOR(lit(1L << i))) :+ col("qb")
-    bucketed.filter(col("vec_id") =!= queryId)
-      .crossJoin(q)
-      .filter(probes.map(p => col("bucket") === p).reduce(_ || _))
-      .select(col("vec_id"),
-        round(cosine(asDouble(col("embedding")), col("qv")), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  // ---- DATA-DEFINED sign-LSH (the s22/s35 oracle recipe, LSH form) -------
-
-  /** DATA-DEFINED hyperplanes: plane `p` is the exact IEEE difference
-    * of the table's vectors 2p and 2p+1 (the 2·nPlanes lowest ids) —
-    * the quantizer-from-the-table trick applied to the sign-LSH
-    * geometry, so a SQL oracle re-derives every plane relationally
-    * (x − y is the same IEEE op on both engines). Differences of
-    * corpus vectors are a legitimate LSH geometry, not just an oracle
-    * device: they follow the data distribution's directions (the idea
-    * behind learned/PCA-style projections), and sign-LSH needs only
-    * DIRECTIONS, not Gaussian coordinates. The seeded Gaussian family
-    * ([[hyperplanes]]) keeps its golden recall gates in spec.
-    */
-  def dataDefinedHyperplanes(embeddings: DataFrame,
-      nPlanes: Int): Array[Array[Double]] = {
-    val rows = embeddings.filter(col("vec_id") < 2 * nPlanes)
-      .select(col("vec_id"), asDouble(col("embedding")))
-      .collect().sortBy(_.getLong(0))
-    require(rows.length == 2 * nPlanes,
-      s"expected the ${2 * nPlanes} lowest-id vectors, got ${rows.length}")
-    val vs = rows.map(_.getSeq[Double](1).toArray)
-    Array.tabulate(nPlanes) { p =>
-      vs(2 * p).zip(vs(2 * p + 1)).map { case (x, y) => x - y }
-    }
-  }
-
-  /** [[lshBucket]] with the ORACLE-SAFE sign rule: bit i = 1 iff the
-    * 6-d.p. ROUND of v · plane_i is strictly positive — the rounding
-    * absorbs summation-order ulps so a SQL twin's per-dim sum takes
-    * the identical branch (the s22 rounded-argmin discipline applied
-    * to a sign test). The unrounded fast form stays [[lshBucket]].
-    */
-  def lshBucketRounded(v: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.foldLeft(lit(0L)) { case (acc, (p, i)) =>
-      val plane = array(p.toIndexedSeq.map(lit(_)): _*)
-      acc.bitwiseOR(shiftleft(
-        when(round(dot(v, plane), 6) > 0, 1L).otherwise(0L), i))
-    }
-
-  /** [[lshPostings]] over a FLAT data-defined plane array (table `t`
-    * uses planes [t·nBits, (t+1)·nBits)) with the rounded sign rule —
-    * the posting layout both the full DD pair join and its delta round
-    * share, like the seeded twin. */
-  private def lshPostingsDD(e: DataFrame, nBits: Int, nTables: Int,
-      planes: Array[Array[Double]]): DataFrame = {
-    require(planes.length == nBits * nTables,
-      s"need ${nBits * nTables} planes, got ${planes.length}")
-    val buckets = array((0 until nTables).map(t =>
-      lshBucketRounded(col("v"), planes.slice(t * nBits, (t + 1) * nBits))): _*)
-    e.select(col("vec_id"), posexplode(buckets)).toDF("vec_id", "t", "bkt")
-  }
-
-  /** [[nearDupPairsBucketed]] with DATA-DEFINED hyperplanes and the
-    * rounded sign rule — identical multi-table banded shape (postings →
-    * (t, bkt) equi self-join → id-pair distinct → exact 6-d.p. cosine
-    * verify), but every stage is relational, so a DuckDB twin
-    * re-derives planes → buckets → candidates → verified pairs from
-    * the same table and the hash gate covers the WHOLE pipeline (the
-    * seeded probe could only golden-gate recall). `planes` defaults to
-    * [[dataDefinedHyperplanes]] of the capped input; pass them
-    * explicitly when the geometry must be frozen by a different
-    * relation (the delta round derives them from the corpus).
-    */
-  def nearDupPairsBucketedDataDefined(embeddings: DataFrame,
-      threshold: Double, nBits: Int, nTables: Int,
-      idCap: Option[Long] = None,
-      planes: Option[Array[Array[Double]]] = None): DataFrame = {
-    val base = idCap.fold(embeddings)(c => embeddings.filter(col("vec_id") < c))
-    val e = base.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val pls = planes.getOrElse(dataDefinedHyperplanes(base, nBits * nTables))
-    val posted = lshPostingsDD(e, nBits, nTables, pls)
-    val a = posted.select(col("t"), col("bkt"), col("vec_id").as("id_a"))
-    val b = posted.select(col("t"), col("bkt"), col("vec_id").as("id_b"))
-    val cands = a.join(b, Seq("t", "bkt"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    fanCands(cands)
-      .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (round(cosine(col("va"), col("vb")), 6) + lit(0.0)).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** [[nearDupPairsBucketedDelta]] with DATA-DEFINED hyperplanes — the
-    * O(|Δ|) embedding ingest round, oracle-checkable end to end. The
-    * geometry is frozen by the CORPUS (planes from its lowest ids), so
-    * the persisted-postings contract is unchanged: a later delta can
-    * never reshape the index, and the delta round returns exactly the
-    * full run's delta-touching pairs — now checked as hash equality
-    * against the SQL twin rather than a spec identity alone.
-    */
-  def nearDupPairsBucketedDeltaDataDefined(corpus: DataFrame,
-      delta: DataFrame, threshold: Double, nBits: Int, nTables: Int)
-      : DataFrame = {
-    def prep(df: DataFrame): DataFrame =
-      df.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val eC = prep(corpus)
-    val eD = prep(delta)
-    val pls = dataDefinedHyperplanes(corpus, nBits * nTables)
-    val pC = lshPostingsDD(eC, nBits, nTables, pls) // persisted in deployment
-    val pD = lshPostingsDD(eD, nBits, nTables, pls)
-    val cross = pC.select(col("t"), col("bkt"), col("vec_id").as("id_a"))
-      .join(pD.select(col("t"), col("bkt"), col("vec_id").as("id_b")),
-        Seq("t", "bkt"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    val tri = pD.select(col("t"), col("bkt"), col("vec_id").as("id_a"))
-      .join(pD.select(col("t"), col("bkt"), col("vec_id").as("id_b")),
-        Seq("t", "bkt"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val cands = cross.unionAll(tri).distinct()
-    val eAll = eC.unionAll(eD)
-    fanCands(cands)
-      .join(eAll.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
-      .join(eAll.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (round(cosine(col("va"), col("vb")), 6) + lit(0.0)).as("sim"))
-      .filter(col("sim") >= threshold)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** [[topKCosineApprox]] with DATA-DEFINED hyperplanes and the rounded
-    * sign rule — single-table multi-probe (query bucket + its
-    * Hamming-1 neighbors), fully SQL-reproducible: the probe set is
-    * `xor(bkt, qb) ∈ {0, 1, 2, 4, …}`, the scan ranks by 6-d.p.
-    * cosine with id ties. The seeded-geometry [[topKCosineApprox]]
-    * keeps its golden gates in spec.
-    */
-  def topKCosineApproxDataDefined(embeddings: DataFrame, queryId: Long,
-      k: Int, nBits: Int = 8): DataFrame = {
-    val planes = dataDefinedHyperplanes(embeddings, nBits)
+      nBits: Int = 8, dim: Int = 64,
+      planes: Option[Array[Array[Double]]] = None,
+      roundTo: Int = -1): DataFrame = {
+    val pls = tablePlanes(nBits, 1, dim, 42L, planes).head
     val e = embeddings.select(col("vec_id"),
       asDouble(col("embedding")).as("v"))
-    val bucketed = oncePerRow(e, "bucket" -> lshBucketRounded(col("v"), planes))
+    val bucketed = oncePerRow(e, "bucket" -> lshBucket(col("v"), pls, roundTo))
     val qRow = bucketed.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"), col("bucket").as("qb"))
     val q = broadcast(qRow)
@@ -585,6 +474,32 @@ object Similarity {
         (round(cosine(col("v"), col("qv")), 6) + lit(0.0)).as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
+  }
+
+  /** DATA-DEFINED hyperplanes: plane `p` is the exact IEEE difference
+    * of the table's vectors 2p and 2p+1 (the 2·nPlanes lowest ids) —
+    * the quantizer-from-the-table trick applied to the sign-LSH
+    * geometry, so a SQL oracle re-derives every plane relationally
+    * (x − y is the same IEEE op on both engines). Differences of
+    * corpus vectors are a legitimate LSH geometry, not just an oracle
+    * device: they follow the data distribution's directions (the idea
+    * behind learned/PCA-style projections), and sign-LSH needs only
+    * DIRECTIONS, not Gaussian coordinates. Pass them as `planes` to
+    * [[nearDupPairsBucketed]], [[nearDupPairsBucketedDelta]] or
+    * [[topKCosineApprox]]; the seeded Gaussian family ([[hyperplanes]])
+    * keeps its golden recall gates in spec.
+    */
+  def dataDefinedHyperplanes(embeddings: DataFrame,
+      nPlanes: Int): Array[Array[Double]] = {
+    val rows = embeddings.filter(col("vec_id") < 2 * nPlanes)
+      .select(col("vec_id"), asDouble(col("embedding")))
+      .collect().sortBy(_.getLong(0))
+    require(rows.length == 2 * nPlanes,
+      s"expected the ${2 * nPlanes} lowest-id vectors, got ${rows.length}")
+    val vs = rows.map(_.getSeq[Double](1).toArray)
+    Array.tabulate(nPlanes) { p =>
+      vs(2 * p).zip(vs(2 * p + 1)).map { case (x, y) => x - y }
+    }
   }
 
   // ---- int8 quantization (index compression) ----------------------------
@@ -630,20 +545,6 @@ object Similarity {
     */
   def nearestCentroid(v: Column, centroids: Array[Array[Double]]): Column =
     graft.functions.Vectors.nearestCentroid(v, centroids)
-
-  /** [[nearestCentroid]] under the s22 oracle's float contract: each
-    * per-centroid d² rounds to 6 d.p. BEFORE the argmin (so a DuckDB
-    * relational-argmin twin ranks identically ulp-for-ulp), ties to
-    * the lowest index. Use for oracle-checked assignment probes; the
-    * production [[ivfAssign]] path stays unrounded.
-    */
-  def nearestCentroidRounded(v: Column,
-      centroids: Array[Array[Double]]): Column =
-    // fused kernel, rounded form: BigDecimal HALF_UP of the identical
-    // ascending fold ≡ round(l2sq(v, c), 6) + array-argmin (Spark's
-    // Round is the same decimal HALF_UP of the double) — s13/s22
-    // oracles pin it
-    graft.functions.Vectors.nearestCentroid(v, centroids, roundTo = 6)
 
   /** Derive the IVF list count from the corpus size instead of
     * hand-tuning: query cost ≈ nProbe·N/nLists scan + nLists centroid
@@ -843,9 +744,11 @@ object Similarity {
     * [[oncePerRow]] barrier: the k-centroid argmin must not be inlined
     * into every downstream consumer (a pushed `isin` filter would
     * otherwise re-derive it inside the predicate).
-    * `roundTo >= 0` is the oracle-checked assignment contract
-    * ([[nearestCentroidRounded]]'s: each d² rounds before the argmin,
-    * ties to the lowest list); production paths keep the raw default.
+    * `roundTo >= 0` is the oracle-checked assignment contract (each d²
+    * rounds to `roundTo` d.p. — BigDecimal HALF_UP, Spark's `round` of
+    * the double — before the argmin, ties to the lowest list, so a
+    * DuckDB relational-argmin twin ranks identically ulp-for-ulp);
+    * production paths keep the raw default.
     */
   def ivfAssign(embeddings: DataFrame, centroids: Array[Array[Double]],
       roundTo: Int = -1): DataFrame =
@@ -862,36 +765,60 @@ object Similarity {
   def topKCosineIVF(embeddings: DataFrame, queryId: Long, k: Int,
       centroids: Array[Array[Double]], nProbe: Int = 4,
       roundTo: Int = -1): DataFrame = {
-    // fetch the query vector ONCE; it is needed driver-side anyway to
-    // rank the probe lists, and embedding it as a literal spares the
-    // broadcast-join job. An absent queryId yields an empty result (same
-    // contract as topKCosine), not a crash.
+    // the query vector is needed driver-side anyway to rank the probe
+    // lists, and embedding it as a literal spares the broadcast-join job.
     // roundTo >= 0 is the oracle contract (probe ranking + assignment
     // round each d² before their argmin, ties to the lowest list — the
     // s22/s35 recipe); the trained path keeps the raw default.
-    val qRows = embeddings.filter(col("vec_id") === queryId)
+    withQuery(embeddings, queryId) { qArr =>
+      val qLit = array(qArr.toIndexedSeq.map(lit(_)): _*)
+      ivfAssign(embeddings, centroids, roundTo)
+        .filter(col("vec_id") =!= queryId && col("centroid_id").isin(
+          probeLists(centroids, qArr, nProbe, roundTo): _*))
+        .select(col("vec_id"),
+          round(cosine(asDouble(col("embedding")), qLit), 6).as("sim"))
+        .orderBy(col("sim").desc, col("vec_id"))
+        .limit(k)
+    }
+  }
+
+  /** Fetch the query vector of `queryId` ONCE, driver-side, and build the
+    * result from it. An absent queryId yields an empty (vec_id, sim)
+    * result — the [[topKCosine]] contract — not a crash. */
+  private def withQuery(embeddings: DataFrame, queryId: Long)(
+      f: Array[Double] => DataFrame): DataFrame =
+    embeddings.filter(col("vec_id") === queryId)
       .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    // l2sq is the same ascending left fold the zip/map/sum formulation
-    // computed — bit-identical probe ranking on the trained path
-    def dist(c: Array[Double]): Double =
-      if (roundTo >= 0) java.math.BigDecimal.valueOf(l2sq(c, qArr))
-        .setScale(roundTo, java.math.RoundingMode.HALF_UP).doubleValue()
-      else l2sq(c, qArr)
-    val probeLists = centroids.zipWithIndex
-      .map { case (c, i) => (dist(c), i) }
+      .headOption match {
+      case Some(r) => f(r.getSeq[Double](0).toArray)
+      case None => embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
+    }
+
+  /** The `nProbe` IVF lists nearest the query, ranked driver-side by
+    * (d², list id) — d² the ascending left fold every kernel shares,
+    * rounded to `roundTo` d.p. first when `roundTo >= 0`. */
+  private def probeLists(centroids: Array[Array[Double]], qArr: Array[Double],
+      nProbe: Int, roundTo: Int): Seq[Integer] =
+    centroids.indices
+      .map(i => (roundHalfUp(l2sq(centroids(i), qArr), roundTo), i))
       .sortBy { case (d, i) => (d, i) }
-      .take(nProbe).map(_._2)
-    val qLit = array(qArr.toIndexedSeq.map(lit(_)): _*)
-    ivfAssign(embeddings, centroids, roundTo)
-      .filter(col("vec_id") =!= queryId &&
-        col("centroid_id").isin(probeLists.toIndexedSeq.map(Int.box): _*))
-      .select(col("vec_id"),
-        round(cosine(asDouble(col("embedding")), qLit), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
+      .take(nProbe).map(p => Int.box(p._2))
+
+  /** `x` rounded to `roundTo` d.p. by decimal HALF_UP — the driver-side
+    * twin of Spark's `round(x, roundTo)` — or `x` itself when
+    * `roundTo < 0`. Used wherever a driver-side scalar must equal an
+    * engine/oracle-side rounded distance. */
+  private def roundHalfUp(x: Double, roundTo: Int): Double =
+    if (roundTo < 0) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(roundTo, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Ascending-index left-fold L2² — the fold order every kernel here
+    * shares (bit-identical to the engine-side folds). */
+  private def l2sq(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
   }
 
   /** Two-stage coarse-to-fine retrieval (the Matryoshka-embedding
@@ -1098,48 +1025,45 @@ object Similarity {
     * exact scan (every row is a candidate and the rerank is exact) —
     * the s4-style identity the golden gate pins. Pass [[l2Normalized]]
     * inputs so ADC's L2 ordering matches the cosine rerank.
+    *
+    * `roundTo >= 0` is the oracle contract: per-block code distances,
+    * LUT entries and the ADC total round before their argmin/cut (ties
+    * to the lowest id). With [[dataDefinedQuantizers]] codebooks over
+    * raw vectors every stage is relational, so a DuckDB twin reproduces
+    * encode → ADC → cut → rerank end to end (the s19/s28 probes; the
+    * s33 rule: cross-engine normalization is not bit-reproducible).
     */
   def pqTopK(embeddings: DataFrame, queryId: Long, k: Int,
-      codebooks: Array[Array[Array[Double]]], rerank: Int = 4): DataFrame = {
+      codebooks: Array[Array[Array[Double]]], rerank: Int = 4,
+      roundTo: Int = -1): DataFrame = {
     require(k >= 1 && rerank >= 1, "k and rerank must be at least 1")
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    adcScanRerank(
-      pqEncode(embeddings, codebooks).filter(col("vec_id") =!= queryId),
-      qArr, codebooks, k, rerank)
+    withQuery(embeddings, queryId) { qArr =>
+      adcRerankTail(pqEncode(embeddings, codebooks, roundTo = roundTo)
+          .filter(col("vec_id") =!= queryId),
+        adcDist(codebooks, qArr, roundTo), qArr, k, rerank)
+    }
   }
 
-  /** Shared ADC tail for [[pqTopK]] and [[ivfAdcTopK]]: asymmetric-
-    * distance scan over `pq_code` — per row, m lookups into the query's
-    * per-block distance tables (literal arrays; never a join) summed
-    * in-row — TakeOrdered keeps the `rerank × k` best, then exact cosine
-    * ranks ONLY those. `encoded` must carry `vec_id`, `embedding`,
-    * `pq_code` and already exclude the query row.
-    */
-  private def adcScanRerank(encoded: DataFrame, qArr: Array[Double],
-      codebooks: Array[Array[Array[Double]]], k: Int, rerank: Int): DataFrame =
-    adcRerankTail(encoded, rawAdcDist(codebooks, qArr), qArr, k, rerank)
-
-  /** The raw-vector ADC distance column: per-block lookup tables hold
-    * the distance from the query's j-th block to every centroid of
-    * book j (literal arrays; never a join), summed in-row over
-    * `pq_code`.
-    */
-  private def rawAdcDist(codebooks: Array[Array[Array[Double]]],
-      qArr: Array[Double]): Column = {
+  /** Per-block ADC lookup tables: entry (j, c) is the L2² from `q`'s j-th
+    * block to centroid c of book j (the shared ascending fold), rounded
+    * to `roundTo` d.p. when `roundTo >= 0`. */
+  private def adcLuts(codebooks: Array[Array[Array[Double]]],
+      q: Array[Double], roundTo: Int): Array[Array[Double]] = {
     val dsub = codebooks(0)(0).length
-    // same driver-side LUT doubles as before; the per-row m-lookup add
-    // chain is now one fused expression with reduce(_ + _) parity
-    val luts: Array[Array[Double]] =
-      codebooks.zipWithIndex.map { case (book, j) =>
-        val qBlock = qArr.slice(j * dsub, (j + 1) * dsub)
-        book.map(c =>
-          c.zip(qBlock).map { case (x, y) => (x - y) * (x - y) }.sum)
-      }
-    graft.functions.Vectors.adcSum(col("pq_code"), luts)
+    codebooks.zipWithIndex.map { case (book, j) =>
+      val qBlock = q.slice(j * dsub, (j + 1) * dsub)
+      book.map(c => roundHalfUp(l2sq(c, qBlock), roundTo))
+    }
+  }
+
+  /** The ADC distance column: the query's per-block lookup tables
+    * (literal arrays; never a join) summed in-row over `pq_code` by the
+    * fused kernel, the total rounded when `roundTo >= 0`. */
+  private def adcDist(codebooks: Array[Array[Array[Double]]],
+      qArr: Array[Double], roundTo: Int): Column = {
+    val sum = graft.functions.Vectors.adcSum(col("pq_code"),
+      adcLuts(codebooks, qArr, roundTo))
+    if (roundTo >= 0) round(sum, roundTo) else sum
   }
 
   /** TakeOrdered the `rerank × k` best rows of `adist`, then rank ONLY
@@ -1306,67 +1230,21 @@ object Similarity {
       mins: Array[Double], maxs: Array[Double], rerank: Int = 4,
       roundAdistTo: Int = -1): DataFrame = {
     require(k >= 1 && rerank >= 1, "k and rerank must be at least 1")
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    val qLit = array(qArr.toIndexedSeq.map(lit(_)): _*)
-    val dec = sqDecoded(mins, maxs)
-    val rawAdist = aggregate(zip_with(dec, qLit, (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    // roundAdistTo >= 0: the oracle-checked form — ranking on the
-    // 6-d.p.-rounded decoded L2 (ties to the id) absorbs summation-
-    // order ulps, so a SQL twin's unordered per-dim sum ranks
-    // identically (the s22 discipline); the golden probes keep the
-    // raw fold
-    val adist = if (roundAdistTo >= 0) round(rawAdist, roundAdistTo)
-                else rawAdist
-    adcRerankTail(sqEncode(embeddings, mins, maxs)
-      .filter(col("vec_id") =!= queryId), adist, qArr, k, rerank)
-  }
-
-  /** The FULL IVFADC read path with DATA-DEFINED quantizers — the s22
-    * trick applied to every stage: coarse centroids are the `nCents`
-    * lowest-id vectors and block-`j`'s codebook is their `j`-th block
-    * slices, so assignment, codes, probe ranking, ADC tables and the
-    * rerank are all RELATIONAL and a SQL oracle reproduces the entire
-    * pipeline from the same table (s35 — real ground truth for the
-    * composition the trained-quantizer probes can only golden-gate).
-    * Float discipline throughout: every distance (assign, per-block
-    * code, probe rank, LUT entry, ADC total) rounds to 6 d.p. before
-    * its argmin/cut with ties to the lowest id — the cross-engine
-    * relational-argmin recipe s22/s13 pin.
-    */
-  def ivfAdcTopKDataDefined(embeddings: DataFrame, queryId: Long, k: Int,
-      nCents: Int = 16, m: Int = 8, nProbe: Int = 4,
-      rerank: Int = 4): DataFrame = {
-    require(k >= 1 && rerank >= 1 && nProbe >= 1 && nProbe <= nCents,
-      "need k, rerank >= 1 and 1 <= nProbe <= nCents")
-    val (cents, books) = dataDefinedQuantizers(embeddings, nCents, m)
-    val dsub = cents(0).length / m
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    val probeLists = cents.zipWithIndex
-      .map { case (c, i) => (round6(l2sq(c, qArr)), i) }
-      .sortBy { case (d, i) => (d, i) }.take(nProbe).map(_._2)
-    val v = asDouble(col("embedding"))
-    val probed = oncePerRow(embeddings,
-        "centroid_id" -> nearestCentroidRounded(v, cents))
-      .filter(col("vec_id") =!= queryId &&
-        col("centroid_id").isin(probeLists.toIndexedSeq.map(Int.box): _*))
-    val encoded = oncePerRow(probed,
-      "pq_code" -> graft.functions.Vectors.pqCode(v, books, roundTo = 6))
-    val luts: Array[Array[Double]] = books.zipWithIndex.map { case (book, j) =>
-      val qb = qArr.slice(j * dsub, (j + 1) * dsub)
-      book.map(c => round6(l2sq(c, qb)))
+    withQuery(embeddings, queryId) { qArr =>
+      val qLit = array(qArr.toIndexedSeq.map(lit(_)): _*)
+      val dec = sqDecoded(mins, maxs)
+      val rawAdist = aggregate(zip_with(dec, qLit, (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, x) => acc + x)
+      // roundAdistTo >= 0: the oracle-checked form — ranking on the
+      // 6-d.p.-rounded decoded L2 (ties to the id) absorbs summation-
+      // order ulps, so a SQL twin's unordered per-dim sum ranks
+      // identically (the s22 discipline); the golden probes keep the
+      // raw fold
+      val adist = if (roundAdistTo >= 0) round(rawAdist, roundAdistTo)
+                  else rawAdist
+      adcRerankTail(sqEncode(embeddings, mins, maxs)
+        .filter(col("vec_id") =!= queryId), adist, qArr, k, rerank)
     }
-    val adist =
-      round(graft.functions.Vectors.adcSum(col("pq_code"), luts), 6)
-    adcRerankTail(encoded, adist, qArr, k, rerank)
   }
 
   /** The s22/s35 DATA-DEFINED quantizer pair: coarse centroids are the
@@ -1397,66 +1275,6 @@ object Similarity {
     (cents, books)
   }
 
-  /** 6-d.p. HALF_UP round — the driver-side twin of Spark's `round(x, 6)`
-    * (same decimal HALF_UP of the double), used wherever a driver-side
-    * scalar must equal an engine/oracle-side rounded distance. */
-  private def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Ascending-index left-fold L2² — the fold order every kernel here
-    * shares (bit-identical to the engine-side folds). */
-  private def l2sq(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    s
-  }
-
-  /** [[ivfAdcResidualTopK]] with DATA-DEFINED quantizers — the s35
-    * oracle recipe applied to the RESIDUAL composition (the full Jégou
-    * IVFADC: PQ codes of coarse residuals, per-probed-list ADC tables).
-    * Every stage is relational: rounded-argmin assignment, the exact
-    * in-row residual subtraction (x − c is the same IEEE op on both
-    * engines), rounded per-block code argmins, per-(list, block)
-    * 6-d.p. LUT entries from the query residual q − c_L, the rounded
-    * ADC total, and the exact cosine rerank — so a DuckDB twin
-    * reproduces the ENTIRE residual pipeline from the same table and
-    * the hash gate covers it end to end (the trained-quantizer residual
-    * path keeps its golden gates in spec). The scan kernel is the fused
-    * [[graft.functions.Vectors.adcSumIndexed]] — the per-list table
-    * selects in-row by the candidate's `centroid_id`, never a join.
-    */
-  def ivfAdcResidualTopKDataDefined(embeddings: DataFrame, queryId: Long,
-      k: Int, nCents: Int = 16, m: Int = 8, nProbe: Int = 4,
-      rerank: Int = 4): DataFrame = {
-    require(k >= 1 && rerank >= 1 && nProbe >= 1 && nProbe <= nCents,
-      "need k, rerank >= 1 and 1 <= nProbe <= nCents")
-    val (cents, books) = dataDefinedQuantizers(embeddings, nCents, m)
-    val dsub = cents(0).length / m
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    val probeLists = cents.zipWithIndex
-      .map { case (c, i) => (round6(l2sq(c, qArr)), i) }
-      .sortBy { case (d, i) => (d, i) }.take(nProbe).map(_._2)
-    val encoded = pqEncodeResidual(embeddings, cents, books, roundTo = 6)
-      .filter(col("vec_id") =!= queryId &&
-        col("centroid_id").isin(probeLists.toIndexedSeq.map(Int.box): _*))
-    // per-list ADC tables from the query residual q − c_L, indexed by
-    // centroid id directly (unprobed entries are never read)
-    val luts: Array[Array[Array[Double]]] = cents.indices.map { l =>
-      val qRes = qArr.zip(cents(l)).map { case (x, c) => x - c }
-      books.zipWithIndex.map { case (book, j) =>
-        val qb = qRes.slice(j * dsub, (j + 1) * dsub)
-        book.map(c => round6(l2sq(c, qb)))
-      }
-    }.toArray
-    val adist = round(graft.functions.Vectors.adcSumIndexed(
-      col("pq_code"), col("centroid_id"), luts), 6)
-    adcRerankTail(encoded, adist, qArr, k, rerank)
-  }
-
   /** Matryoshka truncated-dimension retrieval (MRL — Kusupati et al.,
     * NeurIPS 2022): rank by cosine over the FIRST `dPrefix` dimensions
     * only, then exact full-dimension cosine rerank of the
@@ -1478,60 +1296,20 @@ object Similarity {
       dPrefix: Int, rerank: Int = 4): DataFrame = {
     require(k >= 1 && rerank >= 1 && dPrefix >= 1,
       "k, rerank and dPrefix must be at least 1")
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    require(dPrefix <= qArr.length,
-      s"dPrefix $dPrefix exceeds embedding dimension ${qArr.length}")
-    val qPrefix = qArr.take(dPrefix)
-    val qpLit = array(qPrefix.toIndexedSeq.map(lit(_)): _*)
-    val vPrefix = slice(asDouble(col("embedding")), 1, dPrefix)
-    // ascending "distance" for the shared rerank tail: negated rounded
-    // prefix cosine (ties on the id, like every cut here). The +0.0
-    // normalizes a −0.0 round result before negation so a SQL twin
-    // ranking `psim DESC` sees the identical key (the t24 lesson).
-    val adist = -(round(cosine(vPrefix, qpLit), 6) + lit(0.0))
-    adcRerankTail(embeddings.filter(col("vec_id") =!= queryId),
-      adist, qArr, k, rerank)
-  }
-
-  /** Plain PQ top-k with DATA-DEFINED codebooks — [[pqTopK]]'s
-    * composition (whole-corpus ADC code scan, no coarse quantizer)
-    * under the s22/s35 oracle recipe: block-`j`'s codebook is the
-    * `j`-th dsub-slice of the `nCents` lowest-id vectors, per-block
-    * code distances round to 6 d.p. before their argmin (ties to the
-    * lowest entry id), LUT entries and the ADC total round the same
-    * way, and the rerank is the exact 6-d.p. cosine — every stage
-    * relational, so a DuckDB twin reproduces encode → ADC → cut →
-    * rerank end to end. Raw vectors (the s33 rule: cross-engine
-    * normalization is not bit-reproducible). NOT a production fit —
-    * the trained-codebook path is [[pqTopK]] over [[pqCodebooks]],
-    * golden-gated in SimilarityAsOfSpec; the fidelity axis here is the
-    * COMPOSITION, which is identical code either way.
-    */
-  def pqTopKDataDefined(embeddings: DataFrame, queryId: Long, k: Int,
-      nCents: Int = 16, m: Int = 8, rerank: Int = 4): DataFrame = {
-    require(k >= 1 && rerank >= 1, "k and rerank must be at least 1")
-    val (_, books) = dataDefinedQuantizers(embeddings, nCents, m)
-    val dsub = books(0)(0).length
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    val encoded = oncePerRow(embeddings,
-        "pq_code" -> graft.functions.Vectors.pqCode(
-          asDouble(col("embedding")), books, roundTo = 6))
-      .filter(col("vec_id") =!= queryId)
-    val luts: Array[Array[Double]] = books.zipWithIndex.map { case (book, j) =>
-      val qb = qArr.slice(j * dsub, (j + 1) * dsub)
-      book.map(c => round6(l2sq(c, qb)))
+    withQuery(embeddings, queryId) { qArr =>
+      require(dPrefix <= qArr.length,
+        s"dPrefix $dPrefix exceeds embedding dimension ${qArr.length}")
+      val qPrefix = qArr.take(dPrefix)
+      val qpLit = array(qPrefix.toIndexedSeq.map(lit(_)): _*)
+      val vPrefix = slice(asDouble(col("embedding")), 1, dPrefix)
+      // ascending "distance" for the shared rerank tail: negated rounded
+      // prefix cosine (ties on the id, like every cut here). The +0.0
+      // normalizes a −0.0 round result before negation so a SQL twin
+      // ranking `psim DESC` sees the identical key (the t24 lesson).
+      val adist = -(round(cosine(vPrefix, qpLit), 6) + lit(0.0))
+      adcRerankTail(embeddings.filter(col("vec_id") =!= queryId),
+        adist, qArr, k, rerank)
     }
-    val adist =
-      round(graft.functions.Vectors.adcSum(col("pq_code"), luts), 6)
-    adcRerankTail(encoded, adist, qArr, k, rerank)
   }
 
   /** The DATA-DEFINED stand-in for OPQ's learned rotation: a
@@ -1600,30 +1378,30 @@ object Similarity {
     * Degeneracy: nProbe = nLists ∧ rerank·k ≥ N reproduces the exact
     * scan. Pass [[l2Normalized]] inputs so ADC's L2 ordering matches the
     * cosine rerank.
+    *
+    * `roundTo >= 0` is the oracle contract: every distance (assignment,
+    * per-block code, probe rank, LUT entry, ADC total) rounds before its
+    * argmin/cut, ties to the lowest id. With [[dataDefinedQuantizers]]
+    * every stage is relational and a SQL oracle reproduces the entire
+    * pipeline from the same table (s20, s35).
     */
   def ivfAdcTopK(embeddings: DataFrame, queryId: Long, k: Int,
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
-      nProbe: Int = 4, rerank: Int = 4): DataFrame = {
+      nProbe: Int = 4, rerank: Int = 4, roundTo: Int = -1): DataFrame = {
     require(k >= 1 && rerank >= 1 && nProbe >= 1,
       "k, rerank and nProbe must be at least 1")
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    def dist(c: Array[Double]): Double =
-      c.zip(qArr).map { case (x, y) => (x - y) * (x - y) }.sum
-    val probeLists = centroids.zipWithIndex.sortBy { case (c, _) => dist(c) }
-      .take(nProbe).map(_._2)
-    // prune FIRST, encode the survivors: the m×ksub argmin expression
-    // runs only on probed-list rows (on a persisted index both
-    // centroid_id and pq_code are precomputed columns and this is a
-    // partition-pruned scan of the code column alone)
-    val probed = ivfAssign(embeddings, centroids)
-      .filter(col("vec_id") =!= queryId &&
-        col("centroid_id").isin(probeLists.toIndexedSeq.map(Int.box): _*))
-    adcScanRerank(pqEncode(probed, codebooks), qArr, codebooks, k, rerank)
+    withQuery(embeddings, queryId) { qArr =>
+      // prune FIRST, encode the survivors: the m×ksub argmin expression
+      // runs only on probed-list rows (on a persisted index both
+      // centroid_id and pq_code are precomputed columns and this is a
+      // partition-pruned scan of the code column alone)
+      val probed = ivfAssign(embeddings, centroids, roundTo)
+        .filter(col("vec_id") =!= queryId && col("centroid_id").isin(
+          probeLists(centroids, qArr, nProbe, roundTo): _*))
+      adcRerankTail(pqEncode(probed, codebooks, roundTo = roundTo),
+        adcDist(codebooks, qArr, roundTo), qArr, k, rerank)
+    }
   }
 
   /** [[ivfAdcTopK]] over a PERSISTED index — the production read path.
@@ -1646,31 +1424,24 @@ object Similarity {
       nProbe: Int = 4, rerank: Int = 4): DataFrame = {
     require(k >= 1 && rerank >= 1 && nProbe >= 1,
       "k, rerank and nProbe must be at least 1")
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    def dist(c: Array[Double]): Double =
-      c.zip(qArr).map { case (x, y) => (x - y) * (x - y) }.sum
-    val probeLists = centroids.zipWithIndex.sortBy { case (c, _) => dist(c) }
-      .take(nProbe).map(_._2)
-    val cands = index
-      .filter(col("vec_id") =!= queryId &&
-        col("centroid_id").isin(probeLists.toIndexedSeq.map(Int.box): _*))
-      // null-code rows (a NULL embedding at write time) must not be
-      // scored: element_at's null index yields a NULL adist, which
-      // ASC-sorts first and would burn rerank slots
-      .filter(element_at(col("pq_code"), 1).isNotNull)
-      .select(col("vec_id"), rawAdcDist(codebooks, qArr).as("adist"))
-      .filter(col("adist").isNotNull)
-      .orderBy(col("adist").asc, col("vec_id"))
-      .limit(rerank * k)
-    val qLit = array(qArr.toIndexedSeq.map(lit(_)): _*)
-    broadcast(cands).join(embeddings, "vec_id")
-      .select(col("vec_id"), guardedCosine(qArr, qLit).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
+    withQuery(embeddings, queryId) { qArr =>
+      val cands = index
+        .filter(col("vec_id") =!= queryId && col("centroid_id").isin(
+          probeLists(centroids, qArr, nProbe, roundTo = -1): _*))
+        // null-code rows (a NULL embedding at write time) must not be
+        // scored: element_at's null index yields a NULL adist, which
+        // ASC-sorts first and would burn rerank slots
+        .filter(element_at(col("pq_code"), 1).isNotNull)
+        .select(col("vec_id"), adcDist(codebooks, qArr, roundTo = -1).as("adist"))
+        .filter(col("adist").isNotNull)
+        .orderBy(col("adist").asc, col("vec_id"))
+        .limit(rerank * k)
+      val qLit = array(qArr.toIndexedSeq.map(lit(_)): _*)
+      broadcast(cands).join(embeddings, "vec_id")
+        .select(col("vec_id"), guardedCosine(qArr, qLit).as("sim"))
+        .orderBy(col("sim").desc, col("vec_id"))
+        .limit(k)
+    }
   }
 
   /** Append-side of the persisted IVFADC index: encode a delta batch
@@ -2109,44 +1880,36 @@ object Similarity {
     * `centroid_id`. Same two-stage coverage identity and
     * nProbe = nLists ∧ rerank·k ≥ N exact-scan degeneracy as the raw
     * composition; the accuracy gain at equal bytes is the point.
+    *
+    * The scan kernel is the fused
+    * [[graft.functions.Vectors.adcSumIndexed]]: the per-list table
+    * selects in-row by the candidate's `centroid_id`, never a join.
+    * `roundTo >= 0` is [[ivfAdcTopK]]'s oracle contract; every stage,
+    * including the exact in-row residual subtraction (x − c is the same
+    * IEEE op on both engines), is then relational under
+    * [[dataDefinedQuantizers]] (s21, s29).
     */
   def ivfAdcResidualTopK(embeddings: DataFrame, queryId: Long, k: Int,
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
-      nProbe: Int = 4, rerank: Int = 4): DataFrame = {
+      nProbe: Int = 4, rerank: Int = 4, roundTo: Int = -1): DataFrame = {
     require(k >= 1 && rerank >= 1 && nProbe >= 1,
       "k, rerank and nProbe must be at least 1")
-    val qRows = embeddings.filter(col("vec_id") === queryId)
-      .select(asDouble(col("embedding")).as("qv")).limit(1).collect()
-    if (qRows.isEmpty)
-      return embeddings.select(col("vec_id"), lit(0.0).as("sim")).limit(0)
-    val qArr = qRows(0).getSeq[Double](0).toArray
-    def dist(c: Array[Double]): Double =
-      c.zip(qArr).map { case (x, y) => (x - y) * (x - y) }.sum
-    val probeLists = centroids.zipWithIndex.sortBy { case (c, _) => dist(c) }
-      .take(nProbe).map(_._2)
-    val dsub = codebooks(0)(0).length
-    val m = codebooks.length
-    // per-probed-list ADC tables from the query residual q − c_L
-    val lutsLit = array(probeLists.toIndexedSeq.map { lid =>
-      val qRes = qArr.zip(centroids(lid)).map { case (x, c) => x - c }
-      array((0 until m).map { j =>
-        val qBlock = qRes.slice(j * dsub, (j + 1) * dsub)
-        array(codebooks(j).toIndexedSeq.map { c =>
-          lit(c.zip(qBlock).map { case (x, y) => (x - y) * (x - y) }.sum)
-        }: _*)
-      }: _*)
-    }: _*)
-    val probeArr = array(probeLists.toIndexedSeq.map(i => lit(i)): _*)
-    val pos = array_position(probeArr, col("centroid_id")) // 1-based
-    val adist = (1 to m).map { j =>
-      element_at(element_at(element_at(lutsLit, pos.cast("int")), j),
-        element_at(col("pq_code"), j) + 1)
-    }.reduce(_ + _)
-    val probed = pqEncodeResidual(embeddings, centroids, codebooks)
-      .filter(col("vec_id") =!= queryId &&
-        col("centroid_id").isin(probeLists.toIndexedSeq.map(Int.box): _*))
-    adcRerankTail(probed, adist, qArr, k, rerank)
+    withQuery(embeddings, queryId) { qArr =>
+      val probed = probeLists(centroids, qArr, nProbe, roundTo)
+      // per-list ADC tables from the query residual q − c_L, indexed by
+      // centroid id directly (unprobed entries are never read)
+      val luts = centroids.map { c =>
+        adcLuts(codebooks, qArr.zip(c).map { case (x, y) => x - y }, roundTo)
+      }
+      val sum = graft.functions.Vectors.adcSumIndexed(
+        col("pq_code"), col("centroid_id"), luts)
+      adcRerankTail(
+        pqEncodeResidual(embeddings, centroids, codebooks, roundTo = roundTo)
+          .filter(col("vec_id") =!= queryId &&
+            col("centroid_id").isin(probed: _*)),
+        if (roundTo >= 0) round(sum, roundTo) else sum, qArr, k, rerank)
+    }
   }
 
   /** BATCHED IVFADC — the production retrieval read path: a query SET
@@ -2209,7 +1972,7 @@ object Similarity {
           cid.as("cid")))
     val probes = slice(array_sort(probeStructs), 1, nProbe)
     // (2) per-query ADC tables from the literal codebooks — the exact
-    // arithmetic rawAdcDist runs driver-side, element order preserved
+    // arithmetic adcLuts runs driver-side, element order preserved
     val qlut = array((0 until m).map { j =>
       val bookLit = array(codebooks(j).toIndexedSeq.map(c =>
         array(c.toIndexedSeq.map(lit(_)): _*)): _*)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.{QueryDef, Tables}
+import graft.Scratch.{deleteOnExit, deleteQuietly, tempDir}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -36,49 +37,10 @@ object StreamingQueries {
     * sides or the replay silently truncated issue times.
     */
 
-  /** Scratch root for replay artifacts (drop feeds, EPHEMERAL checkpoints,
-    * file-sink outputs — all deleted within the probe or at JVM exit).
-    * The streaming replay cost is dominated by many small fsync-ed files
-    * (WAL + offset log + one state-store delta per partition per batch),
-    * so scratch goes to tmpfs when available (guide §6: put scratch I/O
-    * on the fastest local storage). Production checkpoints live on
-    * durable shared storage and are NOT this path — nothing here
-    * survives the probe by design. Override with SPARK_GRAFT_SCRATCH.
-    */
-  private val scratchRoot: java.nio.file.Path = {
-    val pick = sys.env.get("SPARK_GRAFT_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .orElse {
-        // containers commonly cap /dev/shm at 64 MB — require real
-        // usable space (ADVICE r15) or the feeds/checkpoints ENOSPC
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val usable = try {
-          if (Files.isDirectory(shm) && Files.isWritable(shm))
-            Files.getFileStore(shm).getUsableSpace
-          else 0L
-        } catch { case _: Exception => 0L }
-        if (usable >= (512L << 20)) Some(shm) else None
-      }
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir")))
-    Files.createDirectories(pick)
-    pick
-  }
-
-  private def tempDir(prefix: String): String =
-    Files.createTempDirectory(scratchRoot, prefix).toString
-
-  private def deleteQuietly(dir: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles()
-      if (cs != null) cs.foreach(rec)
-      f.delete(): Unit
-    }
-    try rec(new java.io.File(dir)) catch { case _: Exception => () }
-  }
-
-  private def deleteOnExit(dir: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteQuietly(dir)))
+  // Replay artifacts (drop feeds, EPHEMERAL checkpoints, file-sink
+  // outputs) live under Scratch.root — tmpfs when available, since the
+  // replay cost is dominated by many small fsync-ed files — and are
+  // deleted within the probe or at JVM exit.
 
   private val feedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -1012,14 +974,14 @@ object StreamingQueries {
     // the outcome is batch-boundary independent by construction.
     // Centroids are data-defined (the 16 lowest-id embeddings) so the
     // oracle is the s22 relational argmin; the stream side uses
-    // nearestCentroidRounded (6-d.p. d², lowest-id ties) to match the
-    // oracle's float contract exactly. The feed is double-cast BEFORE
+    // nearestCentroid with roundTo = 6 (6-d.p. d², lowest-id ties) to
+    // match the oracle's float contract exactly. The feed is double-cast BEFORE
     // the JSON drop: double → shortest-repr text → double roundtrips
     // exactly, while float text re-read as double would NOT (the
     // nearest double to "0.4" is not (double)0.4f).
     // Streaming INDEX BUILD — the ingest side of the ANN lifecycle run
     // as a stream: embedding batches arrive, each row is assigned to
-    // its frozen IVF list in-row (st16's nearestCentroidRounded against
+    // its frozen IVF list in-row (st16's rounded nearestCentroid against
     // the data-defined 16-centroid quantizer, whose relational-argmin
     // equivalence st16's oracle proves), and the stream SINKS INTO THE
     // INDEX ITSELF — a parquet file sink partitioned by centroid_id:
@@ -1076,8 +1038,8 @@ object StreamingQueries {
       try withStateShuffle(s) {
         val q = s.readStream.schema(eSchema).parquet(dropDir)
           .select(col("vec_id"), col("embedding"),
-            element_at(centIds, Similarity.nearestCentroidRounded(
-              col("embedding"), cents) + 1).cast("int").as("centroid_id"))
+            element_at(centIds, graft.functions.Vectors.nearestCentroid(
+              col("embedding"), cents, roundTo = 6) + 1).cast("int").as("centroid_id"))
           .writeStream.format("parquet")
           .partitionBy("centroid_id")
           .option("path", idxDir)
@@ -1203,8 +1165,8 @@ object StreamingQueries {
       try withStateShuffle(s) {
         val q = s.readStream.schema(eSchema).parquet(dropDir)
           .select(col("vec_id"),
-            element_at(centIds, Similarity.nearestCentroidRounded(
-              col("embedding"), cents) + 1).cast("int").as("centroid_id"))
+            element_at(centIds, graft.functions.Vectors.nearestCentroid(
+              col("embedding"), cents, roundTo = 6) + 1).cast("int").as("centroid_id"))
           .writeStream.format("memory").queryName(sinkName)
           .outputMode("append")
           .option("checkpointLocation", ckDir)

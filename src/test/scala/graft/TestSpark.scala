@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session for all suites (SURVEY.md §5: local, UTC, small
-  * shuffle fan-out).
+  * shuffle fan-out) — the mains' [[Sessions.local]] recipe with
+  * graft's extensions (production wiring under test), pinned to 4 cores.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions) // production wiring under test
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Sessions.local(cpus = 4, logLevel = "WARN")
 
   val sfDir = "/root/testdata/sf0.001"
   val fixtures = "/root/repo/fixtures/weather"
@@ -27,15 +18,8 @@ object TestSpark {
     * probes' replay dirs).
     */
   def tempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rec(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rec)
-        f.delete(): Unit
-      }
-      try rec(dir.toFile) catch { case _: Exception => () }
-    }))
-    dir.toString
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    Scratch.deleteOnExit(dir)
+    dir
   }
 }

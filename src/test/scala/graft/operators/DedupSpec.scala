@@ -657,4 +657,47 @@ class DedupSpec extends AnyFunSuite {
         s"cluster $cid members split across train/val/test")
     }
   }
+
+  private val families = Seq(HashFamily.Seeded, HashFamily.Portable)
+
+  test("near-dup pipelines never pair wordless documents, for either hash family") {
+    // an empty and a punctuation-only text beside a real near-dup pair:
+    // with no words there is no shingle evidence, yet the seeded MinHash
+    // is all Long.MaxValue sentinels (estimate 1.0 between two such
+    // docs) and the seeded SimHash 0 (hamming 0)
+    val withWordless = docs.unionByName(Seq(
+      (10L, ""),
+      (11L, " ... !!! --- ")
+    ).toDF("doc_id", "text"))
+    val wordless = Set(10L, 11L)
+    families.foreach { f =>
+      val mh = Dedup.minhashNearDups(withWordless, threshold = 0.5, family = f)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val sh = Dedup.simhashNearDups(withWordless, maxHamming = 7, family = f)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(mh.contains((0L, 2L)) && sh.contains((0L, 2L)),
+        s"$f: the real near-dup pair must still be found")
+      assert(!(mh ++ sh).exists(p => wordless(p._1) || wordless(p._2)),
+        s"$f: a wordless document was paired: minhash $mh simhash $sh")
+    }
+  }
+
+  test("verifiedNearDups cuts on the unrounded Jaccard, for either hash family") {
+    // 3-shingles {a b c, b c d} vs {a b c, b c d, c d e}: exact J = 2/3,
+    // whose 6-d.p. round 0.666667 clears a 0.6666668 threshold the
+    // true value misses
+    val pair = Seq((0L, "a b c d"), (1L, "a b c d e")).toDF("doc_id", "text")
+    families.foreach { f =>
+      val cands = Dedup.minhashNearDups(pair, threshold = 0.6666668 * 0.6,
+          family = f)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(cands === Set((0L, 1L)), s"$f: the pair must be an LSH candidate")
+      assert(Dedup.verifiedNearDups(pair, threshold = 0.6666668, family = f)
+        .count() === 0L, s"$f: J = 2/3 passed a 0.6666668 cut")
+      val at = Dedup.verifiedNearDups(pair, threshold = 0.6, family = f)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(at.toSeq === Seq((0L, 1L, 0.666667)),
+        s"$f: the emitted column keeps its 6-d.p. round")
+    }
+  }
 }

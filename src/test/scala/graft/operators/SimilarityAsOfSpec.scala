@@ -1244,8 +1244,8 @@ class SimilarityAsOfSpec extends AnyFunSuite {
         books, nProbe, rerank, roundTo = 6)
       .collect().groupBy(_.getAs[Long]("qid"))
     qids.foreach { qid =>
-      val single = Similarity.ivfAdcTopKDataDefined(emb, qid, k,
-          nCents = 16, m = 8, nProbe = nProbe, rerank = rerank).collect()
+      val single = Similarity.ivfAdcTopK(emb, qid, k, cents, books,
+          nProbe = nProbe, rerank = rerank, roundTo = 6).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val got = batch(qid)
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toSeq
@@ -1258,8 +1258,8 @@ class SimilarityAsOfSpec extends AnyFunSuite {
         k, cents, books, nProbe, rerank, roundTo = 6)
       .collect().groupBy(_.getAs[Long]("qid"))
     qids.foreach { qid =>
-      val single = Similarity.ivfAdcResidualTopKDataDefined(emb, qid, k,
-          nCents = 16, m = 8, nProbe = nProbe, rerank = rerank).collect()
+      val single = Similarity.ivfAdcResidualTopK(emb, qid, k, cents, books,
+          nProbe = nProbe, rerank = rerank, roundTo = 6).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val got = rBatch(qid)
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toSeq

@@ -388,8 +388,8 @@ class WeatherStreamsSpec extends AnyFunSuite {
     val q = spark.readStream.schema(eSchema)
       .option("maxFilesPerTrigger", 1).json(dropDir)
       .select(col("vec_id"),
-        element_at(centIds, Similarity.nearestCentroidRounded(
-          col("embedding"), cents) + 1).cast("int").as("centroid_id"))
+        element_at(centIds, graft.functions.Vectors.nearestCentroid(
+          col("embedding"), cents, roundTo = 6) + 1).cast("int").as("centroid_id"))
       .writeStream.format("memory").queryName("st16_contract")
       .outputMode("append")
       .option("checkpointLocation", ckDir)
@@ -400,8 +400,8 @@ class WeatherStreamsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val batch = emb
       .select(col("vec_id"),
-        element_at(centIds, Similarity.nearestCentroidRounded(
-          Similarity.asDouble(col("embedding")), cents) + 1)
+        element_at(centIds, graft.functions.Vectors.nearestCentroid(
+          Similarity.asDouble(col("embedding")), cents, roundTo = 6) + 1)
           .cast("int").as("centroid_id"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(streamed.size === emb.count())

@@ -1,0 +1,75 @@
+#!/usr/bin/env python3
+"""Plan-identity check: diff two graft.PlanDump output directories.
+
+    python3 tools/plandiff.py A B [name-prefix ...]
+
+A and B are directories of `<query>_<suffix>.txt` files, as written by
+`sbt "runMain graft.PlanDump <tag> <suffix> <q1,q2,...> [sfDir]"` (into
+plans/<tag>/) from two builds of the engine. Files are paired by name.
+Before comparing, every plan is normalized for the identifiers that
+change from one JVM (or one run) to the next without the plan changing:
+
+  - expression ids           `name#123`            -> `name#N`
+  - plan ids                 `plan_id=7`           -> `plan_id=N`
+  - RDD / checkpoint ids     `MapPartitionsRDD[42]`, `rdd_42`, `RDD 42`
+  - lambda variable counters `lambda x_17`          -> `lambda x_N`
+  - JVM identity hashes      `[D@1a2b3c`            -> `[D@H`
+
+Prints IDENTICAL or a unified diff per pair, lists files present on one
+side only, and exits 1 if any pair differs or is unpaired.
+"""
+import difflib
+import os
+import re
+import sys
+
+RULES = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
+    (re.compile(r"\brdd_\d+(_\d+)?"), "rdd_N"),
+    (re.compile(r"\bRDD \d+"), "RDD N"),
+    (re.compile(r"\b(lambda [A-Za-z]+)_\d+"), r"\1_N"),
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
+]
+
+
+def normalize(text):
+    for pat, rep in RULES:
+        text = pat.sub(rep, text)
+    return text.splitlines(keepends=True)
+
+
+def plans(d, prefixes):
+    return {f for f in os.listdir(d)
+            if f.endswith(".txt") and
+            (not prefixes or any(f.startswith(p) for p in prefixes))}
+
+
+def main(argv):
+    if len(argv) < 3:
+        print(__doc__.strip())
+        return 2
+    a, b, prefixes = argv[1], argv[2], argv[3:]
+    pa, pb = plans(a, prefixes), plans(b, prefixes)
+    bad = 0
+    for f in sorted(pa ^ pb):
+        print(f"ONLY IN {a if f in pa else b}: {f}")
+        bad += 1
+    for f in sorted(pa & pb):
+        with open(os.path.join(a, f)) as fa, open(os.path.join(b, f)) as fb:
+            la, lb = normalize(fa.read()), normalize(fb.read())
+        if la == lb:
+            print(f"IDENTICAL {f}")
+            continue
+        bad += 1
+        print(f"DIFFERS   {f}")
+        sys.stdout.writelines(difflib.unified_diff(
+            la, lb, os.path.join(a, f), os.path.join(b, f), n=1))
+    print(f"{len(pa & pb) - (bad - len(pa ^ pb))} identical, {bad} differ "
+          "or unpaired")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
