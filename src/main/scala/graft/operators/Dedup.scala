@@ -4,6 +4,8 @@ import graft.functions.{Sketches, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Barriers.oncePerRow
+
 /** Deduplication operators for training-data pipelines (SURVEY.md §2.10):
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard.
   *
@@ -193,8 +195,12 @@ object Dedup {
       family: HashFamily = HashFamily.Seeded): DataFrame = {
     val blocks = maxHamming + 1
     val width = 64 / blocks
-    val sigs = sketched(docs, idCol, textCol, family.simhash(col(textCol)))
-      .select(col("id"), family.simhash64(col("sig")).as("sig"))
+    // the signature sits behind a oncePerRow barrier: as a plain alias,
+    // the isnotnull(v) Catalyst infers from the (i, v) join key is pushed
+    // below it with the kernel substituted in, so the scan Filter and the
+    // Project would each evaluate the SimHash kernel
+    val sigs = oncePerRow(sketched(docs, idCol, textCol, family.simhash(col(textCol))),
+      "sig" -> family.simhash64(col("sig")))
     val blocked = sigs
       .select(col("id"), col("sig"),
         explode(sequence(lit(0), lit(blocks - 1))).as("i"))

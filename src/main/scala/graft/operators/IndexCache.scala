@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch.deleteQuietly
 import org.apache.spark.sql.SparkSession
 
 /** Process-wide memo of DETERMINISTIC quantizer fits plus their persisted
@@ -158,7 +159,7 @@ object IndexCache {
       val winner = gens.headOption.map(_.getName).getOrElse("")
       val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
       all.filter(f => f.getName != winner && f.lastModified < cutoff)
-        .foreach(deleteRecursively)
+        .foreach(f => deleteQuietly(f.getPath))
       gens.headOption.map(_.getPath)
     }
     if (ok(idxDir)) idxDir
@@ -188,18 +189,12 @@ object IndexCache {
               } else idxDir
             }
           }
-        } finally deleteRecursively(tmp) // no-op after a successful rename
+        } finally deleteQuietly(tmp.getPath) // no-op after a successful rename
       // never serve a directory we cannot prove complete — fail loudly
       // instead of returning partial ANN results
       require(ok(served),
         s"persistedIndex could not produce a complete index at $served")
       served
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
   }
 }

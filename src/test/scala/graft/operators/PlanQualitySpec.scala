@@ -311,6 +311,28 @@ class PlanQualitySpec extends AnyFunSuite {
       s"expected the two oncePerRow Generate barriers, found $generates")
   }
 
+  test("d4 SimHash: the signature kernel stays behind its Generate barrier (never in a Filter)") {
+    // Regression gate for the oncePerRow barrier in simhashNearDups:
+    // without it, the isnotnull(v) Catalyst infers from the (i, v) join
+    // key is pushed below the signature projection with the kernel
+    // substituted in, so every scan Filter re-evaluates the SimHash
+    // (measured: 4 Filter conditions at sf0.01, 2-3 evaluations per
+    // document).
+    import graft.functions.{SimHashPortableExpr, SimHashTextExpr}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
+    val opt = SparkEntry.queries("d4_simhash_neardup")(spark, d)
+      .queryExecution.optimizedPlan
+    val kernelsInFilters = opt.collect { case f: LFilter =>
+      f.condition.collect {
+        case k: SimHashPortableExpr => k
+        case k: SimHashTextExpr => k
+      }.size
+    }.sum
+    assert(kernelsInFilters === 0,
+      s"SimHash kernel inlined into $kernelsInFilters Filter conditions — " +
+        s"the oncePerRow barrier regressed:\n$opt")
+  }
+
   test("s23 data-defined batch: ONE DPP-pruned scan of the persisted dd index serves the query set") {
     // the oracle-checked probe must keep the production plan shape the
     // trained-path gate pins: the rounded arithmetic (roundTo = 6) sits

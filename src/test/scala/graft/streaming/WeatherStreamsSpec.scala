@@ -21,37 +21,17 @@ class WeatherStreamsSpec extends AnyFunSuite {
 
   test("streaming replay anatomy: the st2-shaped AvailableNow run is few batches, lifecycle-dominated") {
     // evidence for the bench ledger's "streaming probes are
-    // checkpoint/replay-structural" claim: run the exact st2 shape
-    // (the probes' OWN feed builders and state-partition pin, json
-    // feeds -> stream-stream interval join -> memory sink) once and
-    // read the per-batch duration breakdown off the progress events.
+    // checkpoint/replay-structural" claim: run st2's own replay (its
+    // parquet feed drops -> stream-stream interval join -> memory sink,
+    // through the probes' replay harness) and read the per-batch
+    // duration breakdown off the progress events.
     // Also a regression gate: an accidental per-file batching
     // (maxFilesPerTrigger = 1 over the 4+2 feed files would run 5
     // micro-batches) must trip the <= 3 bound — the healthy count is
-    // exactly 2 (data + watermark-advance).
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = graft.Tables.events(spark, TestSpark.sfDir)
-    val fDir = TestSpark.tempDir("graft_anat_f")
-    StreamingQueries.revisionFeed(ev).repartition(4).write
-      .mode("overwrite").parquet(fDir)
-    val oDir = TestSpark.tempDir("graft_anat_o")
-    StreamingQueries.observationFeed(ev).repartition(2).write
-      .mode("overwrite").parquet(oDir)
-    val ck = TestSpark.tempDir("graft_anat_ck")
-    val q = StreamingQueries.withStateShuffle(spark) {
-      val obsStream = spark.readStream
-        .schema(StreamingQueries.ObsEnc.schema)
-        .parquet(oDir)
-        .as[WeatherStreams.Observation](StreamingQueries.ObsEnc)
-      val q = WeatherStreams.forecastVsObserved(
-          StreamingQueries.revisionStream(spark, fDir), obsStream)
-        .writeStream.format("memory").queryName("anat_sink")
-        .outputMode("append").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q
-    }
-    val prog = q.recentProgress
+    // exactly 2 (data + watermark-advance) — and the join state must
+    // run on the harness's pinned 8 state partitions.
+    val replayed = StreamingQueries.intervalJoinReplay(spark, TestSpark.sfDir)
+    val prog = replayed.query.recentProgress
     info(s"batches: ${prog.length}")
     prog.foreach { p =>
       info(s"batch ${p.batchId}: rows=${p.numInputRows} " +
@@ -60,7 +40,10 @@ class WeatherStreamsSpec extends AnyFunSuite {
     assert(prog.length <= 3,
       s"AvailableNow replay ran ${prog.length} micro-batches — the " +
         "st-probe bench cost model assumes data + watermark-advance")
-    assert(spark.table("anat_sink").count() > 0)
+    val ops = replayed.query.lastProgress.stateOperators
+    assert(ops.nonEmpty && ops.forall(_.numShufflePartitions == 8),
+      s"state partitions: ${ops.map(_.numShufflePartitions).toSeq}")
+    assert(replayed.rows.count() > 0)
   }
 
   test("stream-stream interval join pairs observations with their valid-hour forecast") {
