@@ -1024,56 +1024,50 @@ object Dedup {
     * representative, as in "keep lowest id per cluster" dedup policy).
     *
     * Algorithm: iterative minimum-label propagation — each round every
-    * node adopts the min label in its neighborhood (one shuffle join +
-    * one aggregation per round), stopping when a round changes nothing.
-    * Rounds needed = O(log n) on typical near-dup graphs (star-shaped
-    * components); `maxRounds` bounds pathological chains. This is the
-    * join-based formulation of Kiveris et al.'s "Connected Components in
-    * MapReduce" — no GraphX dependency, plain shuffles that AQE can size.
-    * Each round is localCheckpoint'ed through [[Iterate]] (jobs described
-    * "cc: round r"): the plan re-roots at materialized partitions, so
-    * neither the recompute chain nor the logical plan tree grows with the
-    * iteration count. The result reads the last round's checkpoint; free
-    * it with [[Iterate.release]].
+    * node adopts the min label in its neighborhood, stopping when a
+    * round changes nothing. Rounds needed = O(log n) on typical near-dup
+    * graphs (star-shaped components); `maxRounds` bounds pathological
+    * chains. The round is Pregel's message passing (Malewicz et al.,
+    * SIGMOD 2010) over a state that carries each node's adjacency list,
+    * so it needs no join: no GraphX dependency, one shuffle that AQE can
+    * size. Each round is localCheckpoint'ed through [[Iterate]] (jobs
+    * described "cc: round r"): the plan re-roots at materialized
+    * partitions, so neither the recompute chain nor the logical plan
+    * tree grows with the iteration count. The result reads the last
+    * round's checkpoint; free it with [[Iterate.release]].
     */
   def clusters(pairs: DataFrame, maxRounds: Int = 20,
       idA: String = "id_a", idB: String = "id_b"): DataFrame =
       Iterate.scope { sc =>
-    // symmetric edge list (both directions) — neighborhoods see all peers.
-    // The input pair pipeline (often a full MinHash run) is cached BEFORE
-    // the union so the reversed branch reuses it instead of recomputing.
-    val fwd = sc.cache(pairs.select(col(idA).as("src"), col(idB).as("dst")))
-    val edges = sc.cache(
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    val labels0 = sc.checkpoint(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    // AQE stays ON for the loop: measured OFF, the checkpointed labels
-    // side carries no size estimate, the static planner falls back to
-    // SortMergeJoin and a round costs ~0.5 s against ~0.05 s.
-    // convergence probe: one scan-and-count aggregate over the round's
-    // checkpoint (r16); under AQE its exchange runs as a second job
-    def unchanged(next: DataFrame): Boolean =
-      next.agg(count(when(col("__chg"), lit(1)))).head.getLong(0) == 0L
-    val (labels, converged) = sc.rounds("cc", labels0, maxRounds,
-        until = unchanged) { (labels, _) =>
-      // ONE checkpointed plan per round: each id's new label is the min
-      // over {own label} ∪ {neighbor labels}, the old label rides along
-      // tagged (every id appears once in `labels`, so min(tagged)
-      // recovers it) and `__chg` flags an improvement. The union + one
-      // groupBy has no node-sided join, so AQE plans no driver-blocking
-      // broadcast builds per round (s12's 16-round graph: 117 → ~50
-      // jobs). Pointer-jumping hops and per-round broadcast gates were
-      // both measured slower on that graph: fewer rounds, dearer rounds.
-      labels.select(col("id"), col("label").as("l"), lit(true).as("__s"))
-        .unionAll(edges
-          .join(labels.select(col("id").as("dst"), col("label").as("l")),
-            Seq("dst"))
-          .select(col("src").as("id"), col("l"), lit(false).as("__s")))
+    // round state (id, label, nbrs): every node of the symmetric edge
+    // list with its adjacency list, built once from one read of the pair
+    // pipeline (often a full MinHash run)
+    val state0 = sc.checkpoint(pairs
+      .select(explode(array(
+        struct(col(idA).as("id"), col(idB).as("nbr")),
+        struct(col(idB).as("id"), col(idA).as("nbr")))).as("e"))
+      .groupBy(col("e.id").as("id"))
+      .agg(collect_set(col("e.nbr")).as("nbrs"))
+      .select(col("id"), col("id").as("label"), col("nbrs")))
+    val noNbrs = lit(null).cast(state0.schema("nbrs").dataType)
+    val (labels, converged) = sc.rounds("cc", state0, maxRounds,
+        observe = Seq(count(when(col("__chg"), lit(1)))),
+        until = _.getLong(0) == 0L) { (state, _) =>
+      // each node's own row (the only one with `nbrs`, so its old label
+      // is the min over rows with nbrs) plus one label message per
+      // neighbor, into ONE groupBy: the new label is the min over
+      // {own label} ∪ {neighbor labels}, the adjacency list rides along
+      // and `__chg` flags an improvement. collect_list keeps the
+      // aggregate an ObjectHashAggregate. Pointer-jumping hops were
+      // measured slower on s12's graph: fewer rounds, dearer rounds.
+      state.select(col("id"), col("label"), col("nbrs"))
+        .unionAll(state.select(explode(col("nbrs")).as("id"), col("label"),
+          noNbrs.as("nbrs")))
         .groupBy("id")
-        .agg(min(col("l")).as("label"),
-          min(when(col("__s"), col("l"))).as("__old"))
-        .select(col("id"), col("label"),
+        .agg(min(col("label")).as("label"),
+          min(when(col("nbrs").isNotNull, col("label"))).as("__old"),
+          flatten(collect_list(col("nbrs"))).as("nbrs"))
+        .select(col("id"), col("label"), col("nbrs"),
           (col("label") < col("__old")).as("__chg"))
     }
     // Plain min-propagation needs O(diameter) rounds — O(log n) holds for

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over relational edge lists — join-based power
@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *    labelPropagation run a FIXED round count — determinism across
   *    engines and no per-round driver action beyond the checkpoint.
   *    bfsHops stops when the frontier drains and kCore when the edge set
-  *    stops shrinking, each paying a driver probe per round for it.
+  *    stops shrinking, each read off the round's own checkpoint job
+  *    (`Iterate.Scope.rounds` observes it), so no round runs a probe.
   */
 object Graph {
 
@@ -259,9 +260,8 @@ object Graph {
     * nodes, and stops when the frontier drains or `maxHops` is reached.
     * Per-round cost is |frontier-adjacent edges|; total work is O(m)
     * across all rounds, rounds are bounded by the graph's diameter.
-    * Each round checkpoints its frontier, and the drain check is
-    * `isEmpty` on that checkpoint: one job a round, where a count
-    * aggregate runs two under AQE (its exchange is a job of its own).
+    * Each round checkpoints its frontier, and the drain check is the
+    * frontier's size as observed by that checkpoint job.
     */
   def bfsHops(edges: DataFrame, source: Long, maxHops: Int = 10)
       : DataFrame = Iterate.scope { sc =>
@@ -285,7 +285,8 @@ object Graph {
     val bcN = bcUnder(e.count(), 32)
     var visited = start
     val (last, drained) = sc.rounds("bfsHops", start, maxHops,
-        until = _.isEmpty, retain = true) { (frontier, r) =>
+        observe = Seq(count(lit(1))), until = _.getLong(0) == 0L,
+        retain = true) { (frontier, r) =>
       if (r > 0) visited = visited.unionByName(frontier)
       e.join(bcN(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
@@ -387,14 +388,15 @@ object Graph {
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct())
     var nEdges = e0.count()
-    def unchanged(next: DataFrame): Boolean = {
-      val n = next.count()
+    def unchanged(observed: Row): Boolean = {
+      val n = observed.getLong(0)
       val same = n == nEdges
       nEdges = n
       same
     }
+    // the surviving edge count is observed by the round's checkpoint job
     val (core, stable) = sc.rounds("kCore", e0, maxRounds,
-        until = unchanged) { (cur, _) =>
+        observe = Seq(count(lit(1))), until = unchanged) { (cur, _) =>
       // keep is bounded by 2·|edges| nodes: under the budget both semi
       // joins broadcast it, so the surviving edge set is filtered
       // map-side instead of being re-shuffled twice per peeling round

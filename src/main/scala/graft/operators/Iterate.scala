@@ -1,10 +1,12 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** The checkpoint lifecycle of the iterative operators, written once.
   * Iterative plans re-root every round at `localCheckpoint`ed partitions
@@ -18,7 +20,7 @@ object Iterate {
 
   /** Run `body` with a fresh [[Scope]]. On exit its checkpoints are
     * released unless they back the returned value (when that is a
-    * DataFrame), and its cached relations are unpersisted. */
+    * DataFrame). */
   def scope[T](body: Scope => T): T = {
     val s = new Scope
     var keep = Set.empty[Int]
@@ -41,10 +43,9 @@ object Iterate {
   private def backing(ds: Dataset[_]): Seq[RDD[_]] =
     ds.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 
-  /** Checkpoints and cached relations registered for one [[scope]]. */
+  /** Checkpoints registered for one [[scope]]. */
   final class Scope private[Iterate] {
     private val held = ArrayBuffer[RDD[_]]()
-    private val cached = ArrayBuffer[DataFrame]()
 
     /** `df.localCheckpoint()`, released at scope exit. */
     def checkpoint(df: DataFrame): DataFrame = {
@@ -53,22 +54,21 @@ object Iterate {
       c
     }
 
-    /** `df.cache()`, always unpersisted at scope exit. */
-    def cache(df: DataFrame): DataFrame = {
-      cached += df
-      df.cache()
-    }
-
     /** Up to `maxRounds` rounds of `next = checkpoint(step(cur, r))` from
       * the checkpoint `init`, stopping after the first round where
-      * `until(next)` holds; round r's jobs are described "`op`: round r".
-      * After each round the previous round's checkpoints — its state and
-      * any the step took — are released, unless `retain` keeps them to
-      * scope exit for a caller holding a lazy union of the round states.
-      * Returns the last state and whether `until` stopped the loop.
+      * `until(observed)` holds; round r's jobs are described "`op`:
+      * round r". `observed` is the row of the `observe` aggregates over
+      * the step's output (empty without any): an `Observation` that the
+      * round's own checkpoint job fills, so convergence costs no probe
+      * job. After each round the previous round's checkpoints — its
+      * state and any the step took — are released, unless `retain` keeps
+      * them to scope exit for a caller holding a lazy union of the round
+      * states. Returns the last state and whether `until` stopped the
+      * loop.
       */
     def rounds(op: String, init: DataFrame, maxRounds: Int,
-        until: DataFrame => Boolean = _ => false, retain: Boolean = false)(
+        observe: Seq[Column] = Nil, until: Row => Boolean = _ => false,
+        retain: Boolean = false)(
         step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
       val ctx = init.sparkSession.sparkContext
       val desc = ctx.getLocalProperty("spark.job.description")
@@ -80,8 +80,16 @@ object Iterate {
         while (!stop && r < maxRounds) {
           ctx.setJobDescription(s"$op: round $r")
           val mark = held.length
-          val next = checkpoint(step(cur, r))
-          stop = until(next)
+          val out = step(cur, r)
+          val obs = Observation()
+          val next = checkpoint(
+            if (observe.isEmpty) out
+            else out.observe(obs, observe.head, observe.tail: _*))
+          // the listener bus hands the metrics over after the job ends;
+          // the wait is bounded, so a lost event fails instead of hanging
+          stop = until(
+            if (observe.isEmpty) Row.empty
+            else Await.result(obs.future, 10.minutes))
           // this round's checkpoints, taken before `free` shortens `held`
           val fresh = held.drop(mark).toSeq
           if (!retain) free(previous)
@@ -98,9 +106,7 @@ object Iterate {
       held --= rdds
     }
 
-    private[Iterate] def close(keep: Set[Int]): Unit = {
+    private[Iterate] def close(keep: Set[Int]): Unit =
       free(held.filterNot(r => keep(r.id)).toSeq)
-      cached.foreach(_.unpersist())
-    }
   }
 }

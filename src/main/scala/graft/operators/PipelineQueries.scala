@@ -1366,6 +1366,7 @@ object PipelineQueries {
         |                                   CAST(b.embedding AS DOUBLE[])), 6) >= 0.3
         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       Similarity.nearDupPairs(Tables.embeddings(s, d), idCap = 200L, threshold = 0.3)
+        .orderBy("id_a", "id_b")
     },
 
     // SemDeDup end-to-end (Similarity.semanticDedup): embedding

@@ -208,7 +208,9 @@ object Similarity {
   /** All pairs with cosine ≥ `threshold` among vec_id < `idCap` — the
     * embedding near-dup probe. Bounded cross join (idCap² pairs) used as a
     * correctness oracle; the scale path is [[annBuckets]] + join within
-    * buckets.
+    * buckets. Unordered: under AQE a sort here costs a range-partition
+    * sample job that recomputes the whole cosine sweep, and the
+    * clustering consumers never read the order.
     */
   def nearDupPairs(embeddings: DataFrame, idCap: Long, threshold: Double): DataFrame = {
     val e = embeddings.filter(col("vec_id") < idCap)
@@ -224,7 +226,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         round(cosine(col("va"), col("vb")), 6).as("sim"))
       .filter(col("sim") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** SemDeDup (Abbas et al., arXiv:2303.09540): semantic deduplication

@@ -1,8 +1,14 @@
 package graft.operators
 
 import graft.{SparkEntry, TestSpark}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.max
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** The checkpoint lifecycle of the iterative operators: no RDD an
   * operator call creates may stay persisted once its result is collected
@@ -26,6 +32,27 @@ class IterateSpec extends AnyFunSuite {
     val out = df
     out.collect()
     Iterate.release(out)
+  }
+
+  /** The SQL execution of every job `run` starts in a round of `op`,
+    * by round: jobs are described "`op`: round r". A convergence probe
+    * is a query of its own, so it shows as a second execution. */
+  private def roundJobs(op: String)(run: => Unit): Map[String, Seq[String]] = {
+    val ctx = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).flatMap(p =>
+          Option(p.getProperty(k))).getOrElse("")
+        jobs.add((prop("spark.job.description"), prop("spark.sql.execution.id")))
+        ()
+      }
+    }
+    ctx.addSparkListener(listener)
+    try { run; TestListenerBus.drain(ctx) }
+    finally ctx.removeSparkListener(listener)
+    jobs.asScala.toSeq.filter(_._1.startsWith(s"$op: round "))
+      .groupMap(_._1)(_._2)
   }
 
   private def weighted = Seq(("a", "hub", 1.0), ("b", "hub", 3.0),
@@ -70,6 +97,35 @@ class IterateSpec extends AnyFunSuite {
     }
   }
 
+  test("a connected-components round is two jobs of one query, rounds unchanged") {
+    val rounds = roundJobs("cc")(collectAndRelease(Dedup.clusters(
+      path.toDF("id_a", "id_b"), maxRounds = 15)))
+    // label 1 takes 11 rounds to cross the 12-node chain, and one more
+    // round sees no change
+    assert(rounds.keySet === (0 to 11).map(r => s"cc: round $r").toSet)
+    rounds.foreach { case (round, execs) =>
+      assert(execs.size === 2, s"$round ran ${execs.size} jobs")
+      assert(execs.distinct.size === 1 && execs.head.nonEmpty,
+        s"$round ran ${execs.distinct.size} queries")
+    }
+  }
+
+  // kCore peels node 5, then node 4, then sees no change; bfsHops
+  // reaches {2, 3}, {4}, {5}, then an empty frontier
+  Seq[(String, Int, () => DataFrame)](
+    ("kCore", 3, () => Graph.kCore(graph, k = 2)),
+    ("bfsHops", 4, () => Graph.bfsHops(graph, source = 1L))
+  ).foreach { case (op, nRounds, run) =>
+    test(s"$op observes convergence in its rounds: no probe job") {
+      val rounds = roundJobs(op)(collectAndRelease(run()))
+      assert(rounds.size === nRounds, s"rounds: ${rounds.keys}")
+      rounds.foreach { case (round, execs) =>
+        assert(execs.distinct.size === 1 && execs.head.nonEmpty,
+          s"$round ran ${execs.distinct.size} queries")
+      }
+    }
+  }
+
   test("clusters releases its caches and checkpoints when it does not converge") {
     assert(leftover(intercept[IllegalStateException](
       Dedup.clusters(path.toDF("id_a", "id_b"), maxRounds = 3))) === Nil)
@@ -106,10 +162,11 @@ class IterateSpec extends AnyFunSuite {
         result = Iterate.scope { sc =>
           val (last, stopped) = sc.rounds("count up",
               sc.checkpoint(Seq(0L).toDF("v")), maxRounds = 6,
-              until = df => {
+              observe = Seq(max($"v")),
+              until = observed => {
                 seen += ctx.getLocalProperty("spark.job.description")
                 held += ctx.getPersistentRDDs.keys.count(_ > before)
-                df.head.getLong(0) == 4L
+                observed.getLong(0) == 4L
               }) { (cur, _) =>
             val step = (1 to extra).foldLeft(cur)((df, _) => sc.checkpoint(df))
             step.select(($"v" + 1L).as("v"))

@@ -478,6 +478,13 @@ class PartitioningSpec extends AnyFunSuite {
     }
   }
 
+  /** Deletes every index-cache dir a spec of `kind` created: the base
+    * path, its `__r` generations and any build leftover. */
+  private def dropIndexCache(kind: String): Unit =
+    Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith(s"graft_idxcache_$kind"))
+      .foreach(f => graft.Scratch.deleteQuietly(f.getPath))
+
   test("IndexCache corrupt-leftover repair promotes a fresh generation, never mutates the occupied path") {
     // Simulate the /tmp-reaper scenario: a completed cache entry loses
     // its _SUCCESS marker but keeps data files. A JVM that resolved the
@@ -485,38 +492,40 @@ class PartitioningSpec extends AnyFunSuite {
     // files, so the repair must NOT delete+rename over the base path —
     // it must serve a fresh generation directory and leave the corrupt
     // one byte-for-byte intact.
-    val src = graft.TestSpark.tempDir("graft_idxcache_src")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(src, "data.bin"), Array[Byte](1, 2, 3))
-    def build(p: String): Unit = {
-      val d = new java.io.File(p)
-      assert(d.mkdirs() || d.isDirectory)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(p, "part-00000"), Array[Byte](9))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(p, "_SUCCESS"), Array.empty[Byte])
-    }
     val kind = "spec_repair_" + java.util.UUID.randomUUID().toString.take(8)
-    val first = IndexCache.persistedIndex(kind, src, "fp")(build)
-    assert(new java.io.File(first, "_SUCCESS").exists())
-    // reaper eats the marker; a sentinel marks the reader-held files
-    assert(new java.io.File(first, "_SUCCESS").delete())
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(first, "reader-held"), Array[Byte](7))
-    val repaired = IndexCache.persistedIndex(kind, src, "fp")(build)
-    assert(repaired !== first,
-      "repair must not serve (or overwrite) the corrupt base path")
-    assert(new java.io.File(repaired, "_SUCCESS").exists() &&
-      new java.io.File(repaired, "part-00000").exists())
-    assert(new java.io.File(first, "reader-held").exists() &&
-      new java.io.File(first, "part-00000").exists(),
-      "corrupt base directory must remain untouched for in-flight readers")
-    // later calls REDISCOVER the promoted generation: same path back,
-    // no rebuild, no fresh __r directory per call
-    val again = IndexCache.persistedIndex(kind, src, "fp") { _ =>
-      fail("a completed repair generation exists — must not rebuild")
-    }
-    assert(again === repaired)
+    try {
+      val src = graft.TestSpark.tempDir("graft_idxcache_src")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(src, "data.bin"), Array[Byte](1, 2, 3))
+      def build(p: String): Unit = {
+        val d = new java.io.File(p)
+        assert(d.mkdirs() || d.isDirectory)
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(p, "part-00000"), Array[Byte](9))
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(p, "_SUCCESS"), Array.empty[Byte])
+      }
+      val first = IndexCache.persistedIndex(kind, src, "fp")(build)
+      assert(new java.io.File(first, "_SUCCESS").exists())
+      // reaper eats the marker; a sentinel marks the reader-held files
+      assert(new java.io.File(first, "_SUCCESS").delete())
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(first, "reader-held"), Array[Byte](7))
+      val repaired = IndexCache.persistedIndex(kind, src, "fp")(build)
+      assert(repaired !== first,
+        "repair must not serve (or overwrite) the corrupt base path")
+      assert(new java.io.File(repaired, "_SUCCESS").exists() &&
+        new java.io.File(repaired, "part-00000").exists())
+      assert(new java.io.File(first, "reader-held").exists() &&
+        new java.io.File(first, "part-00000").exists(),
+        "corrupt base directory must remain untouched for in-flight readers")
+      // later calls REDISCOVER the promoted generation: same path back,
+      // no rebuild, no fresh __r directory per call
+      val again = IndexCache.persistedIndex(kind, src, "fp") { _ =>
+        fail("a completed repair generation exists — must not rebuild")
+      }
+      assert(again === repaired)
+    } finally dropIndexCache(kind)
   }
 
   test("IndexCache repair race: two promoted generations converge on the first; in-flight reads survive; stale loser sweeps") {
@@ -528,55 +537,57 @@ class PartitioningSpec extends AnyFunSuite {
     // losing generation is touched while young — A's in-flight scan of
     // the base and B's own serve of its loser must both complete;
     // (3) once past the age cutoff the losing generation is swept.
-    val spark = graft.TestSpark.spark
-    import spark.implicits._
-    val src = graft.TestSpark.tempDir("graft_idxcache_race_src")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(src, "data.bin"), Array[Byte](1, 2, 3))
-    def build(p: String): Unit =
-      Seq((1L, 10), (2L, 20)).toDF("vec_id", "centroid_id")
-        .write.mode("overwrite").parquet(p)
     val kind = "spec_race_" + java.util.UUID.randomUUID().toString.take(8)
-    val base = IndexCache.persistedIndex(kind, src, "fp")(build)
-    // JVM A resolves the base and holds a lazy scan over it
-    val inFlight = spark.read.parquet(base)
-    // reaper corrupts; JVM A's repair promotes generation A
-    assert(new java.io.File(base, "_SUCCESS").delete())
-    val genA = IndexCache.persistedIndex(kind, src, "fp")(build)
-    assert(genA !== base)
-    // JVM B lost the race: its complete generation sorts AFTER A
-    // (simulated directly — persistedIndex in this JVM would rediscover
-    // A instead of promoting)
-    val genB = base + "__rzzzzzzzz-loser"
-    build(genB)
-    assert(new java.io.File(genB, "_SUCCESS").exists())
-    // (1) rediscovery converges on the first generation, not B's
-    val served = IndexCache.persistedIndex(kind, src, "fp") { _ =>
-      fail("completed generations exist — must not rebuild")
-    }
-    assert(served === genA, s"expected convergence on $genA, got $served")
-    // (2) young loser untouched (B may still be serving it), base
-    // untouched (A's pre-corruption scan must complete)
-    assert(new java.io.File(genB, "_SUCCESS").exists(),
-      "young losing generation must survive rediscovery")
-    assert(inFlight.count() === 2L,
-      "in-flight scan of the corrupted base path must still complete")
-    assert(spark.read.parquet(genB).count() === 2L,
-      "the losing promoter's own serve path must still read")
-    // (3) past the age cutoff the loser sweeps on the next rediscovery
-    def backdate(f: java.io.File): Unit = {
-      f.setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
-      ()
-    }
-    backdate(new java.io.File(genB))
-    val after = IndexCache.persistedIndex(kind, src, "fp") { _ =>
-      fail("completed generations exist — must not rebuild")
-    }
-    assert(after === genA)
-    assert(!new java.io.File(genB).exists(),
-      "stale losing generation must be swept on rediscovery")
-    assert(new java.io.File(genA, "_SUCCESS").exists(),
-      "the winning generation must never be swept")
+    try {
+      val spark = graft.TestSpark.spark
+      import spark.implicits._
+      val src = graft.TestSpark.tempDir("graft_idxcache_race_src")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(src, "data.bin"), Array[Byte](1, 2, 3))
+      def build(p: String): Unit =
+        Seq((1L, 10), (2L, 20)).toDF("vec_id", "centroid_id")
+          .write.mode("overwrite").parquet(p)
+      val base = IndexCache.persistedIndex(kind, src, "fp")(build)
+      // JVM A resolves the base and holds a lazy scan over it
+      val inFlight = spark.read.parquet(base)
+      // reaper corrupts; JVM A's repair promotes generation A
+      assert(new java.io.File(base, "_SUCCESS").delete())
+      val genA = IndexCache.persistedIndex(kind, src, "fp")(build)
+      assert(genA !== base)
+      // JVM B lost the race: its complete generation sorts AFTER A
+      // (simulated directly — persistedIndex in this JVM would rediscover
+      // A instead of promoting)
+      val genB = base + "__rzzzzzzzz-loser"
+      build(genB)
+      assert(new java.io.File(genB, "_SUCCESS").exists())
+      // (1) rediscovery converges on the first generation, not B's
+      val served = IndexCache.persistedIndex(kind, src, "fp") { _ =>
+        fail("completed generations exist — must not rebuild")
+      }
+      assert(served === genA, s"expected convergence on $genA, got $served")
+      // (2) young loser untouched (B may still be serving it), base
+      // untouched (A's pre-corruption scan must complete)
+      assert(new java.io.File(genB, "_SUCCESS").exists(),
+        "young losing generation must survive rediscovery")
+      assert(inFlight.count() === 2L,
+        "in-flight scan of the corrupted base path must still complete")
+      assert(spark.read.parquet(genB).count() === 2L,
+        "the losing promoter's own serve path must still read")
+      // (3) past the age cutoff the loser sweeps on the next rediscovery
+      def backdate(f: java.io.File): Unit = {
+        f.setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+        ()
+      }
+      backdate(new java.io.File(genB))
+      val after = IndexCache.persistedIndex(kind, src, "fp") { _ =>
+        fail("completed generations exist — must not rebuild")
+      }
+      assert(after === genA)
+      assert(!new java.io.File(genB).exists(),
+        "stale losing generation must be swept on rediscovery")
+      assert(new java.io.File(genA, "_SUCCESS").exists(),
+        "the winning generation must never be swept")
+    } finally dropIndexCache(kind)
   }
 
   test("persisted Jaccard postings index: parquet round-trip probes bit-identically") {

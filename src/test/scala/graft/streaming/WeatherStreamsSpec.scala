@@ -28,8 +28,10 @@ class WeatherStreamsSpec extends AnyFunSuite {
     // Also a regression gate: an accidental per-file batching
     // (maxFilesPerTrigger = 1 over the 4+2 feed files would run 5
     // micro-batches) must trip the <= 3 bound — the healthy count is
-    // exactly 2 (data + watermark-advance) — and the join state must
-    // run on the harness's pinned 8 state partitions.
+    // exactly 1, the data batch: st2 skips the no-data
+    // watermark-advance batch, since an inner join in append mode emits
+    // every match in the data batch — and the join state must run on
+    // the harness's pinned 8 state partitions.
     val replayed = StreamingQueries.intervalJoinReplay(spark, TestSpark.sfDir)
     val prog = replayed.query.recentProgress
     info(s"batches: ${prog.length}")
