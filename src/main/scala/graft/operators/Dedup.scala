@@ -1,8 +1,12 @@
 package graft.operators
 
 import graft.functions.{Sketches, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 import Barriers.oncePerRow
 
@@ -1022,23 +1026,42 @@ object Dedup {
   /** Connected components over a near-dup pair list → (id, cluster_id)
     * with cluster_id = the smallest member id (the canonical
     * representative, as in "keep lowest id per cluster" dedup policy).
+    * Ids keep their column type and are compared in its order, so both
+    * id columns need an orderable type (a map id fails up front).
     *
-    * Algorithm: iterative minimum-label propagation — each round every
-    * node adopts the min label in its neighborhood, stopping when a
-    * round changes nothing. Rounds needed = O(log n) on typical near-dup
-    * graphs (star-shaped components); `maxRounds` bounds pathological
-    * chains. The round is Pregel's message passing (Malewicz et al.,
-    * SIGMOD 2010) over a state that carries each node's adjacency list,
-    * so it needs no join: no GraphX dependency, one shuffle that AQE can
-    * size. Each round is localCheckpoint'ed through [[Iterate]] (jobs
-    * described "cc: round r"): the plan re-roots at materialized
-    * partitions, so neither the recompute chain nor the logical plan
-    * tree grows with the iteration count. The result reads the last
-    * round's checkpoint; free it with [[Iterate.release]].
+    * Algorithm: minimum-label propagation with a local contraction step
+    * (Łącki, Mirrokni, Włodarczyk, "Connected Components at Scale via
+    * Local Contractions", arXiv:1807.10727). Each round every node adopts
+    * the min label in its neighborhood; then, inside each partition of
+    * that message pass, a union-find over the edges whose two endpoints
+    * both sit in the partition gives every local set its minimum label.
+    * The loop stops when a round lowers no label, or when no node has a
+    * neighbor in another partition: then every edge was local and the
+    * union-find was exact. Rounds: one when the round state fits one
+    * partition (AQE coalesces a small state to one), otherwise never more
+    * than plain min-label propagation's O(diameter) — every label is at
+    * most the plain one after the same round. `maxRounds` bounds long
+    * chains spread over many partitions. Memory: the local step holds
+    * one aggregate partition (ids, labels, adjacency lists), whose size
+    * AQE's advisory partition size bounds.
+    *
+    * The round is Pregel's message passing (Malewicz et al., SIGMOD 2010)
+    * over a state that carries each node's adjacency list, so it needs no
+    * join: no GraphX dependency, one shuffle that AQE can size. Each round
+    * is localCheckpoint'ed through [[Iterate]] (jobs described "cc: round
+    * r"): the plan re-roots at materialized partitions, so neither the
+    * recompute chain nor the logical plan tree grows with the iteration
+    * count. The result reads the last round's checkpoint; free it with
+    * [[Iterate.release]].
     */
   def clusters(pairs: DataFrame, maxRounds: Int = 20,
-      idA: String = "id_a", idB: String = "id_b"): DataFrame =
-      Iterate.scope { sc =>
+      idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+    for (c <- Seq(idA, idB)) {
+      val t = pairs.schema(c).dataType
+      require(RowOrdering.isOrderable(t), s"clusters: column '$c' has type " +
+        s"${t.sql}, which has no order (labels are the minimum member id)")
+    }
+    Iterate.scope { sc =>
     // round state (id, label, nbrs): every node of the symmetric edge
     // list with its adjacency list, built once from one read of the pair
     // pipeline (often a full MinHash run)
@@ -1051,34 +1074,86 @@ object Dedup {
       .select(col("id"), col("id").as("label"), col("nbrs")))
     val noNbrs = lit(null).cast(state0.schema("nbrs").dataType)
     val (labels, converged) = sc.rounds("cc", state0, maxRounds,
-        observe = Seq(count(when(col("__chg"), lit(1)))),
-        until = _.getLong(0) == 0L) { (state, _) =>
+        observe = Seq(count(when(col("__chg"), lit(1))),
+          count(when(col("__remote"), lit(1)))),
+        until = o => o.getLong(0) == 0L || o.getLong(1) == 0L) { (state, _) =>
       // each node's own row (the only one with `nbrs`, so its old label
       // is the min over rows with nbrs) plus one label message per
       // neighbor, into ONE groupBy: the new label is the min over
-      // {own label} ∪ {neighbor labels}, the adjacency list rides along
-      // and `__chg` flags an improvement. collect_list keeps the
-      // aggregate an ObjectHashAggregate. Pointer-jumping hops were
-      // measured slower on s12's graph: fewer rounds, dearer rounds.
-      state.select(col("id"), col("label"), col("nbrs"))
+      // {own label} ∪ {neighbor labels} and the adjacency list rides
+      // along. collect_list keeps the aggregate an ObjectHashAggregate.
+      // Pointer-jumping hops were measured slower on s12's graph: fewer
+      // rounds, dearer rounds.
+      localMinLabels(state.select(col("id"), col("label"), col("nbrs"))
         .unionAll(state.select(explode(col("nbrs")).as("id"), col("label"),
           noNbrs.as("nbrs")))
         .groupBy("id")
         .agg(min(col("label")).as("label"),
           min(when(col("nbrs").isNotNull, col("label"))).as("__old"),
-          flatten(collect_list(col("nbrs"))).as("nbrs"))
-        .select(col("id"), col("label"), col("nbrs"),
-          (col("label") < col("__old")).as("__chg"))
+          flatten(collect_list(col("nbrs"))).as("nbrs")))
     }
-    // Plain min-propagation needs O(diameter) rounds — O(log n) holds for
-    // star-like near-dup graphs but NOT for long chains. Splitting one
-    // component into several silently corrupts dedup, so non-convergence
-    // is an error, not a warning.
+    // Splitting one component into several silently corrupts dedup, so
+    // non-convergence is an error, not a warning.
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds " +
           "(component diameter exceeds the budget); raise maxRounds")
     labels.select(col("id"), col("label").as("cluster_id"))
+    }
+  }
+
+  /** The local step of a [[clusters]] round over its message pass
+    * (id, label, __old, nbrs): per partition, union-find over the edges
+    * whose endpoints both sit in it, every set taking its minimum label →
+    * (id, label, nbrs, __chg, __remote). `__chg`: the label is below the
+    * round's old one; `__remote`: the node has a neighbor in another
+    * partition. Labels compare in the id type's Spark order, the order
+    * `min` uses.
+    */
+  private def localMinLabels(agg: DataFrame): DataFrame = {
+    val s = agg.schema
+    val idType = s("id").dataType
+    val out = StructType(Seq(s("id"), s("label"), s("nbrs"),
+      StructField("__chg", BooleanType, nullable = false),
+      StructField("__remote", BooleanType, nullable = false)))
+    agg.select("id", "label", "__old", "nbrs").mapPartitions { it =>
+      val ord = TypeUtils.getInterpretedOrdering(idType)
+      val cat = CatalystTypeConverters.createToCatalystConverter(idType)
+      val rows = it.toArray
+      // a pair with a null id makes a node with no label: it passes through
+      val live = rows.indices.filterNot(rows(_).isNullAt(0))
+      val at = new java.util.TreeMap[Any, Integer](ord)
+      live.foreach(i => at.put(cat(rows(i).get(0)), i))
+      val parent = rows.indices.toArray
+      def find(i: Int): Int = {
+        var x = i
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      val remote = new Array[Boolean](rows.length)
+      for (i <- live; nbr <- rows(i).getSeq[Any](3)) {
+        val j = at.get(cat(nbr))
+        if (j == null) remote(i) = true
+        else parent(find(i)) = find(j)
+      }
+      // the minimum label of each set, at its root (catalyst value, row)
+      val minCat = new Array[Any](rows.length)
+      val minAt = Array.fill(rows.length)(-1)
+      for (i <- live) {
+        val r = find(i)
+        val l = cat(rows(i).get(1))
+        if (minAt(r) < 0 || ord.lt(l, minCat(r))) { minCat(r) = l; minAt(r) = i }
+      }
+      rows.indices.iterator.map { i =>
+        val row = rows(i)
+        if (row.isNullAt(0)) Row(null, row.get(1), row.get(3), false, false)
+        else {
+          val r = find(i)
+          Row(row.get(0), rows(minAt(r)).get(1), row.get(3),
+            ord.lt(minCat(r), cat(row.get(2))), remote(i))
+        }
+      }
+    }(Encoders.row(out))
   }
 
   /** End-to-end near-dup clustering: verified MinHash pairs

@@ -232,13 +232,14 @@ object Similarity {
     * — keep exactly ONE representative (the minimum vec_id) of every
     * embedding near-duplicate cluster, dropping the rest. Pipeline:
     * cosine near-dup pairs → connected components
-    * ([[graft.operators.Dedup.clusters]], min-label join iteration) →
-    * survivors = cluster representatives plus all singletons, each with
-    * its cluster population. This bounded variant runs the exact
-    * quadratic pair generator so the s12 probe is oracle-checkable
-    * end-to-end (DuckDB recursive CTE, the d7 pattern); the production
-    * path swaps [[nearDupPairsBucketed]] (s6's LSH contract) in front —
-    * the CC + keep tail is identical and never sees the swap.
+    * ([[graft.operators.Dedup.clusters]], min-label rounds with a local
+    * union-find step) → survivors = cluster representatives plus all
+    * singletons, each with its cluster population. This bounded variant
+    * runs the exact quadratic pair generator so the s12 probe is
+    * oracle-checkable end-to-end (DuckDB recursive CTE, the d7 pattern);
+    * the production path swaps [[nearDupPairsBucketed]] (s6's LSH
+    * contract) in front — the CC + keep tail is identical and never sees
+    * the swap.
     */
   def semanticDedup(embeddings: DataFrame, threshold: Double,
       idCap: Long): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.TestSpark.{roundJobs, withPartitions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,12 +111,104 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("clusters: long chains converge given enough rounds, throw when capped") {
-    // a 12-node chain has diameter 11 — min-label propagation needs more
-    // than 3 rounds, and silent truncation must be an error
+    // a 12-node chain has diameter 11; spread over four partitions its
+    // labels still travel by message, so one round is not enough, and
+    // silent truncation must be an error
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ok = Dedup.clusters(chain, maxRounds = 15).collect()
-    assert(ok.forall(_.getLong(1) === 1L), "chain not fully labeled")
-    intercept[IllegalStateException](Dedup.clusters(chain, maxRounds = 3))
+    withPartitions(4) {
+      val ok = Dedup.clusters(chain, maxRounds = 15).collect()
+      assert(ok.forall(_.getLong(1) === 1L), "chain not fully labeled")
+      intercept[IllegalStateException](Dedup.clusters(chain, maxRounds = 1))
+    }
+  }
+
+  /** Seeded random pair lists: chains, stars and cycles over shuffled
+    * ids, two chains joined by one edge listed last, and duplicate,
+    * reversed and self pairs (one of them a node's only pair). */
+  private def randomPairs(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((1L to 400L).toVector).iterator
+    def take(n: Int) = Vector.fill(n)(ids.next())
+    def chain(n: Int) = { val v = take(n); v.zip(v.tail) }
+    def star(n: Int) = { val v = take(n); v.tail.map(v.head -> _) }
+    def cycle(n: Int) = { val v = take(n); v.zip(v.tail :+ v.head) }
+    val shapes = Seq.fill(1 + rnd.nextInt(3))(chain(2 + rnd.nextInt(20))) ++
+      Seq.fill(rnd.nextInt(3))(star(2 + rnd.nextInt(15))) ++
+      Seq.fill(rnd.nextInt(3))(cycle(3 + rnd.nextInt(12)))
+    val (left, right) = (chain(2 + rnd.nextInt(15)), chain(2 + rnd.nextInt(15)))
+    val pairs = rnd.shuffle(shapes.flatten ++ left ++ right)
+    val noise = pairs.take(5).flatMap(p => Seq(p, p.swap)) ++
+      pairs.take(3).map(p => (p._1, p._1))
+    val loner = take(1).head
+    pairs ++ noise :+ (loner -> loner) :+ (left.last._2 -> right.last._2)
+  }
+
+  /** Component minimum per node by union-find, and the rounds plain
+    * min-label propagation takes (its last round changes nothing). */
+  private def reference(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val comp = parent.keys.toSeq.map(x => x -> find(x)).toMap
+    val nbrs = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    var label = nbrs.keys.map(x => x -> x).toMap
+    var rounds = 0
+    var changed = true
+    while (changed) {
+      val next = label.map { case (x, l) => x -> (l +: nbrs(x).map(label)).min }
+      changed = next != label
+      label = next
+      rounds += 1
+    }
+    (comp, rounds)
+  }
+
+  for (seed <- 1 to 6; parts <- Seq(1, 4))
+    test(s"clusters: seed $seed on $parts partitions equals union-find, " +
+        "rounds <= min-label") {
+      val pairs = randomPairs(seed)
+      val (want, minLabelRounds) = reference(pairs)
+      var got = Map.empty[Long, Long]
+      val rounds = withPartitions(parts)(roundJobs("cc") {
+        val out = Dedup.clusters(pairs.toDF("id_a", "id_b"), maxRounds = 60)
+        got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        Iterate.release(out)
+      }).size
+      assert(got === want)
+      assert(rounds <= minLabelRounds, s"plain min-label takes $minLabelRounds")
+      if (parts == 1) assert(rounds === 1)
+    }
+
+  test("clusters: string and array ids keep their order; null ids get no label") {
+    // "a10" < "a9" < "b" as strings, unlike as numbers
+    val strs = Seq(("b", "a9"), ("a9", "a10"), ("y", "x")).toDF("id_a", "id_b")
+    val byStr = Dedup.clusters(strs).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(byStr === Map("b" -> "a10", "a9" -> "a10", "a10" -> "a10",
+      "x" -> "x", "y" -> "x"))
+    val arrs = Seq((Seq(2L), Seq(1L, 5L)), (Seq(1L, 5L), Seq(1L)))
+      .toDF("id_a", "id_b")
+    val byArr = Dedup.clusters(arrs).collect()
+      .map(r => r.getSeq[Long](0) -> r.getSeq[Long](1)).toMap
+    assert(byArr.values.toSet === Set(Seq(1L)) && byArr.size === 3)
+    // a null id gets no label and joins no cluster
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((null, 5L), (6L, 5L))
+      .toDF("id_a", "id_b")
+    assert(Dedup.clusters(nulls).collect().map(r => (r.get(0), r.get(1))).toSet ===
+      Set((null, null), (5L, 5L), (6L, 5L)))
+  }
+
+  test("clusters: an id type with no order fails, naming the column") {
+    val maps = Seq((Map(1L -> 1L), Map(2L -> 2L))).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException](Dedup.clusters(maps))
+    assert(e.getMessage.contains("'id_a'") && e.getMessage.contains("no order"),
+      e.getMessage)
   }
 
   test("nearDupClusters labels every doc; dups share a representative") {

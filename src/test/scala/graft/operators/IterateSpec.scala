@@ -1,14 +1,10 @@
 package graft.operators
 
 import graft.{SparkEntry, TestSpark}
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.TestSpark.{roundJobs, withPartitions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.max
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** The checkpoint lifecycle of the iterative operators: no RDD an
   * operator call creates may stay persisted once its result is collected
@@ -32,27 +28,6 @@ class IterateSpec extends AnyFunSuite {
     val out = df
     out.collect()
     Iterate.release(out)
-  }
-
-  /** The SQL execution of every job `run` starts in a round of `op`,
-    * by round: jobs are described "`op`: round r". A convergence probe
-    * is a query of its own, so it shows as a second execution. */
-  private def roundJobs(op: String)(run: => Unit): Map[String, Seq[String]] = {
-    val ctx = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(j.properties).flatMap(p =>
-          Option(p.getProperty(k))).getOrElse("")
-        jobs.add((prop("spark.job.description"), prop("spark.sql.execution.id")))
-        ()
-      }
-    }
-    ctx.addSparkListener(listener)
-    try { run; TestListenerBus.drain(ctx) }
-    finally ctx.removeSparkListener(listener)
-    jobs.asScala.toSeq.filter(_._1.startsWith(s"$op: round "))
-      .groupMap(_._1)(_._2)
   }
 
   private def weighted = Seq(("a", "hub", 1.0), ("b", "hub", 3.0),
@@ -97,17 +72,35 @@ class IterateSpec extends AnyFunSuite {
     }
   }
 
-  test("a connected-components round is two jobs of one query, rounds unchanged") {
-    val rounds = roundJobs("cc")(collectAndRelease(Dedup.clusters(
-      path.toDF("id_a", "id_b"), maxRounds = 15)))
-    // label 1 takes 11 rounds to cross the 12-node chain, and one more
-    // round sees no change
-    assert(rounds.keySet === (0 to 11).map(r => s"cc: round $r").toSet)
+  private def assertTwoJobsOneQuery(rounds: Map[String, Seq[String]]): Unit =
     rounds.foreach { case (round, execs) =>
       assert(execs.size === 2, s"$round ran ${execs.size} jobs")
       assert(execs.distinct.size === 1 && execs.head.nonEmpty,
         s"$round ran ${execs.distinct.size} queries")
     }
+
+  test("a one-partition CC state takes one round of two jobs of one query") {
+    val rounds = roundJobs("cc")(collectAndRelease(Dedup.clusters(
+      path.toDF("id_a", "id_b"), maxRounds = 15)))
+    // AQE coalesces the 12-node chain's state into one partition, so the
+    // local union-find sees every edge and the first round is exact
+    assert(rounds.keySet === Set("cc: round 0"))
+    assertTwoJobsOneQuery(rounds)
+  }
+
+  test("a CC round over four uncoalesced partitions is two jobs of one query") {
+    var labels = Array.empty[Long]
+    val rounds = withPartitions(4)(roundJobs("cc") {
+      val out = Dedup.clusters(path.toDF("id_a", "id_b"), maxRounds = 15)
+      labels = out.collect().map(_.getLong(1))
+      Iterate.release(out)
+    })
+    // some chain edges cross partitions, so labels still travel by
+    // message, never in more rounds than plain min-label's 12
+    assert(rounds.size >= 2 && rounds.size <= 12, s"rounds: ${rounds.keys}")
+    assert(rounds.keySet === (0 until rounds.size).map(r => s"cc: round $r").toSet)
+    assertTwoJobsOneQuery(rounds)
+    assert(labels.length === 12 && labels.forall(_ === 1L))
   }
 
   // kCore peels node 5, then node 4, then sees no change; bfsHops
@@ -127,8 +120,9 @@ class IterateSpec extends AnyFunSuite {
   }
 
   test("clusters releases its caches and checkpoints when it does not converge") {
-    assert(leftover(intercept[IllegalStateException](
-      Dedup.clusters(path.toDF("id_a", "id_b"), maxRounds = 3))) === Nil)
+    // over four partitions the chain needs more than one round
+    assert(leftover(intercept[IllegalStateException](withPartitions(4)(
+      Dedup.clusters(path.toDF("id_a", "id_b"), maxRounds = 1)))) === Nil)
   }
 
   test("kCore releases its edge checkpoint when it finds no fixpoint") {

@@ -14,12 +14,14 @@ shows as different strings.
 
 With NAME_PREFIX arguments only the probes whose names start with one
 of them are checked; without them every twin in oracle_sql.json is, and
-a probe with no dump counts as a failure. Prints one line per mismatch
-and ends with "ALL MATCH" (exit 0) or a failure count (exit 1).
+a probe with no dump counts as a failure. Prints the seconds each twin
+took in DuckDB, one line per mismatch, the total DuckDB seconds, and ends
+with "ALL MATCH" (exit 0) or a failure count (exit 1).
 """
 import json
 import os
 import sys
+import time
 
 import duckdb
 import pyarrow.parquet as pq
@@ -44,6 +46,7 @@ def main(argv):
             con.execute(f"CREATE VIEW {name[:-len('.parquet')]} AS "
                         f"SELECT * FROM read_parquet('{path}')")
     failed = checked = 0
+    duck_s = 0.0
     for name, sql in sorted(oracle.items()):
         if prefixes and not name.startswith(prefixes):
             continue
@@ -55,11 +58,16 @@ def main(argv):
             continue
         try:
             got_cols, got = rows(pq.read_table(dump))
-            want_cols, want = rows(con.execute(sql).arrow())
+            t0 = time.perf_counter()
+            want_table = con.execute(sql).arrow()
+            secs = time.perf_counter() - t0
+            want_cols, want = rows(want_table)
         except Exception as e:  # a failing twin is a failed check
             print(f"ERROR    {name}: {type(e).__name__}: {e}")
             failed += 1
             continue
+        duck_s += secs
+        print(f"{secs:9.2f} s  {name}", flush=True)
         if got_cols != want_cols:
             print(f"COLUMNS  {name}: spark {got_cols} vs duckdb {want_cols}")
             failed += 1
@@ -70,6 +78,7 @@ def main(argv):
             print(f"MISMATCH {name}: {len(got)} vs {len(want)} rows; "
                   f"first difference spark {diff[0]} vs duckdb {diff[1]}")
             failed += 1
+    print(f"{duck_s:9.2f} s  DuckDB total")
     if failed:
         print(f"{failed} of {checked} probes FAILED")
         return 1
