@@ -542,7 +542,7 @@ object Analytics2 {
         |            FROM lineitem),
         |n AS (SELECT count(DISTINCT oid) AS nn FROM op),
         |isupp AS (SELECT item, count(*) AS s FROM op GROUP BY 1),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT o1.item AS a, o2.item AS b, count(*) AS psupp
         |  FROM op o1 JOIN op o2
         |    ON o1.oid = o2.oid AND o1.item < o2.item

@@ -689,7 +689,7 @@ object PipelineQueries {
         |          list_filter(string_split_regex(lower(trim(text)), '[^a-z0-9]+'),
         |                      x -> x <> '') AS ws
         |        FROM documents)),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         |  WHERE len(a.g) > 0 AND len(b.g) > 0
@@ -778,7 +778,7 @@ object PipelineQueries {
         |      i -> sa.sig[i+1] = sb.sig[i+1])) AS DOUBLE) / 64
         |    >= 0.18::DOUBLE),
         |shd AS (SELECT doc_id, list_distinct(g) AS g FROM sh),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT cand.id_a, cand.id_b
         |  FROM cand
         |  JOIN shd a ON a.doc_id = cand.id_a
@@ -1289,7 +1289,7 @@ object PipelineQueries {
         |          list_filter(string_split_regex(lower(trim(text)), '[^a-z0-9]+'),
         |                      x -> x <> '') AS ws
         |        FROM un)),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         |  WHERE (a.doc_id >= 1000000 OR b.doc_id >= 1000000)
@@ -1379,7 +1379,7 @@ object PipelineQueries {
         |  SELECT vec_id, CAST(label AS BIGINT) AS label,
         |         CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings WHERE vec_id < 200),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |  FROM e a JOIN e b ON a.vec_id < b.vec_id
         |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.3),
@@ -2697,7 +2697,7 @@ object PipelineQueries {
         |          list_filter(string_split_regex(lower(trim(text)), '[^a-z0-9]+'),
         |                      x -> x <> '') AS ws
         |        FROM documents)),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         |  WHERE len(a.g) > 0 AND len(b.g) > 0

@@ -11,7 +11,9 @@ import graft.weather._
 /** The launch options (`build.sbt` `javaOptions`) size Spark's compiled-class
   * cache to graft's repeated work. At Spark's default of 100 entries a mix
   * that needs more cycles the LRU and every class is recompiled on every
-  * repetition.
+  * repetition. They also turn off per-session artifact isolation, under
+  * which every streaming query's cloned session ran its tasks in a fresh
+  * executor classloader and missed the loader-keyed cache.
   */
 class CodegenCacheSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -73,6 +75,19 @@ class CodegenCacheSpec extends AnyFunSuite {
 
   test("the session's codegen cache holds 1000 entries") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+  }
+
+  test("the session runs without per-session artifact isolation") {
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+  }
+
+  test("a repeated streaming replay compiles nothing") {
+    val st6 = SparkEntry.queries("st6_stream_windowed_agg")
+    val first = st6(spark, TestSpark.sfDir).collect().toSeq
+    val before = compiles
+    val second = st6(spark, TestSpark.sfDir).collect().toSeq
+    assert(compiles - before === 0L)
+    assert(second === first)
   }
 
   test("a mix larger than Spark's default cache compiles nothing on its second run") {

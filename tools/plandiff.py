@@ -26,7 +26,9 @@ import sys
 RULES = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
-    (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
+    # \b: unanchored, \w* rescans a word run from each of its characters
+    # (quadratic: minutes on a plan with a 150 KB literal line)
+    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"\brdd_\d+(_\d+)?"), "rdd_N"),
     (re.compile(r"\bRDD \d+"), "RDD N"),
     (re.compile(r"\b(lambda [A-Za-z]+)_\d+"), r"\1_N"),
