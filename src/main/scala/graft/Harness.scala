@@ -26,6 +26,17 @@ object Sessions {
     s.sparkContext.setLogLevel(logLevel)
     s
   }
+
+  /** `body` with each of `kvs` set on `s`'s session conf. On exit, thrown
+    * or not, every key gets back the value it had before, and a key that
+    * was unset before is unset again. */
+  def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
 }
 
 /** Scratch space for probe artifacts that never outlive the JVM: index

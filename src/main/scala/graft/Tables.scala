@@ -87,10 +87,12 @@ object Tables {
     * long and floor-truncate to microseconds, matching DuckDB's
     * TIMESTAMP_NS → TIMESTAMP cast) or plain TIMESTAMP(MICROS) (read
     * natively). Dispatch on the decoded type so both generations of the
-    * driver's testdata load identically.
+    * generated testdata load identically. The nanos decoding needs
+    * `spark.sql.legacy.parquet.nanosAsLong=true` from session creation
+    * (`build.sbt` `javaOptions`); this reader leaves the session's confs
+    * as they are.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {

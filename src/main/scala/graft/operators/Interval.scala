@@ -172,15 +172,15 @@ object Interval {
           datediff(col("l_shipdate"), lit("1970-01-01")).cast("long").as("ss"),
           (datediff(col("l_shipdate"), lit("1970-01-01")).cast("long")
             + col("l_quantity").cast("long")).as("se"))
-      s.conf.set(graft.plans.OverlapJoinRewrite.BinWidthKey, "64")
       val agg =
-        try o.join(li, o("ws") <= li("se") && li("ss") <= o("we"))
-          .groupBy("o_orderkey")
-          .agg(count(lit(1)).cast("long").as("n_overlap"),
-            sum(least(col("we"), col("se")) - greatest(col("ws"), col("ss"))
-              + 1).cast("long").as("overlap_days"))
-          .localCheckpoint() // plan + execute while the conf is in scope
-        finally s.conf.unset(graft.plans.OverlapJoinRewrite.BinWidthKey)
+        graft.Sessions.withConfs(s, graft.plans.OverlapJoinRewrite.BinWidthKey -> "64") {
+          o.join(li, o("ws") <= li("se") && li("ss") <= o("we"))
+            .groupBy("o_orderkey")
+            .agg(count(lit(1)).cast("long").as("n_overlap"),
+              sum(least(col("we"), col("se")) - greatest(col("ws"), col("ss"))
+                + 1).cast("long").as("overlap_days"))
+            .localCheckpoint() // plan + execute while the conf is in scope
+        }
       agg.orderBy("o_orderkey")
     })
 }

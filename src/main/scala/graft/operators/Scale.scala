@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
+  /** Input bytes per task of [[fanOutSmallScan]]. */
+  private val FanOutBytesPerTask = 128L * 1024
+
   /** Round-robin fan-out of a SMALL-file scan before a CPU-heavy
     * per-row kernel (guide §2.5 "input skew": one small/unsplittable
     * input file ⇒ a single scan task, so every downstream narrow
@@ -27,7 +30,7 @@ object Scale {
     * runs on ONE core regardless of cluster size).
     *
     * The split count is derived from the INPUT SIZE, not the core
-    * count: `max(1, bytes / graft.fanout.bytesPerTask)` capped at the
+    * count: `max(1, bytes / 128 KB)` capped at the
     * default parallelism (guide §2: scale-adaptive partitioning, never
     * a constant tuned to the local master). At 100 TB file splits
     * outnumber cores and this is a structural no-op; at probe scale a
@@ -62,11 +65,8 @@ object Scale {
     if (!exchangeFree) df
     else {
       val sc = df.sparkSession.sparkContext
-      val bytesPerTask = df.sparkSession.conf
-        .getOption("graft.fanout.bytesPerTask").map(_.toLong)
-        .getOrElse(128L * 1024)
       val bytes = plan.stats.sizeInBytes
-      val target = (bytes / bytesPerTask).min(sc.defaultParallelism)
+      val target = (bytes / FanOutBytesPerTask).min(sc.defaultParallelism)
         .max(1).toInt
       val parts = df.queryExecution.toRdd.getNumPartitions
       if (parts >= target) df else df.repartition(target)

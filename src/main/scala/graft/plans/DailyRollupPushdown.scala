@@ -14,26 +14,39 @@ import graft.weather.WeatherSchemas
 /** Aggregate pushdown rule (SURVEY.md §4): the reference never computes
   * daily rollups locally — it asks the source for the pre-aggregated
   * `daily` block (`server.py:219-223`). This rule gives Catalyst the same
-  * move: an `Aggregate` over an `openmeteo` HOURLY scan whose grouping is
-  * exactly (latitude, longitude, to_date(ts_local)) and whose aggregate
-  * expressions are all recognizable daily-catalog definitions (max/min,
-  * round(sum, 2)) is rewritten to a DAILY-granularity scan of the same
-  * source — the per-hour rows are never fetched at all.
+  * move for an `Aggregate` over an `openmeteo` HOURLY scan, in two shapes:
+  *  - grouped by exactly (latitude, longitude, to_date(ts_local)), with
+  *    every aggregate a recognizable daily-catalog definition (max/min,
+  *    round(sum, 2), the sum-of-case slot counts, mode within group):
+  *    each output row IS one daily row, so the Aggregate becomes a
+  *    Project over a DAILY-granularity scan of the same source;
+  *  - grouped by a subset of {latitude, longitude} (none for a global
+  *    aggregate), with every aggregate re-combinable across days EXACTLY:
+  *    `max` of each `*_max`, `min` of each `*_min`, and `sum` of the two
+  *    integral daily counts — precipitation_hours (hourly slots with
+  *    precipitation) and sunshine_duration (multiples of 3600 s) — from
+  *    their unrounded sum-of-case forms. The Aggregate stays and reads
+  *    the daily scan instead. Rounded daily sums and the daily mode do
+  *    not re-combine across days, so those bail.
+  * Either way the per-hour rows are never fetched at all.
   *
-  * The rewrite is correctness-gated by the golden test asserting pushed ≡
-  * native per daily variable (OpenMeteoSourceSpec). Conservative bail-outs
-  * (rule leaves the plan untouched) whenever:
-  *  - any aggregate expression is not in the recognized catalog
-  *    (`avg`, `sum` without the canonical rounding, filters, DISTINCT …)
+  * The rewrite is correctness-gated by golden tests asserting pushed ≡
+  * native per daily variable (DailyRollupPushdownSpec). Conservative
+  * bail-outs (rule leaves the plan untouched) whenever:
+  *  - any aggregate expression is not in its shape's catalog (`avg`,
+  *    `sum` without the canonical form, filters, DISTINCT, a 15-minute
+  *    slot multiplier …)
+  *  - an output's type would change (cast-stripping during recognition
+  *    must never change it)
   *  - a Filter sits between the Aggregate and the scan whose predicate is
   *    not DAY-ALIGNED. Day-aligned conjuncts DO rewrite — a comparison on
   *    `to_date(ts_local)` against a date literal, or `ts_local >= / <` a
   *    midnight timestamp — because selecting whole days of hourly rows
   *    commutes with the per-day rollup; they are translated onto the
-  *    daily relation's `date` column, where the source's date-range
-  *    pushdown (S2) picks them up. Any other predicate (mid-day ts
-  *    bound, non-time column) still bails.
-  *  - grouping is not exactly the (lat, lon, day) key
+  *    daily relation's `date` column, which the source takes as its
+  *    pushed window (the remote's `start_date`/`end_date`). Any other
+  *    predicate (mid-day ts bound, non-time column) still bails.
+  *  - grouping is neither shape
   *
   * Registered via [[graft.GraftExtensions]] (injectOptimizerRule), so any
   * session with the extensions gets it; it runs in the operator-
@@ -69,6 +82,8 @@ object DailyRollupPushdown extends Rule[LogicalPlan] {
     case agg @ Aggregate(groupingExprs, aggExprs, child, _) =>
       rewrite(agg, groupingExprs, aggExprs, child).getOrElse(agg)
   }
+
+  private val LocationCols = Set("latitude", "longitude")
 
   private def rewrite(agg: Aggregate, groupingExprs: Seq[Expression],
       aggExprs: Seq[NamedExpression], child: LogicalPlan): Option[LogicalPlan] = {
@@ -118,12 +133,17 @@ object DailyRollupPushdown extends Rule[LogicalPlan] {
       case _ => false
     }
 
-    // Grouping must be exactly the (latitude, longitude, day) key.
-    val groupingOk = groupingExprs.size == 3 &&
+    // Grouping is exactly the (latitude, longitude, day) key (one output
+    // row per daily row), or a subset of the location (re-aggregated
+    // across days).
+    val perDay = groupingExprs.size == 3 &&
       groupingExprs.exists(isAttr(_, "latitude")) &&
       groupingExprs.exists(isAttr(_, "longitude")) &&
       groupingExprs.exists(isDayOf)
-    if (!groupingOk) return None
+    def locationCol(e: Expression): Option[String] =
+      LocationCols.find(isAttr(e, _))
+    val groupCols = groupingExprs.map(locationCol)
+    if (!perDay && groupCols.exists(_.isEmpty)) return None
 
     // An intermediate Filter rewrites only when EVERY conjunct is
     // day-aligned on ts_local — whole-day selection commutes with the
@@ -195,8 +215,10 @@ object DailyRollupPushdown extends Rule[LogicalPlan] {
       stripCasts(e) match {
         case AggregateExpression(Sum(c, _), _, false, None, _) =>
           stripCasts(c) match {
+            // the column itself uncast: a cast (say to int) would
+            // compare other values than the daily count's
             case CaseWhen(Seq((GreaterThan(a, thr), thenE)), Some(elseE)) =>
-              (stripCasts(a), numLit(thr), numLit(thenE), numLit(elseE)) match {
+              (a, numLit(thr), numLit(thenE), numLit(elseE)) match {
                 case (attr: AttributeReference, Some(t), Some(v1), Some(v0)) =>
                   Some((attr.name, t, v1, v0))
                 case _ => None
@@ -240,23 +262,33 @@ object DailyRollupPushdown extends Rule[LogicalPlan] {
       }
     }
 
-    sealed trait Target
-    case object LatT extends Target
-    case object LonT extends Target
-    case object DateT extends Target
-    final case class VarT(name: String) extends Target
+    // Across days: the daily variable whose per-day values re-combine
+    // exactly into the hourly aggregate, and the aggregate that does it.
+    def acrossDaysVarFor(e: Expression): Option[String] = stripCasts(inline(e)) match {
+      case AggregateExpression(_: Max | _: Min, _, _, _, _) => dailyVarFor(e)
+      case other => sumOfCase(other).collect {
+        case ("precipitation", 0.0, 1.0, 0.0) => "precipitation_hours"
+        case ("shortwave_radiation", 120.0, 3600.0, 0.0) => "sunshine_duration"
+      }
+    }
+    def reaggregate(dailyVar: String, a: Attribute): Expression =
+      (if (dailyVar.endsWith("_max")) Max(a)
+       else if (dailyVar.endsWith("_min")) Min(a)
+       else Sum(a)).toAggregateExpression()
 
-    val targets: Seq[Option[(NamedExpression, Target)]] = aggExprs.map {
-      case ne if isAttr(ne, "latitude") => Some(ne -> LatT)
-      case ne if isAttr(ne, "longitude") => Some(ne -> LonT)
-      case a @ Alias(e, _) if isDayOf(e) => Some(a -> DateT)
-      case a @ Alias(e, _) => dailyVarFor(e).map(v => a -> VarT(v))
+    // Each output → the daily column it reads.
+    val targets: Seq[Option[(NamedExpression, String)]] = aggExprs.map {
+      case ne if locationCol(ne).isDefined => locationCol(ne).map(ne -> _)
+      case a @ Alias(e, _) if perDay && isDayOf(e) => Some(a -> "date")
+      case a @ Alias(e, _) if perDay => dailyVarFor(e).map(a -> _)
+      case a @ Alias(e, _) => acrossDaysVarFor(e).map(a -> _)
       case _ => None
     }
     if (targets.exists(_.isEmpty)) return None
     val resolved = targets.flatten
 
-    val neededVars = resolved.collect { case (_, VarT(v)) => v }
+    def isVar(c: String) = !LocationCols(c) && c != "date"
+    val neededVars = resolved.map(_._2).filter(isVar)
     if (neededVars.isEmpty) return None
 
     // Build the daily-granularity relation of the same source.
@@ -267,27 +299,25 @@ object DailyRollupPushdown extends Rule[LogicalPlan] {
     def dailyAttr(name: String): Option[Attribute] =
       dailyRelation.output.find(_.name == name)
 
-    // Re-alias daily columns to the aggregate's original output exprIds so
-    // every parent reference keeps resolving. Type equality is required —
-    // cast-stripping during recognition must never change the output type.
-    def aliased(attrName: String, ne: NamedExpression): Option[NamedExpression] =
-      dailyAttr(attrName).filter(_.dataType == ne.dataType)
+    // Re-alias the daily expressions to the aggregate's original output
+    // exprIds so every parent reference keeps resolving. Type equality is
+    // required — cast-stripping during recognition must never change the
+    // output type.
+    val outputs: Seq[Option[NamedExpression]] = resolved.map { case (ne, c) =>
+      dailyAttr(c)
+        .map(a => if (perDay || !isVar(c)) a else reaggregate(c, a))
+        .filter(_.dataType == ne.dataType)
         .map(Alias(_, ne.name)(ne.exprId))
-    val projectList: Seq[Option[NamedExpression]] = resolved.map {
-      case (ne, LatT)    => aliased("latitude", ne)
-      case (ne, LonT)    => aliased("longitude", ne)
-      case (ne, DateT)   => aliased("date", ne)
-      case (ne, VarT(v)) => aliased(v, ne)
     }
-    if (projectList.exists(_.isEmpty)) None
-    else {
-      val scan: LogicalPlan = dayFilterBuilders match {
-        case Seq() => dailyRelation
-        case bs =>
-          val dateAttr = dailyAttr("date").getOrElse(return None)
-          Filter(bs.map(_(dateAttr)).reduce(And), dailyRelation)
-      }
-      Some(Project(projectList.flatten, scan))
+    if (outputs.exists(_.isEmpty)) return None
+    val scan: LogicalPlan = dayFilterBuilders match {
+      case Seq() => dailyRelation
+      case bs =>
+        val dateAttr = dailyAttr("date").getOrElse(return None)
+        Filter(bs.map(_(dateAttr)).reduce(And), dailyRelation)
     }
+    if (perDay) Some(Project(outputs.flatten, scan))
+    else Some(agg.copy(groupingExpressions = groupCols.flatten.flatMap(dailyAttr),
+      aggregateExpressions = outputs.flatten, child = scan))
   }
 }

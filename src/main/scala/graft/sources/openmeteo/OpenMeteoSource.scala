@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeConstants.MICROS_PER_DAY
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
@@ -28,9 +29,14 @@ import graft.weather.WeatherSchemas
   *    [[SupportsPushDownRequiredColumns]]: pruned columns ARE the
   *    requested variables — unrequested arrays are never materialized.
   *  - `start_date`/`end_date` params (`server.py:354-358`) ⇒
-  *    [[SupportsPushDownFilters]] on `ts_local`: range predicates are
-  *    consumed by the scan (no post-scan Filter node) and become the
-  *    remote time window.
+  *    [[SupportsPushDownFilters]] on the time axis (`ts_local`, or `date`
+  *    at daily granularity): range predicates are consumed by the scan
+  *    (no post-scan Filter node) and become the remote time window.
+  *  - the pre-aggregated `daily` block (`server.py:219-223`) ⇒
+  *    `granularity=daily`. Aggregates over the hourly scan reach it
+  *    through the Catalyst rule [[graft.plans.DailyRollupPushdown]],
+  *    which rewrites them onto a daily scan; the connector itself has no
+  *    aggregate pushdown.
   *  - one partition per location block, capped by `maxPartitions`
   *    (admission control for the quota-limited source, §4) — at scale the
   *    unit of parallelism is location × date-chunk, each an independent
@@ -68,9 +74,8 @@ final case class OpenMeteoOptions(path: String, granKey: String,
   def liveMode: Boolean = httpBaseUrl.isDefined && locations.nonEmpty
 
   /** Number of block units to plan over — the locations list in live
-    * mode, otherwise one unit per non-empty fixture line (shared by the
-    * row scan and the aggregate scan; fails with a clear message rather
-    * than a bare FileNotFoundException).
+    * mode, otherwise one unit per non-empty fixture line (fails with a
+    * clear message rather than a bare FileNotFoundException).
     */
   def blockUnitCount: Int =
     if (liveMode) locations.size
@@ -188,7 +193,7 @@ object OpenMeteoTable {
 class OpenMeteoScanBuilder(opts: OpenMeteoOptions)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit
-    with SupportsPushDownTopN with SupportsPushDownAggregates {
+    with SupportsPushDownTopN {
 
   private var requiredSchema: StructType = OpenMeteoTable.wideSchema(opts)
   private var pushed: Array[Filter] = Array.empty
@@ -196,8 +201,6 @@ class OpenMeteoScanBuilder(opts: OpenMeteoOptions)
   private var tsHiMicros: Option[Long] = None // EXCLUSIVE upper micro bound
   private var limit: Option[Int] = None
   private var topN: Option[TopNPush] = None
-  private var pushedAggs: Seq[PushedAgg] = Seq.empty
-  private var pushedGroupCols: Seq[String] = Seq.empty
 
   /** LIMIT reaches the scan: each partition stops fetching blocks once it
     * has emitted `limit` rows (partial pushdown — Spark still applies the
@@ -227,7 +230,6 @@ class OpenMeteoScanBuilder(opts: OpenMeteoOptions)
     val timeAxis: Set[String] =
       if (opts.granKey == WeatherSchemas.GranDaily) Set("date")
       else Set("ts_local", "ts_utc")
-    if (pushedAggs.nonEmpty) return false
     orders.headOption.map(_.expression()).exists {
       case r: NamedReference
           if r.fieldNames.length == 1 && timeAxis(r.fieldNames.head) =>
@@ -242,27 +244,34 @@ class OpenMeteoScanBuilder(opts: OpenMeteoOptions)
   override def pruneColumns(required: StructType): Unit =
     requiredSchema = required
 
-  /** ts_local range predicates become the remote start/end window (F4). */
+  /** Range predicates on the time axis — `ts_local` of a sub-daily scan,
+    * `date` of a daily one — become the remote start/end window (F4).
+    * The window is kept in local micros either way; a day is its
+    * midnight's micros, so `date <= d` ends the window at d + 1 day.
+    */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    val (timeCol, step) =
+      if (opts.granKey == WeatherSchemas.GranDaily) ("date", MICROS_PER_DAY)
+      else ("ts_local", 1L)
     val (accepted, rejected) = filters.partition {
-      case GreaterThan("ts_local", v)        => toMicros(v).isDefined
-      case GreaterThanOrEqual("ts_local", v) => toMicros(v).isDefined
-      case LessThan("ts_local", v)           => toMicros(v).isDefined
-      case LessThanOrEqual("ts_local", v)    => toMicros(v).isDefined
+      case GreaterThan(`timeCol`, v)        => toMicros(v).isDefined
+      case GreaterThanOrEqual(`timeCol`, v) => toMicros(v).isDefined
+      case LessThan(`timeCol`, v)           => toMicros(v).isDefined
+      case LessThanOrEqual(`timeCol`, v)    => toMicros(v).isDefined
       case _ => false
     }
     accepted.foreach {
       case GreaterThan(_, v) =>
-        tsLoMicros = Some(maxLo(toMicros(v).get + 1))
+        tsLoMicros = Some(maxLo(toMicros(v).get + step))
       case GreaterThanOrEqual(_, v) =>
         tsLoMicros = Some(maxLo(toMicros(v).get))
       // Upper bounds normalize to an exclusive micro bound so combining
       // `<` and `<=` filters can never mis-inherit inclusivity
-      // (LessThanOrEqual(X) ≡ LessThan(X + 1 µs)).
+      // (LessThanOrEqual(X) ≡ LessThan(X + 1 step)).
       case LessThan(_, v) =>
         tsHiMicros = Some(minHi(toMicros(v).get))
       case LessThanOrEqual(_, v) =>
-        tsHiMicros = Some(minHi(toMicros(v).get + 1))
+        tsHiMicros = Some(minHi(toMicros(v).get + step))
       case _ =>
     }
     pushed = accepted
@@ -275,152 +284,16 @@ class OpenMeteoScanBuilder(opts: OpenMeteoOptions)
     case t: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(t))
     case t: java.sql.Timestamp      => Some(DateTimeUtils.fromJavaTimestamp(t))
     case t: java.time.Instant       => Some(DateTimeUtils.instantToMicros(t))
+    case d: java.time.LocalDate     => Some(d.toEpochDay * MICROS_PER_DAY)
+    case d: java.sql.Date           => Some(DateTimeUtils.fromJavaDate(d) * MICROS_PER_DAY)
     case _                          => None
   }
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  // ---- §4 aggregate pushdown: MIN/MAX answered from the daily block ----
-  // (the reference's "ask for the daily pre-aggregate" move,
-  // `server.py:219-223`). Pushed ONLY when exact: a global (no grouping)
-  // MIN/MAX whose hourly variable has a daily counterpart, with any
-  // pushed time bounds on local-day boundaries. ROUNDED daily sums
-  // (precipitation_sum etc.) are never pushed; the two EXACT sum-of-case
-  // daily variables ARE — precipitation_hours is an integer slot count
-  // and sunshine_duration a multiple of 3600 s, so summing the daily
-  // values is bit-equal to the hourly derivation (the same catalog
-  // DailyRollupPushdown recognizes on the Catalyst path, here matched on
-  // the connector's V2 expression tree).
-  private val dailyCounterpart: Map[(String, String), String] = Map(
-    ("MAX", "temperature_2m") -> "temperature_2m_max",
-    ("MIN", "temperature_2m") -> "temperature_2m_min",
-    ("MAX", "apparent_temperature") -> "apparent_temperature_max",
-    ("MIN", "apparent_temperature") -> "apparent_temperature_min",
-    ("MAX", "uv_index") -> "uv_index_max")
-
-  private def numLitV2(
-      e: org.apache.spark.sql.connector.expressions.Expression): Option[Double] =
-    e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        l.value match {
-          case d: Double  => Some(d)
-          case f: Float   => Some(f.toDouble)
-          case i: Int     => Some(i.toDouble)
-          case n: Long    => Some(n.toDouble)
-          case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-          case _          => None
-        }
-      case _ => None
-    }
-
-  /** sum(CASE WHEN var > thr THEN a ELSE b END) arriving as the V2
-    * GeneralScalarExpression("CASE_WHEN", [pred, then, else]) — mapped
-    * to its exact daily counterpart (A4/A6 shapes only; anything else
-    * bails to the native path).
-    */
-  private def sumOfCaseDaily(
-      e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case g: org.apache.spark.sql.connector.expressions.GeneralScalarExpression
-          if g.name == "CASE_WHEN" && g.children.length == 3 =>
-        (g.children()(0), numLitV2(g.children()(1)), numLitV2(g.children()(2))) match {
-          case (c: org.apache.spark.sql.connector.expressions.GeneralScalarExpression,
-              Some(thenV), Some(elseV))
-              if c.name == ">" && c.children.length == 2 =>
-            (c.children()(0), numLitV2(c.children()(1))) match {
-              case (r: org.apache.spark.sql.connector.expressions.NamedReference,
-                  Some(thr)) if r.fieldNames.length == 1 =>
-                (r.fieldNames.head, thr, thenV, elseV) match {
-                  case ("precipitation", 0.0, 1.0, 0.0) =>
-                    Some("precipitation_hours")
-                  case ("shortwave_radiation", 120.0, 3600.0, 0.0) =>
-                    Some("sunshine_duration")
-                  case _ => None
-                }
-              case _ => None
-            }
-          case _ => None
-        }
-      case _ => None
-    }
-
-  private def asPushedAgg(
-      f: org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc): Option[PushedAgg] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Max, Min, Sum}
-    f match {
-      case m: Min => m.column match {
-        case ref: org.apache.spark.sql.connector.expressions.NamedReference
-            if ref.fieldNames.length == 1 =>
-          dailyCounterpart.get(("MIN", ref.fieldNames.head)).map(PushedAgg("MIN", _))
-        case _ => None
-      }
-      case m: Max => m.column match {
-        case ref: org.apache.spark.sql.connector.expressions.NamedReference
-            if ref.fieldNames.length == 1 =>
-          dailyCounterpart.get(("MAX", ref.fieldNames.head)).map(PushedAgg("MAX", _))
-        case _ => None
-      }
-      case s: Sum if !s.isDistinct =>
-        sumOfCaseDaily(s.column).map(PushedAgg("SUM", _))
-      case _ => None
-    }
-  }
-
-  private def dayAligned: Boolean = {
-    val day = OpenMeteoAggReader.DayMicros
-    tsLoMicros.forall(_ % day == 0) && tsHiMicros.forall(_ % day == 0)
-  }
-
-  /** Grouping the source can answer: plain references to the location
-    * coordinates (each block/payload carries its own latitude/longitude,
-    * so per-location daily pre-aggregates are exact). Returned in the
-    * query's grouping order; None = not pushable.
-    */
-  private def groupColsOf(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[Seq[String]] = {
-    val names = agg.groupByExpressions.toSeq.map {
-      case r: org.apache.spark.sql.connector.expressions.NamedReference
-          if r.fieldNames.length == 1 => Some(r.fieldNames.head)
-      case _ => None
-    }
-    if (names.nonEmpty && names.forall(_.isDefined)) {
-      val ns = names.map(_.get)
-      if (ns.distinct == ns && ns.toSet.subsetOf(Set("latitude", "longitude")))
-        Some(ns)
-      else None
-    } else None
-  }
-
-  private def canPushAgg(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    opts.granKey == WeatherSchemas.GranHourly && dayAligned &&
-      (agg.groupByExpressions.isEmpty || groupColsOf(agg).isDefined) &&
-      agg.aggregateExpressions.nonEmpty &&
-      agg.aggregateExpressions.forall(asPushedAgg(_).isDefined)
-
-  /** Complete only for the GLOBAL aggregate (one row, one partition).
-    * Grouped pushdown stays PARTIAL: Spark keeps the final merge, so the
-    * scan may stay parallel and split/repeat locations across partitions.
-    */
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    agg.groupByExpressions.isEmpty && canPushAgg(agg)
-
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    canPushAgg(agg) && {
-      pushedAggs = agg.aggregateExpressions.toSeq.map(asPushedAgg(_).get)
-      pushedGroupCols = groupColsOf(agg).getOrElse(Seq.empty)
-      true
-    }
-
   override def build(): Scan =
-    if (pushedAggs.nonEmpty)
-      new OpenMeteoAggScan(opts, pushedAggs, tsLoMicros, tsHiMicros,
-        pushedGroupCols)
-    else
-      new OpenMeteoScan(opts, requiredSchema, pushed, tsLoMicros, tsHiMicros,
-        limit, topN)
+    new OpenMeteoScan(opts, requiredSchema, pushed, tsLoMicros, tsHiMicros,
+      limit, topN)
 }
 
 /** Accepted TopN pushdown: leading sort key (a time-axis column), its
@@ -464,7 +337,7 @@ class OpenMeteoScan(opts: OpenMeteoOptions, schema: StructType,
     * against. Chunking applies only when BOTH time bounds were pushed.
     */
   private def chunkBounds(n: Int): Seq[(Option[Long], Option[Long])] = {
-    val chunkMicros = opts.chunkDays.toLong * 24L * 3600L * 1000000L
+    val chunkMicros = opts.chunkDays * MICROS_PER_DAY
     (lo, hi) match {
       case (Some(l), Some(h)) if opts.chunkDays > 0 && h - l > chunkMicros &&
           // never exceed the parallelism cap with chunking alone
@@ -610,8 +483,7 @@ final case class OpenMeteoPartition(blockIndices: Array[Int],
   * [[HasPartitionKey]] half of the keyed-planning contract (the other
   * half is the scan's reported [[KeyGroupedPartitioning]]). Key layout
   * must match the reported transforms element-for-element: (latitude,
-  * longitude) doubles for the row scan, the pushed group columns for
-  * the grouped aggregate scan.
+  * longitude) doubles.
   */
 final case class KeyedOpenMeteoPartition(blockIndices: Array[Int],
     lo: Option[Long], hi: Option[Long], key: Array[Double])
@@ -700,8 +572,9 @@ class OpenMeteoReader(opts: OpenMeteoOptions, schema: StructType,
       val catalog = if (opts.granKey == WeatherSchemas.GranDaily)
         WeatherSchemas.dailyByName else WeatherSchemas.hourlyByName
       val vars = schema.fieldNames.filter(catalog.contains)
-      val dates = if (opts.granKey == WeatherSchemas.GranDaily) Map.empty[String, String]
-      else Map(
+      // without the window a server default one would silently truncate
+      // the series (and any aggregate over it)
+      val dates = Map(
         "start_date" -> lo.map(m => DateTimeUtils.microsToLocalDateTime(m)
           .toLocalDate.toString),
         "end_date" -> hi.map(m => DateTimeUtils.microsToLocalDateTime(m - 1L)
@@ -732,7 +605,10 @@ class OpenMeteoReader(opts: OpenMeteoOptions, schema: StructType,
             java.time.LocalDateTime.parse(timeArr.get(i).asText(),
               java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm")))
       }.toArray
-      keep = times.map(t => lo.forall(t >= _) && hi.forall(t < _))
+      // the window is in local micros; a day starts at its midnight
+      val micros = if (opts.granKey == WeatherSchemas.GranDaily)
+        times.map(_ * MICROS_PER_DAY) else times
+      keep = micros.map(t => lo.forall(t >= _) && hi.forall(t < _))
       varArrays = schema.fieldNames
         .filter(f => g.has(f)).map(f => f -> g.get(f)).toMap
     }

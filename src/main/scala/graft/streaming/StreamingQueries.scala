@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions, Tables}
 import graft.Scratch.{deleteQuietly, exitScopedDir, tempDir}
 import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -112,18 +112,13 @@ object StreamingQueries {
       writer: => DataStreamWriter[_]): StreamingQuery = {
     val ckDir = checkpoint.getOrElse(tempDir("graft_ck"))
     val set = ("spark.sql.shuffle.partitions" -> StatePartitions.toString) +: confs
-    val prev = set.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      set.foreach { case (k, v) => s.conf.set(k, v) }
+    try Sessions.withConfs(s, set: _*) {
       val q = writer.option("checkpointLocation", ckDir)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       q
-    } finally {
-      prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-      if (checkpoint.isEmpty) deleteQuietly(ckDir)
-    }
+    } finally if (checkpoint.isEmpty) deleteQuietly(ckDir)
   }
 
   /** A terminated memory-sink replay: the query and the sink's rows. */

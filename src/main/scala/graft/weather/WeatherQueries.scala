@@ -1,6 +1,6 @@
 package graft.weather
 
-import graft.QueryDef
+import graft.{QueryDef, Sessions}
 import graft.operators.AsOf
 import org.apache.spark.sql.functions._
 
@@ -411,8 +411,7 @@ object WeatherQueries {
          |  round(h, 3) AS grid_dist_km
          |FROM r WHERE rn = 1 ORDER BY latitude""".stripMargin) { (s, _) =>
       import s.implicits._
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      try {
+      Sessions.withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true") {
         val fleet = s.read.format("openmeteo")
           .option("path", s"${WeatherEngine.defaultFixtureDir}/hourly_7d.json")
           .load()
@@ -427,14 +426,15 @@ object WeatherQueries {
             "avg_temp", "n_hours", "grid_dist_km")
           .localCheckpoint()
           .orderBy("latitude")
-      } finally s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+      }
     },
 
     // §4 aggregate pushdown: a global MIN/MAX through the connector is
-    // answered from the source's DAILY pre-aggregates (PushedAggregates
-    // in the plan, asserted in OpenMeteoSourceSpec); the oracle computes
-    // the same values natively from the hourly arrays — so this row IS
-    // the pushed ≡ native equivalence, driver-checked.
+    // answered from the source's DAILY pre-aggregates (DailyRollupPushdown
+    // re-aggregates a daily scan, asserted in DailyRollupPushdownSpec);
+    // the oracle computes the same values natively from the hourly
+    // arrays — so this row IS the pushed ≡ native equivalence,
+    // oracle-checked.
     "wx16_connector_agg" -> QueryDef.sql(
       s"""WITH ${wideCte("hourly_7d.json")}
          |SELECT max(temperature_2m) AS t_max, min(temperature_2m) AS t_min,
@@ -449,8 +449,8 @@ object WeatherQueries {
 
     // §4 GROUPED aggregate pushdown — the multi-location fleet query:
     // per-(latitude, longitude) MIN/MAX answered from each location's
-    // daily pre-aggregates (PushedGroupBy in the plan, partial pushdown —
-    // Spark's merge agg stays on top so partitions may split locations).
+    // daily pre-aggregates (DailyRollupPushdown: the grouped Aggregate
+    // reads a daily scan and takes the max/min over its days).
     // Oracle computes the same per-location values from the hourly arrays:
     // grouped pushed ≡ native, driver-checked over 2 locations.
     "wx17_connector_agg_grouped" -> QueryDef.sql(
@@ -470,7 +470,7 @@ object WeatherQueries {
     // §4 SUM-of-case aggregate pushdown: the two EXACT daily counterparts
     // — precipitation_hours (integer slot count) and sunshine_duration
     // (multiples of 3600 s) — answered by SUMMING the source's daily
-    // block instead of scanning hourly rows (complete pushdown, one row).
+    // block instead of scanning hourly rows (DailyRollupPushdown).
     // The oracle derives the same values from the hourly arrays, so
     // pushed ≡ hourly-derived proves the payload-consistency contract
     // end-to-end. Rounded daily sums (precipitation_sum…) still bail.

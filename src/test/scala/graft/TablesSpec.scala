@@ -57,13 +57,6 @@ class TablesSpec extends AnyFunSuite {
     } finally writer.close()
   }
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("a repeated load starts no job before its action and reads the same rows") {
     val dir = TestSpark.tempDir("graft_tables_once")
     Files.copy(Paths.get(s"${TestSpark.sfDir}/orders.parquet"), Paths.get(s"$dir/orders.parquet"))
@@ -102,18 +95,27 @@ class TablesSpec extends AnyFunSuite {
     val dir = TestSpark.tempDir("graft_tables_nanos")
     writeParquet(s"$dir/n.parquet", "message n { required int64 ts (TIMESTAMP(NANOS,true)); }",
       Seq(Seq("ts" -> 1700000000123456789L)))
-    withConf(NanosAsLong, "true") {
+    Sessions.withConfs(spark, NanosAsLong -> "true") {
       assert(Tables.load(spark, dir, "n").schema("ts").dataType === LongType)
     }
-    withConf(NanosAsLong, "false") {
+    Sessions.withConfs(spark, NanosAsLong -> "false") {
       // without the conf Spark cannot decode TIMESTAMP(NANOS): a cached
       // LongType schema would have been served silently instead
       val e = intercept[Exception](Tables.load(spark, dir, "n"))
       assert(String.valueOf(e.getMessage).contains("TIMESTAMP(NANOS"), e.getMessage)
     }
-    withConf(NanosAsLong, "true") {
+    Sessions.withConfs(spark, NanosAsLong -> "true") {
       assert(Tables.load(spark, dir, "n").schema("ts").dataType === LongType)
     }
+  }
+
+  test("Tables.events leaves the caller's session confs as they are") {
+    val saved = spark.conf.getOption(NanosAsLong)
+    spark.conf.unset(NanosAsLong)
+    try {
+      Tables.events(spark, TestSpark.sfDir).collect()
+      assert(!spark.conf.getAll.contains(NanosAsLong))
+    } finally saved.foreach(spark.conf.set(NanosAsLong, _))
   }
 
   test("Tables.events decodes ts as before, for nanosecond and microsecond files") {

@@ -31,17 +31,9 @@ object TestSpark {
   /** `body` with `n` shuffle partitions that AQE does not coalesce: a
     * small aggregate then spans `n` partitions instead of one. The
     * session's settings are restored afterwards. */
-  def withPartitions[T](n: Int)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withPartitions[T](n: Int)(body: => T): T =
+    Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
   /** The SQL execution of every job `run` starts in a round of `op`,
     * by round: jobs are described "`op`: round r". A convergence probe

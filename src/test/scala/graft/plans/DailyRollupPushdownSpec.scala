@@ -194,9 +194,133 @@ class DailyRollupPushdownSpec extends AnyFunSuite {
   }
 
   test("non-day grouping bails out") {
+    // neither (lat, lon, day) nor a subset of the location: an hour of
+    // day is not a union of whole days
     val df = hourly()
-      .groupBy(col("latitude"), col("longitude"))
+      .groupBy(col("latitude"), hour(col("ts_local")).as("h"))
       .agg(max("temperature_2m").as("temperature_2m_max"))
+    assert(scanGrans(df) === Seq(WeatherSchemas.GranHourly))
+  }
+
+  // ---- across days: global and (lat, lon)-grouped aggregates ----
+
+  private def native() = WeatherOps.toWide(WeatherOps.readBlocks(spark, fixture))
+
+  test("global MIN/MAX push to the daily block; pushed ≡ native (golden)") {
+    def shaped(df: DataFrame) = df.agg(
+      max("temperature_2m").as("tmax"), min("temperature_2m").as("tmin"),
+      max("uv_index").as("uvmax"))
+    val agg = shaped(hourly())
+    assert(scanGrans(agg) === Seq(WeatherSchemas.GranDaily),
+      s"aggregates not pushed:\n${agg.queryExecution.optimizedPlan}")
+    assert(scanTables(agg).flatMap(_.opts.variables).toSet ===
+      Set("temperature_2m_max", "temperature_2m_min", "uv_index_max"))
+    // golden equivalence: the pushed (daily-block) answer must equal the
+    // native hourly-row aggregation — SURVEY §4's pushed ≡ native test
+    val row = agg.collect()(0)
+    val nat = shaped(native()).collect()(0)
+    assert(row.getDouble(0) === nat.getDouble(0))
+    assert(row.getDouble(1) === nat.getDouble(1))
+    assert(row.getDouble(2) === nat.getDouble(2))
+  }
+
+  test("SUM-of-case pushes to the exact daily counterparts; pushed ≡ native (golden)") {
+    def shaped(df: DataFrame) = df.agg(
+      sum(when(col("precipitation") > 0, 1.0).otherwise(0.0)).as("ph"),
+      sum(when(col("shortwave_radiation") > 120, 3600.0).otherwise(0.0)).as("ss"))
+    val agg = shaped(hourly())
+    assert(scanGrans(agg) === Seq(WeatherSchemas.GranDaily),
+      s"sum-of-case not pushed:\n${agg.queryExecution.optimizedPlan}")
+    assert(scanTables(agg).flatMap(_.opts.variables).toSet ===
+      Set("precipitation_hours", "sunshine_duration"))
+    val row = agg.collect()(0)
+    val nat = shaped(native()).collect()(0)
+    assert(row.getDouble(0) === nat.getDouble(0))
+    assert(row.getDouble(1) === nat.getDouble(1))
+
+    // a ROUNDED daily sum has no exact counterpart: must bail to native
+    val rounded = hourly().agg(sum("precipitation").as("psum"))
+    assert(scanGrans(rounded) === Seq(WeatherSchemas.GranHourly),
+      "plain sum over a rounded daily counterpart must not push")
+    // an unrecognized case shape (different threshold) must bail too
+    val other = hourly().agg(
+      sum(when(col("precipitation") > 1.5, 1.0).otherwise(0.0)).as("x"))
+    assert(scanGrans(other) === Seq(WeatherSchemas.GranHourly))
+  }
+
+  test("agg pushdown respects day-aligned pushed bounds and bails otherwise") {
+    // day-aligned range: pushed, and only the in-range days aggregate
+    def alignedRange(df: DataFrame) = df
+      .filter(col("ts_local") >= lit("2024-07-02 00:00:00").cast("timestamp_ntz") &&
+        col("ts_local") < lit("2024-07-04 00:00:00").cast("timestamp_ntz"))
+      .agg(max("temperature_2m").as("tmax"))
+    val aligned = alignedRange(hourly())
+    assert(scanGrans(aligned) === Seq(WeatherSchemas.GranDaily),
+      "day-aligned range should push the aggregate")
+    // the translated date range is consumed by the daily scan
+    assert(!aligned.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]),
+      s"date window left as a post-scan filter:\n${aligned.queryExecution.optimizedPlan}")
+    assert(aligned.collect()(0).getDouble(0) ===
+      alignedRange(native()).collect()(0).getDouble(0))
+
+    // mid-day bound: NOT pushed (daily pre-aggregates can't answer it),
+    // result comes from the native hourly path
+    val unaligned = hourly()
+      .filter(col("ts_local") >= lit("2024-07-02 06:00:00").cast("timestamp_ntz"))
+      .agg(max("temperature_2m").as("tmax"))
+    assert(scanGrans(unaligned) === Seq(WeatherSchemas.GranHourly),
+      "mid-day bound must fall back to the native aggregation")
+    // grouping the source can't answer (a non-coordinate column): no push
+    val byTs = hourly().groupBy("ts_local").agg(max("temperature_2m"))
+    assert(scanGrans(byTs) === Seq(WeatherSchemas.GranHourly))
+  }
+
+  test("GROUPED agg pushdown: per-location MIN/MAX from the daily block, pushed ≡ native") {
+    def shaped(df: DataFrame) = df.groupBy("latitude", "longitude")
+      .agg(max("temperature_2m").as("tmax"), min("temperature_2m").as("tmin"))
+    val grouped = shaped(hourly())
+    assert(scanGrans(grouped) === Seq(WeatherSchemas.GranDaily),
+      s"grouped aggregates not pushed:\n${grouped.queryExecution.optimizedPlan}")
+    // the Aggregate stays on top and re-combines the per-day rows
+    assert(grouped.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]))
+
+    def byLocation(df: DataFrame) = df.collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> (r.getDouble(2), r.getDouble(3)))
+      .toMap
+    val pushedRows = byLocation(grouped)
+    assert(pushedRows === byLocation(shaped(native())),
+      "grouped pushed ≡ native equivalence broken")
+    assert(pushedRows.size === 2, "expected one row per fixture location")
+
+    // grouping order follows the query, not the schema
+    val flipped = hourly().groupBy("longitude", "latitude")
+      .agg(max("temperature_2m").as("tmax"))
+    assert(scanGrans(flipped) === Seq(WeatherSchemas.GranDaily))
+    assert(flipped.columns.toSeq === Seq("longitude", "latitude", "tmax"))
+    assert(flipped.collect().length === 2)
+  }
+
+  test("global mode within group bails out (the daily mode does not re-combine)") {
+    val df = hourly()
+      .agg(expr("mode() within group (order by weather_code)").as("weather_code"))
+    assert(scanGrans(df) === Seq(WeatherSchemas.GranHourly))
+  }
+
+  test("a slot count over a cast column bails out (it counts other hours)") {
+    // cast(precipitation as int) > 0 skips the hours with 0 < p < 1
+    // that precipitation_hours counts
+    val slots = sum(when(col("precipitation").cast("int") > 0, 1.0).otherwise(0.0))
+    val perDay = hourly()
+      .groupBy(col("latitude"), col("longitude"), to_date(col("ts_local")).as("date"))
+      .agg(slots.as("precipitation_hours"))
+    assert(scanGrans(perDay) === Seq(WeatherSchemas.GranHourly))
+    assert(scanGrans(hourly().agg(slots.as("ph"))) === Seq(WeatherSchemas.GranHourly))
+  }
+
+  test("global rounded sum bails out (rounded daily sums do not add up exactly)") {
+    val df = hourly().agg(round(sum("precipitation"), 2).as("precipitation_sum"))
     assert(scanGrans(df) === Seq(WeatherSchemas.GranHourly))
   }
 }

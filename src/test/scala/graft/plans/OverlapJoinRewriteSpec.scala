@@ -15,10 +15,8 @@ class OverlapJoinRewriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withBinWidth[T](w: String)(body: => T): T = {
-    spark.conf.set(OverlapJoinRewrite.BinWidthKey, w)
-    try body finally spark.conf.unset(OverlapJoinRewrite.BinWidthKey)
-  }
+  private def withBinWidth[T](w: String)(body: => T): T =
+    graft.Sessions.withConfs(spark, OverlapJoinRewrite.BinWidthKey -> w)(body)
 
   private def finalPlan(df: DataFrame): String = {
     df.write.mode("overwrite").format("noop").save()
@@ -126,6 +124,13 @@ class OverlapJoinRewriteSpec extends AnyFunSuite {
     assert(p.contains(OverlapJoinRewrite.BinColName), s"did not rewrite:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"nested-loop join survived:\n$p")
+  }
+
+  test("j12 scopes its bin width and keeps the one the caller set") {
+    withBinWidth("32") {
+      graft.SparkEntry.queries("j12_overlap_rewrite")(spark, TestSpark.sfDir).collect()
+      assert(spark.conf.getOption(OverlapJoinRewrite.BinWidthKey) === Some("32"))
+    }
   }
 
   test("rewrite works from pure SQL through the injected extensions") {

@@ -124,6 +124,45 @@ class HttpTransportSpec extends AnyFunSuite {
     }
   }
 
+  test("live mode: a day-grouped rollup over a date range sends start_date/end_date") {
+    val spark = graft.TestSpark.spark
+    import org.apache.spark.sql.functions.{col, lit, max, to_date}
+    val fixture = s"${graft.TestSpark.fixtures}/hourly_7d.json"
+    val lines = scala.io.Source.fromFile(fixture, "UTF-8").getLines()
+      .filter(_.nonEmpty).toVector
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
+    withServer { ex =>
+      val q = ex.getRequestURI.getQuery.split("&")
+        .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
+      queries.add(q)
+      lines.find(l => OfflineTransport.extractNumber(l, "latitude").toString ==
+          q("latitude"))
+        .map((200, _)).getOrElse((404, "no such location"))
+    } { url =>
+      def rollup(df: org.apache.spark.sql.DataFrame) = df
+        .filter(to_date(col("ts_local")) >= lit(java.sql.Date.valueOf("2024-07-02")) &&
+          to_date(col("ts_local")) <= lit(java.sql.Date.valueOf("2024-07-04")))
+        .groupBy(col("latitude"), col("longitude"), to_date(col("ts_local")).as("date"))
+        .agg(max("temperature_2m").as("temperature_2m_max"))
+        .collect().map(_.toString).sorted.toSeq
+      val live = rollup(spark.read.format("openmeteo")
+        .option("httpBaseUrl", url)
+        .option("locations", "50.08,14.43;49.19,16.61")
+        .load())
+      val offline = rollup(spark.read.format("openmeteo").option("path", fixture).load())
+      assert(live.length === 6) // 2 locations × 3 whole days
+      assert(live === offline)
+      import scala.jdk.CollectionConverters._
+      val sent = queries.asScala.toSeq
+      assert(sent.map(_("latitude")).toSet === Set("50.08", "49.19"), s"$sent")
+      sent.foreach { q =>
+        assert(q.get("daily").contains("temperature_2m_max"), s"not a daily fetch: $q")
+        assert(q.get("start_date").contains("2024-07-02") &&
+          q.get("end_date").contains("2024-07-04"), s"window not sent: $q")
+      }
+    }
+  }
+
   test("Geocoder: offline exactly-one semantics + live lookup through the seam") {
     val places = s"${graft.TestSpark.fixtures}/places.json"
     val g = Geocoder.offline(places, backoffBaseMs = 1L)

@@ -258,114 +258,18 @@ class OpenMeteoSourceSpec extends AnyFunSuite {
     assert(df.count() === 2 * (24 + 6))
   }
 
-  test("global MIN/MAX push to the daily block; pushed ≡ native (golden)") {
-    val agg = read().agg(
-      max("temperature_2m").as("tmax"), min("temperature_2m").as("tmin"),
-      max("uv_index").as("uvmax"))
-    val row = agg.collect()(0)
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates: [MAX(temperature_2m_max), " +
-      "MIN(temperature_2m_min), MAX(uv_index_max)]"),
-      s"aggregates not pushed:\n$plan")
-    // golden equivalence: the pushed (daily-block) answer must equal the
-    // native hourly-row aggregation — SURVEY §4's pushed ≡ native test
-    val native = graft.weather.WeatherOps.toWide(
-      graft.weather.WeatherOps.readBlocks(spark, fixture))
-      .agg(max("temperature_2m"), min("temperature_2m"), max("uv_index"))
-      .collect()(0)
-    assert(row.getDouble(0) === native.getDouble(0))
-    assert(row.getDouble(1) === native.getDouble(1))
-    assert(row.getDouble(2) === native.getDouble(2))
-  }
-
-  test("SUM-of-case pushes to the exact daily counterparts; pushed ≡ native (golden)") {
-    val agg = read().agg(
-      sum(when(col("precipitation") > 0, 1.0).otherwise(0.0)).as("ph"),
-      sum(when(col("shortwave_radiation") > 120, 3600.0).otherwise(0.0)).as("ss"))
-    val row = agg.collect()(0)
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates: [SUM(precipitation_hours), " +
-      "SUM(sunshine_duration)]"), s"sum-of-case not pushed:\n$plan")
-    val native = graft.weather.WeatherOps.toWide(
-      graft.weather.WeatherOps.readBlocks(spark, fixture))
-      .agg(sum(when(col("precipitation") > 0, 1.0).otherwise(0.0)),
-        sum(when(col("shortwave_radiation") > 120, 3600.0).otherwise(0.0)))
-      .collect()(0)
-    assert(row.getDouble(0) === native.getDouble(0))
-    assert(row.getDouble(1) === native.getDouble(1))
-
-    // a ROUNDED daily sum has no exact counterpart: must bail to native
-    val rounded = read().agg(sum("precipitation").as("psum"))
-    assert(!rounded.queryExecution.executedPlan.toString
-      .contains("PushedAggregates"),
-      "plain sum over a rounded daily counterpart must not push")
-    // an unrecognized case shape (different threshold) must bail too
-    val other = read().agg(
-      sum(when(col("precipitation") > 1.5, 1.0).otherwise(0.0)).as("x"))
-    assert(!other.queryExecution.executedPlan.toString
-      .contains("PushedAggregates"))
-  }
-
-  test("agg pushdown respects day-aligned pushed bounds and bails otherwise") {
-    // day-aligned range: pushed, and only the in-range days aggregate
-    val aligned = read()
-      .filter(col("ts_local") >= lit("2024-07-02 00:00:00").cast("timestamp_ntz") &&
-        col("ts_local") < lit("2024-07-04 00:00:00").cast("timestamp_ntz"))
-      .agg(max("temperature_2m").as("tmax"))
-    val alignedRow = aligned.collect()(0)
-    assert(aligned.queryExecution.executedPlan.toString.contains("PushedAggregates"),
-      "day-aligned range should push the aggregate")
-    val nativeRange = graft.weather.WeatherOps.toWide(
-      graft.weather.WeatherOps.readBlocks(spark, fixture))
-      .filter(col("ts_local") >= lit("2024-07-02 00:00:00").cast("timestamp_ntz") &&
-        col("ts_local") < lit("2024-07-04 00:00:00").cast("timestamp_ntz"))
-      .agg(max("temperature_2m")).collect()(0)
-    assert(alignedRow.getDouble(0) === nativeRange.getDouble(0))
-
-    // mid-day bound: NOT pushed (daily pre-aggregates can't answer it),
-    // result comes from the native hourly path
-    val unaligned = read()
-      .filter(col("ts_local") >= lit("2024-07-02 06:00:00").cast("timestamp_ntz"))
-      .agg(max("temperature_2m").as("tmax"))
-    assert(!unaligned.queryExecution.executedPlan.toString.contains("PushedAggregates"),
-      "mid-day bound must fall back to the native aggregation")
-    // grouping the source can't answer (a non-coordinate column): no push
-    val byTs = read().groupBy("ts_local").agg(max("temperature_2m"))
-    assert(!byTs.queryExecution.executedPlan.toString.contains("PushedAggregates"))
-  }
-
-  test("GROUPED agg pushdown: per-location MIN/MAX from the daily block, pushed ≡ native") {
-    val grouped = read().groupBy("latitude", "longitude")
-      .agg(max("temperature_2m").as("tmax"), min("temperature_2m").as("tmin"))
-    val plan = grouped.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates: [MAX(temperature_2m_max), " +
-      "MIN(temperature_2m_min)]"), s"grouped aggregates not pushed:\n$plan")
-    assert(plan.contains("PushedGroupBy: [latitude, longitude]"),
-      s"grouping not pushed:\n$plan")
-    // PARTIAL pushdown: Spark's final merge aggregate must stay on top
-    // (partitions may split/repeat locations at fleet scale)
-    assert(plan.contains("HashAggregate") || plan.contains("SortAggregate"),
-      s"grouped pushdown must keep the final merge agg:\n$plan")
-
-    val pushedRows = grouped.collect()
-      .map(r => (r.getDouble(0), r.getDouble(1)) -> (r.getDouble(2), r.getDouble(3)))
-      .toMap
-    val native = graft.weather.WeatherOps.toWide(
-      graft.weather.WeatherOps.readBlocks(spark, fixture))
-      .groupBy("latitude", "longitude")
-      .agg(max("temperature_2m"), min("temperature_2m"))
-      .collect()
-      .map(r => (r.getDouble(0), r.getDouble(1)) -> (r.getDouble(2), r.getDouble(3)))
-      .toMap
-    assert(pushedRows === native, "grouped pushed ≡ native equivalence broken")
-    assert(pushedRows.size === 2, "expected one row per fixture location")
-
-    // grouping order follows the query, not the schema
-    val flipped = read().groupBy("longitude", "latitude")
-      .agg(max("temperature_2m").as("tmax"))
-    assert(flipped.queryExecution.executedPlan.toString
-      .contains("PushedGroupBy: [longitude, latitude]"))
-    assert(flipped.collect().length === 2)
+  test("daily scan takes a date range as its pushed window") {
+    val daily = spark.read.format("openmeteo").option("path", fixture)
+      .option("granularity", "daily").load()
+    val df = daily.filter(col("date") > lit(java.sql.Date.valueOf("2024-07-01")) &&
+      col("date") <= lit(java.sql.Date.valueOf("2024-07-03")))
+    // consumed by the scan: no post-scan Filter node
+    assert(!df.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]),
+      df.queryExecution.optimizedPlan.toString)
+    val days = df.select("date").distinct().orderBy("date").collect().map(_.getDate(0).toString)
+    assert(days.toSeq === Seq("2024-07-02", "2024-07-03"))
+    assert(df.count() === 2 * 2)
   }
 
   test("runtime coordinate filtering prunes block partitions before any fetch") {

@@ -14,6 +14,10 @@ change from one JVM (or one run) to the next without the plan changing:
   - RDD / checkpoint ids     `MapPartitionsRDD[42]`, `rdd_42`, `RDD 42`
   - lambda variable counters `lambda x_17`          -> `lambda x_N`
   - JVM identity hashes      `[D@1a2b3c`            -> `[D@H`
+  - codegen-stage ids        `[codegen id : 8]`     -> `[codegen id : N]`
+  - AQE query-stage ids      `Arguments: 9`         -> `Arguments: N`
+  - random scratch dirs      `graft_ck3060760675624958355` -> `graft_ckN`
+  - JVM lambda class names   `$$Lambda$6479/0x7f16…` -> `$$Lambda/0xH`
 
 Prints IDENTICAL or a unified diff per pair, lists files present on one
 side only, and exits 1 if any pair differs or is unpaired.
@@ -33,6 +37,13 @@ RULES = [
     (re.compile(r"\bRDD \d+"), "RDD N"),
     (re.compile(r"\b(lambda [A-Za-z]+)_\d+"), r"\1_N"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    # a query stage's only argument is its id (other operators print
+    # words or lists there)
+    (re.compile(r"^Arguments: \d+$", re.M), "Arguments: N"),
+    # Files.createTempDirectory appends a random unsigned long to the prefix
+    (re.compile(r"(/[A-Za-z_][\w-]*?)\d{10,}(?=[/\],\s]|$)", re.M), r"\1N"),
+    (re.compile(r"\$\$Lambda(\$\d+)?/0x[0-9a-f]+"), "$$Lambda/0xH"),
 ]
 
 
