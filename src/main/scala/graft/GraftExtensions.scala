@@ -31,5 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Range-predicate joins: pure interval-overlap inner joins rewrite
     // to a binned equi join when spark.graft.overlapJoin.binWidth is set.
     ext.injectOptimizerRule(_ => graft.plans.OverlapJoinRewrite)
+    // Kernel fan-out: each FanOut marker becomes a sized Repartition or nothing.
+    ext.injectOptimizerRule(graft.plans.FanOutWidth(_))
   }
 }

@@ -114,11 +114,8 @@ object ScaleSoak {
       val (cents, books) = Similarity.dataDefinedQuantizers(emb, 16, 8)
       val idxDir = IndexCache.persistedIndex("ivfpqdd6", dir,
         IndexCache.fitFingerprint(cents, books, roundTo = 6)) { out =>
-        Similarity.pqEncode(Similarity.ivfAssign(emb, cents, roundTo = 6),
-            books, roundTo = 6)
-          .select("vec_id", "centroid_id", "pq_code")
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(out)
+        Similarity.writeIvfLists(Similarity.pqEncode(
+          Similarity.ivfAssign(emb, cents, roundTo = 6), books, roundTo = 6), out)
       }
       // FIXED query set (copy-0 only — shifted copies start at Step):
       // the production serve regime — corpus grows, the query batch
@@ -151,10 +148,8 @@ object ScaleSoak {
     val idxDir = s"/tmp/graft_soak_ivfidx_${AmpVersion}_${fitFp}_" +
       dir.replaceAll("[^a-zA-Z0-9]", "_")
     if (!new java.io.File(s"$idxDir/_SUCCESS").exists())
-      Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books)
-        .select("vec_id", "centroid_id", "pq_code")
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(idxDir)
+      Similarity.writeIvfLists(
+        Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books), idxDir)
     Similarity.ivfAdcTopKIndexed(spark.read.parquet(idxDir), emb, 0L, 20,
       cents, books, nProbe = 4, rerank = 4)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.plans.FanOut
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -382,7 +383,7 @@ object Analytics {
         |  CAST(max(cum) AS DOUBLE) / CAST((SELECT total FROM t) AS DOUBLE)
         |    AS coverage
         |FROM k ORDER BY vocab_size""".stripMargin) { (s, d) =>
-      val f = Scale.fanOutSmallScan(Tables.documents(s, d))
+      val f = FanOut.scan(Tables.documents(s, d))
         .select(explode(graft.functions.TextFunctions.words(col("text")))
           .as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -424,7 +425,7 @@ object Analytics {
         |FROM g JOIN df USING (sh)
         |GROUP BY g.doc_id
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val g = Scale.fanOutSmallScan(Tables.documents(s, d))
+      val g = FanOut.scan(Tables.documents(s, d))
         .select(col("doc_id"), explode(array_distinct(
           graft.functions.Sketches.wordShinglesText(col("text"), 3))).as("sh"))
       val df = g.groupBy("sh").agg(count(lit(1)).as("nd"))

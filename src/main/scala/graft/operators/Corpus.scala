@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.plans.FanOut
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -80,7 +81,7 @@ object Corpus {
     */
   def unigramLogProb(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val tf = Scale.fanOutSmallScan(docs)
+    val tf = FanOut.scan(docs)
       .select(col(idCol), explode(TextFunctions.words(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -106,7 +107,7 @@ object Corpus {
   def topNgrams(docs: DataFrame, n: Int, k: Int,
       textCol: String = "text"): DataFrame = {
     require(n >= 1 && k >= 1, "n and k must be positive")
-    Scale.fanOutSmallScan(docs).select(explode(
+    FanOut.scan(docs).select(explode(
         graft.functions.Sketches.wordShinglesText(col(textCol), n)).as("ngram"))
       .groupBy(col("ngram"))
       .agg(count(lit(1)).cast("long").as("cnt"))
@@ -136,7 +137,7 @@ object Corpus {
       textCol: String = "text"): DataFrame = {
     require(minCount >= 1, "minCount must be positive")
     val ws = graft.functions.TextFunctions.words(col(textCol))
-    val d = Scale.fanOutSmallScan(docs)
+    val d = FanOut.scan(docs)
     val bigrams = d.select(ws.as("__ws"), col(textCol))
       .filter(size(col("__ws")) >= 2)
       .select(explode(
@@ -400,7 +401,7 @@ object Corpus {
     */
   def sourceKl(docs: DataFrame, sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
-    val tf = Scale.fanOutSmallScan(docs)
+    val tf = FanOut.scan(docs)
       .select(col(sourceCol).as("source"),
         explode(TextFunctions.words(col(textCol))).as("term"))
       .groupBy(col("source"), col("term"))
@@ -438,7 +439,7 @@ object Corpus {
     // per shingle — bounded by the source-count, not the corpus), so a
     // distinct + string-keyed self-join (which would ship every shingle
     // through TWO exchanges and a join) never materializes.
-    val srcSets = Scale.fanOutSmallScan(docs).select(col(sourceCol).as("src"),
+    val srcSets = FanOut.scan(docs).select(col(sourceCol).as("src"),
         explode(graft.functions.Sketches.wordShinglesText(col(textCol), n)).as("g"))
       .groupBy(col("g"))
       .agg(array_sort(collect_set(col("src"))).as("ss"))
@@ -535,7 +536,7 @@ object Corpus {
     val gate = conv(substring(
         md5(concat(col(idCol).cast("string"), lit("#" + seed))), 1, 8),
       16, 10).cast("long") % 1000
-    val toks = Scale.fanOutSmallScan(docs)
+    val toks = FanOut.scan(docs)
       .select(col(idCol), col(sourceCol),
         explode(TextFunctions.words(col(textCol))).as("term"))
       .withColumn("__train", gate < trainPermille)
@@ -573,7 +574,7 @@ object Corpus {
     require(buckets >= 2, "buckets must be at least 2")
     val bucket = conv(substring(md5(col("term")), 1, 8), 16, 10)
       .cast("long") % buckets
-    val tf = Scale.fanOutSmallScan(docs)
+    val tf = FanOut.scan(docs)
       .select(col(idCol), col(sourceCol),
         explode(TextFunctions.words(col(textCol))).as("term"))
       .withColumn("b", bucket)
@@ -672,7 +673,7 @@ object Corpus {
       textCol: String, batchK: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(rounds >= 1, "rounds must be at least 1")
     require(batchK >= 1, "batchK must be at least 1")
-    val vocab0 = sc.checkpoint(Scale.fanOutSmallScan(docs)
+    val vocab0 = sc.checkpoint(FanOut.scan(docs)
       .select(explode(split(
         regexp_replace(lower(col(textCol)), "^\\s+|\\s+$", ""),
         "\\s+")).as("w"))
@@ -739,7 +740,7 @@ object Corpus {
   def bigramLogProb(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val ws = graft.functions.TextFunctions.words(col(textCol))
-    val dtf = Scale.fanOutSmallScan(docs)
+    val dtf = FanOut.scan(docs)
       .select(col(idCol), ws.as("__ws"), col(textCol))
       .filter(size(col("__ws")) >= 2)
       .select(col(idCol), explode(

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions
+import graft.plans.FanOut
 import org.apache.spark.sql.functions._
 
 /** Probe queries for the [[Corpus]] operators (driver contract — one
@@ -68,7 +69,7 @@ object CorpusQueries {
           sequence(lit(0L), ceil(size(ws).cast("double") / 6.0).cast("long") - 1),
           i => concat_ws(" ", slice(ws, (i * 6 + 1).cast("int"), lit(6))))))
       Corpus.lineDedup(
-          Scale.fanOutSmallScan(Tables.documents(s, d))
+          FanOut.scan(Tables.documents(s, d))
             .select(col("doc_id"), lined.as("text")),
           minDocs = 2)
         .orderBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{Sketches, TextFunctions}
+import graft.plans.FanOut
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
@@ -117,7 +118,7 @@ object Dedup {
     */
   def signatures(docs: DataFrame, numHashes: Int = 64, shingleSize: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    Scale.fanOutSmallScan(docs).select(col(idCol).as("id"),
+    FanOut.scan(docs).select(col(idCol).as("id"),
       Sketches.minhashSignature(TextFunctions.words(col(textCol)),
         numHashes, shingleSize).as("sig"))
 
@@ -137,7 +138,7 @@ object Dedup {
     */
   private def sketched(docs: DataFrame, idCol: String, textCol: String,
       sketch: Column): DataFrame =
-    Scale.fanOutSmallScan(docs)
+    FanOut.scan(docs)
       .filter(size(TextFunctions.words(col(textCol))) > 0)
       .select(col(idCol).as("id"), sketch.as("sig"))
 
@@ -254,7 +255,7 @@ object Dedup {
     val cands = minhashNearDups(docs, threshold * 0.6, idCol = idCol,
         textCol = textCol, family = family)
       .select("id_a", "id_b")
-    val words = Scale.fanOutSmallScan(docs).select(col(idCol).as("gid"),
+    val words = FanOut.scan(docs).select(col(idCol).as("gid"),
       TextFunctions.words(col(textCol)).as("w"))
     cands
       .join(words.select(col("gid").as("id_a"), col("w").as("w_a")), "id_a")
@@ -443,7 +444,7 @@ object Dedup {
     * dropped (they pair with nothing at any positive threshold). */
   private def shingleHashed(df: DataFrame, n: Int,
       idCol: String, textCol: String): DataFrame =
-    Scale.fanOutSmallScan(df).select(col(idCol).as("id"),
+    FanOut.scan(df).select(col(idCol).as("id"),
         TextFunctions.words(col(textCol)).as("w"))
       .select(col("id"),
         graft.functions.Sketches.shingleHashArray(col("w"), n).as("g"))
@@ -501,19 +502,7 @@ object Dedup {
     * sides (the crossJaccardPairs leak case). */
   private def verifyPairs(cands: DataFrame, shA: DataFrame, shB: DataFrame,
       threshold: Double): DataFrame =
-    cands
-      // The verify's cost is per-candidate CPU (a fused merge over two
-      // ~|doc|-long hash arrays), but its INPUT is the narrowest relation
-      // in the pipeline (16 B id pairs) — AQE's byte-based coalescing
-      // merges the candidate exchange to ONE partition and serializes
-      // the whole verify (measured on d9: two ~0.45 s single-task jobs,
-      // the warm probe's dominant cost). An explicit round-robin
-      // exchange at the session shuffle width restores CPU parallelism
-      // for negligible shuffle bytes; at cluster scale the same width
-      // applies (production sets spark.sql.shuffle.partitions to the
-      // cluster's reduce width — guide §2.5: the fan-out lever, keyed
-      // to the session, never the local core count).
-      .repartition(cands.sparkSession.sessionState.conf.numShufflePartitions)
+    FanOut.pairs(cands)
       .join(shA.select(col("id").as("id_a"), col("g").as("g_a")), "id_a")
       .join(shB.select(col("id").as("id_b"), col("g").as("g_b")), "id_b")
       .withColumn("j",
@@ -788,7 +777,7 @@ object Dedup {
     val hashes = Sketches.shingleHashArray(
       TextFunctions.words(col(textCol)), n)
     val evalHashes = evalDocs.select(explode(hashes).as("h")).distinct()
-    val candIds = Scale.fanOutSmallScan(corpus)
+    val candIds = FanOut.scan(corpus)
       .select(col(idCol), explode(hashes).as("h"))
       .join(broadcast(evalHashes), Seq("h"), "left_semi")
       .select(idCol).distinct()
@@ -841,7 +830,7 @@ object Dedup {
     val hashes = Sketches.shingleHashArray(
       TextFunctions.words(col(textCol)), n)
     val evalHashes = evalDocs.select(explode(hashes).as("h")).distinct()
-    val candIds = Scale.fanOutSmallScan(corpus)
+    val candIds = FanOut.scan(corpus)
       .select(col(idCol), explode(hashes).as("h"))
       .join(broadcast(evalHashes), Seq("h"), "left_semi")
       .select(idCol).distinct()
@@ -855,7 +844,7 @@ object Dedup {
         Sketches.wordShinglesText(col(textCol), n))).as("g"))
       .join(evalSh, Seq("g"), "left_semi")
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
-    Scale.fanOutSmallScan(corpus)
+    FanOut.scan(corpus)
       .select(col(idCol), size(array_distinct(
         Sketches.wordShinglesText(col(textCol), n))).cast("long")
         .as("n_shingles"))
@@ -907,7 +896,7 @@ object Dedup {
     val mightContain = GraftBridge.toColumn(BloomFilterMightContain(
       Literal.create(bytes, org.apache.spark.sql.types.BinaryType),
       GraftBridge.toExpression(col("h"))))
-    val candIds = Scale.fanOutSmallScan(corpus)
+    val candIds = FanOut.scan(corpus)
       .select(col(idCol), explode(hashes).as("h"))
       .filter(mightContain)
       .select(idCol).distinct()
@@ -944,7 +933,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val Eps = 1e-6
-    val words = Scale.fanOutSmallScan(docs).select(col(idCol).as("id"),
+    val words = FanOut.scan(docs).select(col(idCol).as("id"),
       TextFunctions.words(col(textCol)).as("w"))
     val sh = words.select(col("id"),
         graft.functions.Sketches.shingleHashArray(col("w"), n).as("g"))

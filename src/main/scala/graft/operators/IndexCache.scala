@@ -110,7 +110,7 @@ object IndexCache {
     * `_SUCCESS` marker, so the cache survives across JVMs the way
     * ScaleSoak's does), then served by a plain partitioned scan — the
     * DPP-capable layout every indexed read path wants. `build` must
-    * write partitionBy("centroid_id") parquet to the directory it is
+    * write through [[Similarity.writeIvfLists]] to the directory it is
     * given. Concurrent JVMs are safe: each builder writes a private
     * temp directory and atomically renames it into place; the loser of
     * the rename race discards its copy — no writer ever mutates a

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.plans.FanOut
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -95,7 +96,7 @@ object Multimodal {
       StructField("media_id", LongType, nullable = false),
       StructField("features", ArrayType(FloatType, containsNull = false))))
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    Scale.fanOutSmallScan(media.select("media_id", "bytes"))
+    FanOut.scan(media.select("media_id", "bytes"))
       .mapPartitions { rows =>
       // codec initialized once per partition, reused across the batch
       val localCodec = codec
@@ -129,7 +130,7 @@ object Multimodal {
       StructField("n_bytes", LongType, nullable = false),
       StructField("features", ArrayType(FloatType, containsNull = false))))
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    Scale.fanOutSmallScan(media.select("media_id", "kind", "bytes"))
+    FanOut.scan(media.select("media_id", "kind", "bytes"))
       .mapPartitions { rows =>
       val localCodec = codec
       rows.map { r =>

@@ -2161,11 +2161,8 @@ object PipelineQueries {
         Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
       val idxDir = IndexCache.persistedIndex("ivfpqdd6", d,
         IndexCache.fitFingerprint(cents, books, roundTo = 6)) { out =>
-        Similarity.pqEncode(Similarity.ivfAssign(emb, cents, roundTo = 6),
-            books, roundTo = 6)
-          .select("vec_id", "centroid_id", "pq_code")
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(out)
+        Similarity.writeIvfLists(Similarity.pqEncode(
+          Similarity.ivfAssign(emb, cents, roundTo = 6), books, roundTo = 6), out)
       }
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.ivfAdcTopKBatch(s.read.parquet(idxDir), emb, queries,
@@ -2254,10 +2251,8 @@ object PipelineQueries {
         Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
       val idxDir = IndexCache.persistedIndex("ivfpqresdd6", d,
         IndexCache.fitFingerprint(cents, books, roundTo = 6)) { out =>
-        Similarity.pqEncodeResidual(emb, cents, books, roundTo = 6)
-          .select("vec_id", "centroid_id", "pq_code")
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(out)
+        Similarity.writeIvfLists(
+          Similarity.pqEncodeResidual(emb, cents, books, roundTo = 6), out)
       }
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.ivfAdcResidualTopKBatch(s.read.parquet(idxDir), emb,
@@ -2357,11 +2352,8 @@ object PipelineQueries {
         Similarity.dataDefinedQuantizers(emb, nCents = 16, m = 8)
       val idxDir = IndexCache.persistedIndex("ivfpqdd6", d,
         IndexCache.fitFingerprint(cents, books, roundTo = 6)) { out =>
-        Similarity.pqEncode(Similarity.ivfAssign(emb, cents, roundTo = 6),
-            books, roundTo = 6)
-          .select("vec_id", "centroid_id", "pq_code")
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(out)
+        Similarity.writeIvfLists(Similarity.pqEncode(
+          Similarity.ivfAssign(emb, cents, roundTo = 6), books, roundTo = 6), out)
       }
       Corpus.hardNegativesAnn(emb, s.read.parquet(idxDir), queryCap = 20L,
           k = 5, cents, books, poolK = 50, nProbe = 4, rerank = 4,
@@ -2413,15 +2405,11 @@ object PipelineQueries {
       val delta = emb.filter(col("vec_id") % 2 === 1)
       val dirA = Scratch.exitScopedDir("graft_s24_app")
       val dirB = Scratch.exitScopedDir("graft_s24_full")
-      Similarity.pqEncode(Similarity.ivfAssign(build, cents), books)
-        .select("vec_id", "centroid_id", "pq_code")
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(dirA)
+      Similarity.writeIvfLists(
+        Similarity.pqEncode(Similarity.ivfAssign(build, cents), books), dirA)
       Similarity.ivfIndexAppend(delta, dirA, cents, books)
-      Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books)
-        .select("vec_id", "centroid_id", "pq_code")
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(dirB)
+      Similarity.writeIvfLists(
+        Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books), dirB)
       def topk(dir: String): Seq[(Long, Double)] =
         Similarity.ivfAdcTopKIndexed(s.read.parquet(dir), emb, 0L, 10,
             cents, books, nProbe = 4, rerank = 4).collect()
@@ -2634,18 +2622,14 @@ object PipelineQueries {
       // COMPACTION + rebuild-equivalence, not the seeded codebook fit
       val books = IndexCache.pqCodebooksRaw(s, d)
       val dir = Scratch.exitScopedDir("graft_s27")
-      Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books)
-        .select("vec_id", "centroid_id", "pq_code")
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
+      Similarity.writeIvfLists(
+        Similarity.pqEncode(Similarity.ivfAssign(emb, cents), books), dir)
       val tombstones = emb.filter(col("vec_id") % 10 === 3).select("vec_id")
       Similarity.ivfIndexCompact(s, dir, tombstones)
       val remaining = emb.filter(col("vec_id") % 10 =!= 3)
       val rebuilt = Scratch.exitScopedDir("graft_s27_rb")
-      Similarity.pqEncode(Similarity.ivfAssign(remaining, cents), books)
-        .select("vec_id", "centroid_id", "pq_code")
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(rebuilt)
+      Similarity.writeIvfLists(
+        Similarity.pqEncode(Similarity.ivfAssign(remaining, cents), books), rebuilt)
       def topk(idx: String): Seq[(Long, Double)] =
         Similarity.ivfAdcTopKIndexed(s.read.parquet(idx), emb, 1L, 10,
             cents, books, nProbe = 4, rerank = 4).collect()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.plans.FanOut
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,7 +36,7 @@ object Relevance {
     */
   def termFrequencies(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    Scale.fanOutSmallScan(docs)
+    FanOut.scan(docs)
       .select(col(idCol), explode(TextFunctions.words(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -83,7 +84,7 @@ object Relevance {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     val terms = queryTerms.map(_.toLowerCase).distinct
     // doc length on the FULL word stream (BM25's dl), before the filter
-    val withDl = Scale.fanOutSmallScan(docs).select(col(idCol),
+    val withDl = FanOut.scan(docs).select(col(idCol),
       TextFunctions.words(col(textCol)).as("__ws"))
       .select(col(idCol), size(col("__ws")).cast("long").as("dl"),
         explode_outer(col("__ws")).as("term"))
@@ -95,7 +96,7 @@ object Relevance {
     // N counts ALL docs; avgdl averages ALL doc lengths (docs without any
     // query term still shape the stats). sum/count emitted separately so
     // avgdl is the one bit-identical quotient (no engine AVG involved).
-    val stats = Scale.fanOutSmallScan(docs)
+    val stats = FanOut.scan(docs)
       .select(TextFunctions.words(col(textCol)).as("__ws"))
       .agg(count(lit(1)).as("__n"),
         sum(size(col("__ws")).cast("long")).as("__sumdl"))

@@ -20,58 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Input bytes per task of [[fanOutSmallScan]]. */
-  private val FanOutBytesPerTask = 128L * 1024
-
-  /** Round-robin fan-out of a SMALL-file scan before a CPU-heavy
-    * per-row kernel (guide §2.5 "input skew": one small/unsplittable
-    * input file ⇒ a single scan task, so every downstream narrow
-    * expression — shingle hashing, fused text kernels, line explode —
-    * runs on ONE core regardless of cluster size).
-    *
-    * The split count is derived from the INPUT SIZE, not the core
-    * count: `max(1, bytes / 128 KB)` capped at the
-    * default parallelism (guide §2: scale-adaptive partitioning, never
-    * a constant tuned to the local master). At 100 TB file splits
-    * outnumber cores and this is a structural no-op; at probe scale a
-    * 600 KB table fans to a handful of tasks — the SAME handful at any
-    * core count, so per-task fixed costs don't grow with the master
-    * size (r15's `defaultParallelism` target made every tiny kernel
-    * stage 32 tasks on local[32] and measurably ANTI-scale vs local[8]).
-    *
-    * Safety: the fan-out is applied only when the optimized plan is
-    * exchange-free (leaf scans + narrow ops). On an exchange-bearing
-    * plan, `toRdd` under AQE would materialize every upstream query
-    * stage at operator-CONSTRUCTION time and the repartition would then
-    * re-execute it (the r15 ADVICE finding) — such inputs are returned
-    * unchanged.
-    *
-    * Apply BELOW the expensive projection (i.e. to the raw scan, before
-    * selecting derived columns) so the kernel evaluates on the
-    * post-exchange side.
-    */
-  def fanOutSmallScan(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val plan = df.queryExecution.optimizedPlan
-    // only bare (projected/filtered/unioned) scans qualify: anything that
-    // plans an exchange or subquery makes toRdd/repartition re-execute
-    // upstream stages under AQE, and wide plans repartition themselves
-    val exchangeFree = !plan.exists {
-      case _: Aggregate | _: Join | _: Window | _: Sort | _: Distinct |
-           _: RepartitionOperation | _: GlobalLimit => true
-      case other => other.expressions.exists(_.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]))
-    }
-    if (!exchangeFree) df
-    else {
-      val sc = df.sparkSession.sparkContext
-      val bytes = plan.stats.sizeInBytes
-      val target = (bytes / FanOutBytesPerTask).min(sc.defaultParallelism)
-        .max(1).toInt
-      val parts = df.queryExecution.toRdd.getNumPartitions
-      if (parts >= target) df else df.repartition(target)
-    }
-  }
+  private def orSessionWidth(n: Int, df: DataFrame): Int =
+    if (n > 0) n else graft.plans.FanOut.sessionWidth(df.sparkSession)
 
   /** Skew-tolerant equi-join (`inner` or `left_outer`). The probe (large,
     * skewed) side gets a random-but-deterministic salt in [0, saltFactor);
@@ -159,9 +109,7 @@ object Scale {
       numSlices: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(tokensPerShard > 0, "tokensPerShard must be positive")
-    val slices =
-      if (numSlices > 0) numSlices
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
+    val slices = orSessionWidth(numSlices, docs)
     // an existing n_tokens column wins (custom tokenizer budgets, and at
     // 100 TB a precomputed count spares the subtotal pass a second read
     // of the text column); otherwise derive it from the text. Nulls
@@ -242,9 +190,7 @@ object Scale {
       numSlices: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(budgetTokens > 0, "budgetTokens must be positive")
-    val slices =
-      if (numSlices > 0) numSlices
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
+    val slices = orSessionWidth(numSlices, docs)
     // an existing n_tokens column wins, exactly like packTokens: at
     // 100 TB a precomputed count spares this pass a read of the text
     val withTok =
@@ -364,9 +310,7 @@ object Scale {
     */
   def epochShuffled(df: DataFrame, epoch: Int, idCol: String = "doc_id",
       numPartitions: Int = 0): DataFrame = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val parts = orSessionWidth(numPartitions, df)
     // 15 hex chars = 60 bits: fits a signed long, matches DuckDB's
     // ('0x'||…)::UBIGINT on the same prefix
     val key = conv(substring(
@@ -571,9 +515,7 @@ object Scale {
       k: Int, saltOn: Column, saltBuckets: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
-    val buckets =
-      if (saltBuckets > 0) saltBuckets
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val buckets = orSessionWidth(saltBuckets, df)
     val salted = df.withColumn("__salt",
       pmod(xxhash64(saltOn), lit(buckets.toLong)))
     val local = Window.partitionBy(col(groupCol), col("__salt"))
@@ -803,9 +745,7 @@ object Scale {
       idCol: String, weightCol: String, outCol: String = "cum",
       descending: Boolean = false, numSlices: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val slices =
-      if (numSlices > 0) numSlices
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val slices = orSessionWidth(numSlices, df)
     val bounds = df.groupBy(col(groupCol).as("__rs_k"))
       .agg(min(col(orderCol)).as("__rs_lo"), max(col(orderCol)).as("__rs_hi"))
     val frac =
@@ -844,9 +784,7 @@ object Scale {
       idCol: String = "doc_id", outCol: String = "pct_rank",
       numSlices: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val slices =
-      if (numSlices > 0) numSlices
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val slices = orSessionWidth(numSlices, df)
     val bounds = df.groupBy(col(groupCol).as("__pr_k"))
       .agg(min(col(orderCol)).as("__pr_lo"), max(col(orderCol)).as("__pr_hi"))
     val sliceOf = coalesce(least(lit(slices - 1), greatest(lit(0), floor(
@@ -905,9 +843,7 @@ object Scale {
     */
   def zorderWrite(df: DataFrame, aCol: String, bCol: String, path: String,
       bits: Int = 16, numFiles: Int = 0): Unit = {
-    val files =
-      if (numFiles > 0) numFiles
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val files = orSessionWidth(numFiles, df)
     df.withColumn("__z", zValue(col(aCol), col(bCol), bits))
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions("__z")

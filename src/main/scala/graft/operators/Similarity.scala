@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.FanOut
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import Barriers.oncePerRow
@@ -215,11 +216,8 @@ object Similarity {
   def nearDupPairs(embeddings: DataFrame, idCap: Long, threshold: Double): DataFrame = {
     val e = embeddings.filter(col("vec_id") < idCap)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // the quadratic verify is streamed-side × broadcast: with the test
-    // tables' one-file scans the streamed side is ONE task and the whole
-    // idCap² cosine sweep runs on one core — fan the streamed side out
-    // (size-derived, a structural no-op once splits outnumber cores)
-    val a = Scale.fanOutSmallScan(e)
+    // the idCap² cosine sweep runs on the streamed side: fan it out
+    val a = FanOut.scan(e)
       .select(col("vec_id").as("id_a"), col("v").as("va"))
     val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"))
     a.join(b, col("id_a") < col("id_b"))
@@ -350,18 +348,6 @@ object Similarity {
     verifyCosine(cands, e, threshold)
   }
 
-  /** Width-restoring exchange for verify stages whose input is narrow id
-    * pairs but whose per-row cost is a CPU-heavy vector kernel: AQE's
-    * byte-based coalescing merges the candidate exchange to one
-    * partition (16 B/row looks tiny) and serializes the cosine verify —
-    * the d9 finding applied to the embedding family. Round-robin at the
-    * session shuffle width costs negligible bytes and is the width
-    * production configures for the cluster, never the local core count.
-    */
-  private def fanCands(cands: DataFrame): DataFrame =
-    cands.repartition(
-      cands.sparkSession.sessionState.conf.numShufflePartitions)
-
   /** The per-table plane sets: the caller's flat `planes` array sliced
     * into `nTables` runs of `nBits`, or seeded Gaussian planes. */
   private def tablePlanes(nBits: Int, nTables: Int, dim: Int, seed: Long,
@@ -391,7 +377,7 @@ object Similarity {
     * lesson) cuts at `threshold`. */
   private def verifyCosine(cands: DataFrame, e: DataFrame,
       threshold: Double): DataFrame =
-    fanCands(cands)
+    FanOut.pairs(cands)
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
       .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
       .select(col("id_a"), col("id_b"),
@@ -1442,14 +1428,22 @@ object Similarity {
       root.getFileSystem(
         delta.sparkSession.sparkContext.hadoopConfiguration),
       root, "ivfIndexAppend")
-    // hash-distribute by the partition column before every partitioned
-    // index write (guide §6): one file per touched list instead of
-    // (input partitions × lists) fragments — the read side's file count
-    // and the write's commit/listing cost both scale with lists only
-    pqEncode(ivfAssign(delta, centroids), codebooks)
-      .select("vec_id", "centroid_id", "pq_code")
-      .repartition(col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(dir)
+    writeIvfLists(pqEncode(ivfAssign(delta, centroids), codebooks), dir,
+      SaveMode.Append)
+  }
+
+  /** The ONE layout of a persisted IVF index: parquet under
+    * `centroid_id=<list>`, hashed by list first (guide §6) so each
+    * touched list gets one file, not one per input partition. A build
+    * writes (vec_id, pq_code) of `codes`. A `rewrite` (the compaction)
+    * writes index rows read back as they are (a stream-built index keeps
+    * `embedding`, not `pq_code`) and replaces only the lists they hold. */
+  def writeIvfLists(codes: DataFrame, dir: String,
+      mode: SaveMode = SaveMode.Overwrite, rewrite: Boolean = false): Unit = {
+    val rows = if (rewrite) codes else codes.select("vec_id", "centroid_id", "pq_code")
+    val w = rows.repartition(col("centroid_id")).write.mode(mode)
+    (if (rewrite) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy("centroid_id").parquet(dir)
   }
 
   /** Fail fast when a batch maintenance op targets a directory still
@@ -1509,10 +1503,7 @@ object Similarity {
       try {
         val kept = remaining.select("centroid_id").distinct()
           .collect().map(_.getInt(0)).toSet
-        remaining.repartition(col("centroid_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("centroid_id").parquet(dir)
+        writeIvfLists(remaining, dir, rewrite = true)
         // lists emptied entirely: no output partition replaced them —
         // drop the stale directories
         val root = new org.apache.hadoop.fs.Path(dir)

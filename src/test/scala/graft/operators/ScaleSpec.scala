@@ -1,8 +1,27 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.plans.FanOut
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.atomic.AtomicInteger
+
+/** Rows of `prev`, counting how often Spark asks for the partitions. */
+private class CountingRDD(prev: RDD[Row]) extends RDD[Row](prev) {
+  override def compute(p: Partition, ctx: TaskContext): Iterator[Row] =
+    firstParent[Row].iterator(p, ctx)
+  override protected def getPartitions: Array[Partition] = {
+    CountingRDD.calls.incrementAndGet()
+    firstParent[Row].partitions
+  }
+}
+private object CountingRDD { val calls = new AtomicInteger }
 
 class ScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -602,5 +621,77 @@ class ScaleSpec extends AnyFunSuite {
       .filter(col("__rn") <= 5)
       .collect().map(r => (r.getString(1), r.getLong(0))).toSet
     assert(got === serial, "salted two-stage must equal the serial window")
+  }
+
+  /** Widths of the fan-out exchanges the planner put into `df`. */
+  private def fanWidths(df: DataFrame): Seq[Int] =
+    df.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+        e.outputPartitioning.numPartitions
+    }
+
+  /** `rows` documents of ~1 KB incompressible text in `files` parquet
+    * files, and the bytes on disk. */
+  private def textTable(rows: Int, files: Int): (DataFrame, Long) = {
+    val dir = TestSpark.tempDir("fanout")
+    spark.range(rows).select(col("id").as("doc_id"), concat_ws(" ",
+        (0 until 16).map(i => sha2(concat(col("id").cast("string"), lit(i)), 256)): _*)
+        .as("text"))
+      .repartition(files).write.mode("overwrite").parquet(dir)
+    val bytes = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    (spark.read.parquet(dir), bytes)
+  }
+
+  test("FanOut.scan: width is input bytes / 128 KB, capped at default parallelism") {
+    val cap = spark.sparkContext.defaultParallelism
+    val (small, smallBytes) = textTable(300, 1)
+    val want = (smallBytes / FanOut.BytesPerTask).toInt
+    assert(want >= 2 && want < cap, s"fixture sizing: $smallBytes B")
+    assert(fanWidths(FanOut.scan(small)) === Seq(want))
+    val (big, bigBytes) = textTable(2000, 1)
+    assert(bigBytes / FanOut.BytesPerTask > cap)
+    assert(fanWidths(FanOut.scan(big)) === Seq(cap))
+    // the kernel above the marker still reads the same rows
+    assert(FanOut.scan(small).select(length(col("text"))).distinct().collect()
+      .map(_.getInt(0)).toSeq === Seq(16 * 64 + 15))
+  }
+
+  test("FanOut.scan: no exchange over an input that plans one, or one already as wide") {
+    val (big, _) = textTable(2000, 1)
+    assert(fanWidths(FanOut.scan(big.distinct())).isEmpty)
+    assert(fanWidths(FanOut.scan(big.groupBy("doc_id").count())).isEmpty)
+    val (split, _) = textTable(2000, spark.sparkContext.defaultParallelism)
+    assert(fanWidths(FanOut.scan(split)).isEmpty)
+  }
+
+  test("FanOut.scan: a filter above the marker evaluates below its exchange") {
+    val (small, _) = textTable(300, 1)
+    val plan = FanOut.scan(small).filter(col("doc_id") % 2 === 0)
+      .select(col("doc_id")).queryExecution.sparkPlan
+    val ex = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(ex.size === 1 && ex.head.child.exists(_.isInstanceOf[FilterExec]), plan)
+  }
+
+  test("FanOut.pairs: candidate pairs keep the session width after AQE coalescing") {
+    val width = FanOut.sessionWidth(spark)
+    assert(width > 1)
+    val cands = spark.range(1000)
+      .select((col("id") % 50).as("id_a"), (col("id") % 50 + 1).as("id_b")).distinct()
+    assert(cands.rdd.getNumPartitions < width, "AQE coalesces the narrow pairs")
+    val fanned = FanOut.pairs(cands)
+    assert(fanned.rdd.getNumPartitions === width)
+    assert(fanned.count() === 50)
+  }
+
+  test("building a fanned operator plans nothing; running it plans the input once") {
+    val docs = spark.createDataFrame(new CountingRDD(spark.sparkContext.parallelize(
+        Seq(Row(1L, "the quick brown fox"), Row(2L, "the quick brown dog")), 2)),
+      org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, text STRING"))
+    CountingRDD.calls.set(0)
+    val sigs = Dedup.signatures(docs)
+    assert(CountingRDD.calls.get === 0, "the operator planned its input when built")
+    assert(sigs.collect().length === 2)
+    assert(CountingRDD.calls.get === 1)
   }
 }
